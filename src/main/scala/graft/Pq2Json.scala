@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{KustoRender, KustoRenderOptions, TimestampMode}
+import graft.functions.{KustoRender, KustoRenderOptions, KustoRowRenderer, TimestampMode}
 import graft.sources.ParquetMetadata
 import org.apache.spark.sql.SparkSession
 
@@ -94,12 +94,6 @@ object Pq2Json {
     out.result()
   }
 
-  private def jsonEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder
-    graft.functions.KValue.escapeInto(sb, s)
-    sb.toString
-  }
-
   /** The u64 footer-disagreement warnings over the sampled footers —
     * `(file, u64Paths, allPrimitivePaths)` per sampled file. The render
     * verdict is a single column-path set applied to the WHOLE directory;
@@ -133,7 +127,7 @@ object Pq2Json {
       out.println(ParquetMetadata.schemaString(a.input))
     } else if (a.cslSchema) {
       out.println(ParquetMetadata.cslSchema(a.input)
-        .map(c => s"""{"name":${jsonEscape(c.name)},"type":"${c.cslType}"}""")
+        .map(c => s"""{"name":${KustoRowRenderer.escape(c.name)},"type":"${c.cslType}"}""")
         .mkString("[", ",", "]"))
     } else if (a.rowGroups) {
       out.println(ParquetMetadata.rowGroups(a.input)
@@ -169,6 +163,7 @@ object Pq2Json {
             kids.filter(_.isDirectory).sortBy(_.getName)
               .flatMap(sampleFiles(_, depth + 1))
         } else Seq.empty
+      val sampled = sampleFiles(new java.io.File(a.input))
       // When the host provides libbrotlidec (+ a C compiler for the JNI
       // shim), graft.sources.BrotliNative backs the
       // org.apache.hadoop.io.compress.BrotliCodec we ship under the
@@ -177,7 +172,7 @@ object Pq2Json {
       // the box. The fail-fast below is the degrade for hosts where the
       // native decoder cannot load.
       if (!graft.sources.BrotliNative.usable)
-        sampleFiles(new java.io.File(a.input)).find { p =>
+        sampled.find { p =>
           scala.util.Try(ParquetMetadata.codecs(p).contains("BROTLI")).getOrElse(false)
         }.foreach { p =>
           throw new IllegalArgumentException(
@@ -193,7 +188,7 @@ object Pq2Json {
       // (`converter.rs:296-302`) — the sampled footers carry the
       // distinction into the render options. Unreadable footers are
       // skipped like the codec pre-check.
-      val u64Sampled = sampleFiles(new java.io.File(a.input)).flatMap { p =>
+      val u64Sampled = sampled.flatMap { p =>
         scala.util.Try((ParquetMetadata.unsignedInt64Paths(p),
           ParquetMetadata.primitivePaths(p))).toOption
           .map { case (u64, all) => (p, u64, all) }

@@ -1,13 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.lang.{StringBuilder => Buf}
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
-import scala.collection.mutable
 
 /** How timestamps render — CLI `-t/--timestamp {isostr|ticks|unixms}`,
   * default isostr (`/root/reference/pq2json/src/main.rs:60-73`,
@@ -46,8 +47,8 @@ final case class KustoRenderOptions(
     copy(omitNulls = true, omitEmptyBags = true, omitEmptyLists = true)
 }
 
-/** Converts a Spark `InternalRow` of any schema into a [[KValue]] tree with
-  * the reference's exact rendering semantics
+/** Renders a Spark `InternalRow` of any schema straight to Kusto JSON or CSV
+  * text with the reference's exact rendering semantics
   * (`/root/reference/pq2json/src/converter.rs:95-303`):
   *
   *   - float/double: NaN/±Inf -> null (`:291-295`)
@@ -65,67 +66,94 @@ final case class KustoRenderOptions(
   *     non-primitive keys rejected at plan time instead of the reference's
   *     runtime panic (`:266`)
   *
-  * The per-field closures are bound once per schema (driver side), so the
-  * per-row hot loop does no type dispatch — analogous to how the reference
-  * pays `element_to_value!` dispatch per value but we hoist it.
+  * Each field's [[KustoRowRenderer.Writer]] is bound once per schema (driver
+  * side), so the per-row hot loop does no type dispatch and builds no value
+  * tree. A writer appends the field's text and returns true, or appends
+  * nothing and returns false when the value renders as null; objects and
+  * lists prune by truncating the buffer back to a recorded length.
+  *
+  * `csv` applies to this schema's own fields only: they render as CSV fields
+  * (`value_to_csv`, `converter.rs:190-208`) — strings, decimals, dates and
+  * ISO timestamps raw, floats with trailing zeros stripped — while nested
+  * values stay embedded JSON.
   */
 final class KustoRowRenderer(schema: StructType, opts: KustoRenderOptions,
-    pathPrefix: String = "") extends Serializable {
+    csv: Boolean = false, pathPrefix: String = "") extends Serializable {
 
   import KustoRowRenderer._
 
-  private type FieldRender = (org.apache.spark.sql.catalyst.expressions.SpecializedGetters, Int) => KValue
-
-  private val fieldNames: Array[String] = schema.fields.map(_.name)
-  private val fieldRenders: Array[FieldRender] =
-    schema.fields.map(f => renderOf(f.dataType, pathPrefix + f.name))
-  /** Field indices in sorted-name order, precomputed once per schema so
-    * per-row object building inserts keys already sorted (see [[KObj]]).
+  private val writers: Array[Writer] =
+    schema.fields.map(f => writerOf(f.dataType, pathPrefix + f.name, csv))
+  /** Field indices in sorted-name order, precomputed once per schema.
     * Sorted by UTF-8 bytes, not UTF-16 code units: serde_json's BTreeMap
     * compares the keys' UTF-8 bytes, and the two orders differ when
     * supplementary-plane keys mix with U+E000..U+FFFF keys. */
   private val sortedFieldOrder: Array[Int] =
-    fieldNames.indices.sortBy(i => fieldNames(i))(Utf8Ordering).toArray
+    schema.fields.indices.sortBy(i => schema.fields(i).name)(Utf8Ordering).toArray
+  private val sortedKeys: Array[String] =
+    sortedFieldOrder.map(i => escape(schema.fields(i).name))
 
-  /** Render one top-level field of a row (null-safe); used by the CSV line
-    * encoder to emit fields positionally without re-wrapping rows. */
-  def renderField(row: InternalRow, i: Int): KValue =
-    if (row.isNullAt(i)) KNull else fieldRenders(i)(row, i)
+  /** One JSON object; a null or pruned-empty row renders as `{}`
+    * (`converter.rs:135-139`). */
+  def writeJson(row: InternalRow, sb: Buf): Unit =
+    if (row == null || !writeStruct(row, sb)) sb.append("{}")
 
-  /** Top level: null/pruned-empty row renders as `{}` (`converter.rs:135-139`). */
-  def renderTopLevel(row: InternalRow): KValue = {
-    val v = renderStruct(row)
-    if (v.isNull) KObj(mutable.LinkedHashMap.empty) else v
+  /** Top-level field `i` as one CSV field, quoted in place; null renders
+    * empty. The top level is never pruned, omissions apply only inside
+    * nested values (`converter.rs:158-182`). */
+  def writeCsvField(row: InternalRow, i: Int, sb: Buf): Unit = {
+    val start = sb.length
+    if (row != null) writeNullable(writers(i), row, i, sb)
+    csvQuoteFrom(sb, start)
   }
 
-  def renderStruct(row: InternalRow): KValue = {
-    val m = mutable.LinkedHashMap.empty[String, KValue]
-    var j = 0
-    while (j < sortedFieldOrder.length) {
-      val i = sortedFieldOrder(j)
-      val v = if (row.isNullAt(i)) KNull else fieldRenders(i)(row, i)
-      if (!(opts.omitNulls && v.isNull)) m.put(fieldNames(i), v)
-      j += 1
+  private def writeStruct(row: InternalRow, sb: Buf): Boolean =
+    writeObject(sb, sortedKeys, { x =>
+      val i = sortedFieldOrder(x)
+      writeNullable(writers(i), row, i, sb)
+    })
+
+  /** `{...}` over entries whose escaped `keys` are already sorted;
+    * `value(x)` writes the x-th entry's value. Equal keys are adjacent, and
+    * a repeated key takes its last value — under omitNulls its last
+    * non-null one — like repeated BTreeMap inserts. */
+  private def writeObject(sb: Buf, keys: Array[String], value: Int => Boolean): Boolean = {
+    val open = sb.length
+    sb.append('{')
+    var x = 0
+    while (x < keys.length) {
+      var last = x
+      while (last + 1 < keys.length && keys(last + 1) == keys(x)) last += 1
+      val mark = sb.length
+      if (mark > open + 1) sb.append(',')
+      sb.append(keys(x)).append(':')
+      var y = last
+      var written = value(y)
+      while (!written && opts.omitNulls && y > x) { y -= 1; written = value(y) }
+      if (!written) { if (opts.omitNulls) sb.setLength(mark) else sb.append("null") }
+      x = last + 1
     }
-    if (opts.omitEmptyBags && m.isEmpty) KNull else KObj(m)
+    if (opts.omitEmptyBags && sb.length == open + 1) { sb.setLength(open); false }
+    else { sb.append('}'); true }
   }
 
-  private def renderOf(dt: DataType, path: String): FieldRender = dt match {
-    case NullType => (_, _) => KNull
-    case BooleanType => (g, i) => KBool(g.getBoolean(i))
-    case ByteType => (g, i) => KNum(g.getByte(i).toString)
-    case ShortType => (g, i) => KNum(g.getShort(i).toString)
-    case IntegerType => (g, i) => KNum(g.getInt(i).toString)
-    case LongType => (g, i) => KNum(g.getLong(i).toString)
-    case FloatType => (g, i) => doubleValue(g.getFloat(i).toDouble)
-    case DoubleType => (g, i) => doubleValue(g.getDouble(i))
+  private def writerOf(dt: DataType, path: String, csv: Boolean): Writer = dt match {
+    case NullType => (_, _, _) => false
+    case BooleanType => (g, i, sb) => { sb.append(g.getBoolean(i)); true }
+    case ByteType => (g, i, sb) => { sb.append(g.getByte(i).toInt); true }
+    case ShortType => (g, i, sb) => { sb.append(g.getShort(i).toInt); true }
+    case IntegerType => (g, i, sb) => { sb.append(g.getInt(i)); true }
+    case LongType => (g, i, sb) => { sb.append(g.getLong(i)); true }
+    case FloatType => (g, i, sb) => double(sb, g.getFloat(i).toDouble, csv)
+    case DoubleType => (g, i, sb) => double(sb, g.getDouble(i), csv)
     case d: DecimalType if opts.convertTypes && d.precision == 20 && d.scale == 0 =>
       // Spark surfaces parquet UINT64 as Decimal(20,0); under
       // --convert-types the reference reinterprets u64 as i64
       // (`converter.rs:297-303`) and renders a NUMBER. BigInteger.longValue
       // is exactly the two's-complement wrap.
-      (g, i) => KNum(g.getDecimal(i, d.precision, d.scale)
-        .toJavaBigDecimal.toBigInteger.longValue().toString)
+      (g, i, sb) => {
+        sb.append(g.getDecimal(i, 20, 0).toJavaBigDecimal.toBigInteger.longValue()); true
+      }
     case d: DecimalType if d.precision == 20 && d.scale == 0 &&
         opts.unsignedPaths.contains(path) =>
       // raw u64 WITHOUT --convert-types: the reference renders the
@@ -133,82 +161,95 @@ final class KustoRowRenderer(schema: StructType, opts: KustoRenderOptions,
       // `l.into()` — full u64 range). The footer (unsignedPaths) is what
       // distinguishes this column from a true DECIMAL(20,0), which Spark's
       // schema alone cannot.
-      (g, i) => KNum(g.getDecimal(i, d.precision, d.scale)
-        .toJavaBigDecimal.toBigInteger.toString)
+      (g, i, sb) => {
+        sb.append(g.getDecimal(i, 20, 0).toJavaBigDecimal.toBigInteger.toString); true
+      }
     case d: DecimalType =>
-      (g, i) => KStr(g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
-    case StringType => (g, i) => KStr(g.getUTF8String(i).toString)
-    case BinaryType => (g, i) => bytesValue(g.getBinary(i))
-    case DateType => (g, i) => dateValue(g.getInt(i))
-    case TimestampType | TimestampNTZType =>
-      val mode = opts.timestampMode
-      (g, i) => timestampValue(g.getLong(i), mode)
+      (g, i, sb) => text(sb, g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString, csv)
+    case StringType => (g, i, sb) => text(sb, g.getUTF8String(i).toString, csv)
+    case BinaryType => (g, i, sb) => {
+      val bytes = g.getBinary(i)
+      sb.append('[')
+      var j = 0
+      while (j < bytes.length) { if (j > 0) sb.append(','); sb.append(bytes(j) & 0xff); j += 1 }
+      sb.append(']')
+      true
+    }
+    case DateType => (g, i, sb) => {
+      val days = g.getInt(i) // reference reads u32; i32 negatives overflow chrono
+      days >= 0 && text(sb, LocalDate.ofEpochDay(days.toLong).format(DateTimeFormatter.ISO_LOCAL_DATE), csv)
+    }
+    case TimestampType | TimestampNTZType => opts.timestampMode match {
+      case TimestampMode.Ticks => (g, i, sb) => {
+        // Reference does u64 checked math (`converter.rs:309-316`); negative
+        // millis reinterpret to huge u64 and overflow -> null either way.
+        val ms = micros2millis(g.getLong(i))
+        ms >= 0 && ms <= (Long.MaxValue - TicksTillUnixTime) / 10000 &&
+          { sb.append(ms * 10000 + TicksTillUnixTime); true }
+      }
+      case TimestampMode.UnixMs => (g, i, sb) => {
+        // u64 passthrough (`converter.rs:330`): the reference reinterprets the
+        // RAW micros as u64 and THEN divides, so pre-epoch values must use
+        // unsigned division of the micros, not floorDiv-then-reinterpret
+        // (us = -1e6 -> 18446744073708551, not 18446744073709550616).
+        sb.append(java.lang.Long.toUnsignedString(java.lang.Long.divideUnsigned(g.getLong(i), 1000L)))
+        true
+      }
+      case TimestampMode.IsoStr => (g, i, sb) => {
+        val ms = micros2millis(g.getLong(i))
+        // u64 seconds out of chrono range -> null (`:322-325`)
+        ms >= 0 && text(sb, IsoFmt.format(java.time.Instant.ofEpochMilli(ms)), csv)
+      }
+    }
     case st: StructType =>
-      val nested = new KustoRowRenderer(st, opts, path + ".")
-      (g, i) => nested.renderStruct(g.getStruct(i, st.size))
+      val nested = new KustoRowRenderer(st, opts, pathPrefix = path + ".")
+      (g, i, sb) => nested.writeStruct(g.getStruct(i, st.size), sb)
     case ArrayType(et, _) =>
       // list/map element paths never enter unsignedPaths (repeated
       // parquet groups are excluded there), so the element path is moot
-      val elem = renderOf(et, path + ".element")
-      (g, i) => {
+      val elem = writerOf(et, path + ".element", csv = false)
+      (g, i, sb) => {
         val arr = g.getArray(i)
-        val out = new mutable.ArrayBuffer[KValue](arr.numElements())
-        var j = 0
-        while (j < arr.numElements()) {
-          out += (if (arr.isNullAt(j)) KNull else elem(arr, j))
-          j += 1
+        val n = arr.numElements()
+        if (opts.omitEmptyLists && n == 0) false
+        else {
+          sb.append('[')
+          var j = 0
+          while (j < n) {
+            if (j > 0) sb.append(',')
+            if (!writeNullable(elem, arr, j, sb)) sb.append("null")
+            j += 1
+          }
+          sb.append(']')
+          true
         }
-        if (opts.omitEmptyLists && out.isEmpty) KNull else KArr(out)
       }
     case MapType(kt, vt, _) =>
-      val keyRender = mapKeyRenderOf(kt)
-      val valRender = renderOf(vt, path + ".value")
-      (g, i) => mapValue(g.getMap(i), keyRender, valRender)
+      val keyOf = mapKeyRenderOf(kt)
+      val value = writerOf(vt, path + ".value", csv = false)
+      (g, i, sb) => writeMap(g.getMap(i), keyOf, value, sb)
     case other =>
       throw new IllegalArgumentException(s"Kusto render: unsupported type $other")
   }
 
-  private def mapValue(map: MapData, keyOf: (ArrayData, Int) => String,
-      valOf: FieldRender): KValue = {
+  private def writeMap(map: MapData, keyOf: (ArrayData, Int) => String,
+      value: Writer, sb: Buf): Boolean = {
     val keys = map.keyArray()
     val vals = map.valueArray()
-    val n = map.numElements()
-    // dynamic keys: sort per value (BTreeMap semantics = UTF-8 byte order);
-    // dedup keeps the LAST occurrence like repeated BTreeMap inserts.
-    val order = Array.tabulate(n)(identity).sortBy(j => keyOf(keys, j))(Utf8Ordering)
-    val m = mutable.LinkedHashMap.empty[String, KValue]
-    var x = 0
-    while (x < n) {
-      val j = order(x)
-      val k = keyOf(keys, j)
-      val v = if (vals.isNullAt(j)) KNull else valOf(vals, j)
-      if (!(opts.omitNulls && v.isNull)) m.put(k, v)
-      x += 1
-    }
-    if (opts.omitEmptyBags && m.isEmpty) KNull else KObj(m)
-  }
-
-  private def timestampValue(us: Long, mode: TimestampMode): KValue = mode match {
-    case TimestampMode.Ticks =>
-      // Reference does u64 checked math (`converter.rs:309-316`); negative
-      // millis reinterpret to huge u64 and overflow -> null either way.
-      val ms = micros2millis(us)
-      if (ms < 0 || ms > (Long.MaxValue - TicksTillUnixTime) / 10000) KNull
-      else KNum((ms * 10000 + TicksTillUnixTime).toString)
-    case TimestampMode.UnixMs =>
-      // u64 passthrough (`converter.rs:330`): the reference reinterprets the
-      // RAW micros as u64 and THEN divides, so pre-epoch values must use
-      // unsigned division of the micros, not floorDiv-then-reinterpret
-      // (us = -1e6 -> 18446744073708551, not 18446744073709550616).
-      KNum(java.lang.Long.toUnsignedString(java.lang.Long.divideUnsigned(us, 1000L)))
-    case TimestampMode.IsoStr =>
-      val ms = micros2millis(us)
-      if (ms < 0) KNull // u64 seconds out of chrono range -> null (`:322-325`)
-      else KStr(IsoFmt.format(java.time.Instant.ofEpochMilli(ms)))
+    val raw = Array.tabulate(map.numElements())(keyOf(keys, _))
+    // dynamic keys sort per value (BTreeMap semantics = UTF-8 byte order);
+    // the stable sort keeps repeated keys in insertion order
+    val order = raw.indices.toArray.sortBy(raw(_))(Utf8Ordering)
+    writeObject(sb, order.map(j => escape(raw(j))), x => writeNullable(value, vals, order(x), sb))
   }
 }
 
 object KustoRowRenderer {
+  /** Appends slot `i`'s text to the buffer and returns true, or appends
+    * nothing and returns false when the value renders as null. Called only
+    * on non-null slots. */
+  type Writer = (SpecializedGetters, Int, Buf) => Boolean
+
   /** 100ns ticks from 0001-01-01 to 1970-01-01 (`converter.rs:305`). */
   val TicksTillUnixTime: Long = 621355968000000000L
 
@@ -228,20 +269,18 @@ object KustoRowRenderer {
   /** Micros -> millis truncation (`converter.rs:117-120`; Rust `/` on u64). */
   def micros2millis(us: Long): Long = Math.floorDiv(us, 1000L)
 
-  def doubleValue(d: Double): KValue =
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) KNull
-    else KDouble(d)
+  private def writeNullable(w: Writer, g: SpecializedGetters, i: Int, sb: Buf): Boolean =
+    !g.isNullAt(i) && w(g, i, sb)
 
-  def bytesValue(bytes: Array[Byte]): KValue = {
-    val out = new mutable.ArrayBuffer[KValue](bytes.length)
-    var i = 0
-    while (i < bytes.length) { out += KNum((bytes(i) & 0xff).toString); i += 1 }
-    KArr(out)
+  private def double(sb: Buf, d: Double, csv: Boolean): Boolean =
+    !java.lang.Double.isNaN(d) && !java.lang.Double.isInfinite(d) &&
+      { sb.append(if (csv) Ryu.shortestCsv(d) else Ryu.shortest(d)); true }
+
+  /** A CSV field carries text raw (quoting is the line's job); JSON escapes it. */
+  private def text(sb: Buf, s: String, csv: Boolean): Boolean = {
+    if (csv) sb.append(s) else escapeInto(sb, s)
+    true
   }
-
-  def dateValue(days: Int): KValue =
-    if (days < 0) KNull // reference reads u32; i32 negatives overflow chrono
-    else KStr(LocalDate.ofEpochDay(days.toLong).format(DateTimeFormatter.ISO_LOCAL_DATE))
 
   /** Map keys stringify from primitives only (`converter.rs:253-267`). */
   def mapKeyRenderOf(kt: DataType): (ArrayData, Int) => String = kt match {
@@ -255,21 +294,57 @@ object KustoRowRenderer {
       s"Kusto render: unsupported map key type $other (reference panics too, converter.rs:266)")
   }
 
-  /** CSV quoting of the Rust `csv` crate with `Terminator::Any(b'\r')`
-    * (`converter.rs:152-154`): quote only when the field contains a quote,
-    * the delimiter, or the terminator byte; embedded quotes double. Note
-    * '\n' does NOT trigger quoting under this terminator — reproduced. */
-  def csvQuote(field: String): String = {
-    var needs = false
+  /** serde_json-compatible string escaping: `"`, `\`, and control chars
+    * (<0x20) — `\b \t \n \f \r` shorthands, `\u00xx` for the rest; nothing
+    * else is escaped (non-ASCII passes through as UTF-8). */
+  def escapeInto(sb: Buf, s: String): Unit = {
+    sb.append('"')
     var i = 0
-    while (i < field.length && !needs) {
-      val c = field.charAt(i)
-      needs = c == '"' || c == ',' || c == '\r'
+    while (i < s.length) {
+      val c = s.charAt(i)
+      (c: @annotation.switch) match {
+        case '"'  => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\b' => sb.append("\\b")
+        case '\t' => sb.append("\\t")
+        case '\n' => sb.append("\\n")
+        case '\f' => sb.append("\\f")
+        case '\r' => sb.append("\\r")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
+      }
       i += 1
     }
-    if (!needs) field
-    else "\"" + field.replace("\"", "\"\"") + "\""
+    sb.append('"')
   }
 
-  def toUtf8(s: String): UTF8String = UTF8String.fromString(s)
+  /** `s` as a quoted, escaped JSON string. */
+  def escape(s: String): String = {
+    val sb = new Buf(s.length + 2)
+    escapeInto(sb, s)
+    sb.toString
+  }
+
+  /** CSV quoting of the Rust `csv` crate with `Terminator::Any(b'\r')`
+    * (`converter.rs:152-154`), applied in place to the field that runs from
+    * `start` to the end of `sb`: quote only when the field contains a quote,
+    * the delimiter, or the terminator byte; embedded quotes double. Note
+    * '\n' does NOT trigger quoting under this terminator — reproduced. */
+  private def csvQuoteFrom(sb: Buf, start: Int): Unit = {
+    var i = start
+    while (i < sb.length && sb.charAt(i) != '"' && sb.charAt(i) != ',' && sb.charAt(i) != '\r') i += 1
+    if (i < sb.length) {
+      val field = sb.substring(start)
+      sb.setLength(start)
+      sb.append('"')
+      var j = 0
+      while (j < field.length) {
+        val c = field.charAt(j)
+        if (c == '"') sb.append('"')
+        sb.append(c)
+        j += 1
+      }
+      sb.append('"')
+    }
+  }
 }

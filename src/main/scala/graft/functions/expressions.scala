@@ -129,44 +129,51 @@ case class RyuDoubleString(child: Expression, csv: Boolean) extends UnaryExpress
     copy(child = newChild)
 }
 
-/** Whole-row JSONL encode: one JSON object per row with the reference's
-  * exact Kusto semantics (see [[KustoRowRenderer]]), the Spark counterpart
-  * of `top_level_rows_to_json` (`converter.rs:128-143`). Child must be a
-  * struct (typically `struct(df.columns*)`).
-  *
-  * The recursive any-schema walk stays one method (schema-bound closures,
-  * see [[KustoRowRenderer]]); codegen embeds this expression as a
-  * reference object and calls [[renderRow]] directly, so the surrounding
-  * scan -> render projection remains inside the whole-stage-codegen span
-  * instead of dropping the whole projection to the interpreted path.
+/** Shared shell of the whole-row encodes: the child must be a struct
+  * (typically `struct(df.columns*)`), and each row renders through a
+  * [[KustoRowRenderer]] straight into one text buffer. Codegen embeds the
+  * expression as a reference object and calls [[render]] directly, so the
+  * surrounding scan -> render projection stays inside the whole-stage-codegen
+  * span instead of dropping the whole projection to the interpreted path.
   */
-case class KustoJsonExpr(child: Expression, opts: KustoRenderOptions)
-    extends UnaryExpression {
+abstract class KustoRowExpr extends UnaryExpression {
   override def dataType: DataType = StringType
   override def nullable: Boolean = false
 
-  @transient private lazy val renderer =
-    new KustoRowRenderer(child.dataType.asInstanceOf[StructType], opts)
+  /** Appends the text for `row`, which is null when the struct is null. */
+  protected def write(row: InternalRow, sb: java.lang.StringBuilder): Unit
 
   /** Public so generated code can call it on the embedded reference. */
-  def renderRow(row: InternalRow): UTF8String = {
-    val v = if (row == null) KObj(scala.collection.mutable.LinkedHashMap.empty)
-            else renderer.renderTopLevel(row)
-    UTF8String.fromString(KValue.toJson(v))
+  def render(row: InternalRow): UTF8String = {
+    val sb = new java.lang.StringBuilder(64)
+    write(row, sb)
+    UTF8String.fromString(sb.toString)
   }
 
   override def eval(input: InternalRow): Any =
-    renderRow(child.eval(input).asInstanceOf[InternalRow])
+    render(child.eval(input).asInstanceOf[InternalRow])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kustoJsonExpr", this, classOf[KustoJsonExpr].getName)
+    val ref = ctx.addReferenceObj("kustoRowExpr", this, classOf[KustoRowExpr].getName)
     val childGen = child.genCode(ctx)
     ev.copy(code = code"""
       ${childGen.code}
       org.apache.spark.unsafe.types.UTF8String ${ev.value} =
-        $ref.renderRow(${childGen.isNull} ? null : ${childGen.value});""",
+        $ref.render(${childGen.isNull} ? null : ${childGen.value});""",
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
+}
+
+/** Whole-row JSONL encode: one JSON object per row with the reference's
+  * exact Kusto semantics (see [[KustoRowRenderer]]), the Spark counterpart
+  * of `top_level_rows_to_json` (`converter.rs:128-143`).
+  */
+case class KustoJsonExpr(child: Expression, opts: KustoRenderOptions) extends KustoRowExpr {
+  @transient private lazy val renderer =
+    new KustoRowRenderer(child.dataType.asInstanceOf[StructType], opts)
+
+  override protected def write(row: InternalRow, sb: java.lang.StringBuilder): Unit =
+    renderer.writeJson(row, sb)
 
   override protected def withNewChildInternal(newChild: Expression): KustoJsonExpr =
     copy(child = newChild)
@@ -184,46 +191,23 @@ case class KustoJsonExpr(child: Expression, opts: KustoRenderOptions)
   * (`converter.rs:160-169`).
   */
 case class KustoCsvLineExpr(child: Expression, opts: KustoRenderOptions,
-    missingSlots: Seq[Boolean]) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-
+    missingSlots: Seq[Boolean]) extends KustoRowExpr {
   @transient private lazy val renderer =
-    new KustoRowRenderer(child.dataType.asInstanceOf[StructType], opts)
+    new KustoRowRenderer(child.dataType.asInstanceOf[StructType], opts, csv = true)
   @transient private lazy val slots: Array[Boolean] = missingSlots.toArray
 
-  /** Public so generated code can call it on the embedded reference. */
-  def renderLine(row: InternalRow): UTF8String = {
-    val sb = new java.lang.StringBuilder(64)
+  override protected def write(row: InternalRow, sb: java.lang.StringBuilder): Unit = {
     var present = 0
     var i = 0
     while (i < slots.length) {
       if (i > 0) sb.append(',')
       if (!slots(i)) {
-        // CSV renders each top-level field independently; the top level is
-        // never pruned, omissions apply only inside nested values
-        // (converter.rs:158-182).
-        val v = if (row == null) KNull else renderer.renderField(row, present)
-        sb.append(KustoRowRenderer.csvQuote(KValue.toCsvField(v)))
+        renderer.writeCsvField(row, present, sb)
         present += 1
       }
       i += 1
     }
     sb.append('\r')
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def eval(input: InternalRow): Any =
-    renderLine(child.eval(input).asInstanceOf[InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kustoCsvExpr", this, classOf[KustoCsvLineExpr].getName)
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.unsafe.types.UTF8String ${ev.value} =
-        $ref.renderLine(${childGen.isNull} ? null : ${childGen.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): KustoCsvLineExpr =

@@ -2,8 +2,12 @@ package graft
 
 import graft.functions._
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -330,6 +334,38 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructType(Seq(StructField("s", StringType))))
     val got = KustoRender.toKustoJson(df).collect().head.getString(0)
     assert(got == "{\"s\":\"a\\\"b\\\\c\\n\\t\\u0001d\"}")
+  }
+
+  // ---- repeated keys: the last value wins, under --omit-nulls the last
+  // non-null one (repeated BTreeMap inserts). Rows are built directly: a
+  // parquet map may repeat a key, which Spark's own map builders reject.
+
+  private def renderJson(schema: StructType, row: InternalRow, opts: KustoRenderOptions) =
+    KustoJsonExpr(BoundReference(0, schema, nullable = true), opts).render(row).toString
+
+  test("json: a repeated map key takes its last value, or last non-null under --omit-nulls") {
+    val schema = StructType(Seq(StructField("m", MapType(StringType, IntegerType))))
+    def row(kvs: (String, Any)*) = InternalRow(new ArrayBasedMapData(
+      new GenericArrayData(kvs.map(kv => UTF8String.fromString(kv._1)).toArray[Any]),
+      new GenericArrayData(kvs.map(_._2).toArray[Any])))
+    val omitNulls = KustoRenderOptions(omitNulls = true)
+    val r = row("k" -> 1, "a" -> 0, "k" -> 2, "k" -> null)
+    assert(renderJson(schema, r, KustoRenderOptions()) == """{"m":{"a":0,"k":null}}""")
+    assert(renderJson(schema, r, omitNulls) == """{"m":{"a":0,"k":2}}""")
+    assert(renderJson(schema, row("k" -> null, "k" -> null), omitNulls) == """{"m":{}}""")
+  }
+
+  test("json: a repeated struct field name takes its last value, or last non-null under --omit-nulls") {
+    val inner = StructType(Seq(StructField("a", IntegerType), StructField("b", IntegerType),
+      StructField("a", IntegerType)))
+    val schema = StructType(Seq(StructField("s", inner)))
+    val omitNulls = KustoRenderOptions(omitNulls = true)
+    val lastNull = InternalRow(InternalRow(1, 5, null))
+    assert(renderJson(schema, lastNull, KustoRenderOptions()) == """{"s":{"a":null,"b":5}}""")
+    assert(renderJson(schema, lastNull, omitNulls) == """{"s":{"a":1,"b":5}}""")
+    val bothSet = InternalRow(InternalRow(1, 5, 3))
+    assert(renderJson(schema, bothSet, KustoRenderOptions()) == """{"s":{"a":3,"b":5}}""")
+    assert(renderJson(schema, bothSet, omitNulls) == """{"s":{"a":3,"b":5}}""")
   }
 
   // ---- whole-row CSV encode ----------------------------------------------

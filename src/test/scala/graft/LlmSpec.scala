@@ -762,11 +762,11 @@ class LlmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("prefix-filter join: brute-force equality at the gate threshold t=0.8 (group bound drops no survivor)") {
-    // r17's group-level positional bound (k + min(sz - rn_k) >= alpha)
-    // prunes candidates BEFORE the verify join; this pins that at the
-    // gate's own threshold the output is still exactly the brute-force
-    // pair set — the bound upper-bounds the true overlap, so it may
-    // only drop pairs the verify would have discarded.
+    // Pins that at the gate's own threshold the per-row positional
+    // filter in the candidate join still yields exactly the brute-force
+    // pair set. A PPJoin+ group-level bound (k + min(sz - rn_k) >= alpha)
+    // was tried and reverted: the per-row filter already implies it, so
+    // it cut no candidate (see prefixFilterPairs).
     val docs = prefixCorpus()
     val got = graft.operators.LlmQueries.prefixFilterPairs(prefixSets(docs), 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
