@@ -110,7 +110,7 @@ object RenderQueries extends QueryModule {
       // the narrow 3-column exchange only exists while the scan is a
       // single split — at 100 TB the natural splits spread the render
       // and no exchange is planned.
-      val o = graft.operators.CorpusQueries.spreadScan(Tables(s, dir, "orders")
+      val o = graft.operators.Gates.spreadScan(Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")))
       toKustoCsv(o).withColumn("o_orderkey",
           split(col("line"), ",").getItem(0).cast("long"))

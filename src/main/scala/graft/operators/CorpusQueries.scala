@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import Gates._
 
 /** Corpus-level training-data operators on `documents`: duplicate-cluster
   * resolution (connected components), deterministic stratified sampling,
@@ -375,7 +376,7 @@ object CorpusQueries extends QueryModule {
     * O(entries × tombstones) boxed compares (measured 3.2 s vs 0.6 s
     * for this form). Emptied rows drop (the regroup emits nothing). */
   private[graft] def compactPostings(post: DataFrame, del: DataFrame): DataFrame = {
-    // size-gated hints ([[batchHint]] ladder): del is batch-sized in
+    // size-gated hints ([[Gates.batchHint]] ladder): del is batch-sized in
     // production (broadcast tier) but the sweep corpora pass the ~20%
     // planted cohort, which grows with the corpus — distinct blocks
     // are bounded by del's rows, so one memoized probe gates both
@@ -558,7 +559,7 @@ object CorpusQueries extends QueryModule {
     * (both sides hash-uniform by construction — fnv64 keys — and
     * sorting the grouped-posting frame for a one-pass existence probe
     * would be waste), but every hint rides the size-gated
-    * [[batchHint]] ladder: the tombstone set broadcasts only while
+    * [[Gates.batchHint]] ladder: the tombstone set broadcasts only while
     * genuinely batch-sized. */
   private[graft] def compactShingleIndex(s: SparkSession, dir: String,
       del: DataFrame): DataFrame =
@@ -571,7 +572,7 @@ object CorpusQueries extends QueryModule {
     * untouched keys, emptied-key drop). */
   private[graft] def compactShingleIndexFrames(forward: DataFrame,
       idx: DataFrame, del: DataFrame): DataFrame = {
-    // every forced strategy rides the [[batchHint]] ladder (r15
+    // every forced strategy rides the [[Gates.batchHint]] ladder (r15
     // verdict item 1): del broadcasts while batch-sized but the sweep
     // corpora pass the cohort-scale planted erasure set; touched is
     // O(batch × shingles/doc) and checkpointed, so its probe is a
@@ -591,96 +592,6 @@ object CorpusQueries extends QueryModule {
         Seq("d"), "left_anti")
       .groupBy(col("h")).agg(collect_list(col("d")).as("docs"))
     untouched.unionByName(rewritten)
-  }
-
-  /** Row cap under which an erasure/touched set gets an explicit
-    * `broadcast()` hint. 2M single-long rows ≈ 32 MB serialized —
-    * comfortably inside executor broadcast budgets at any SF, while a
-    * cohort-scale set (the planted ~20% slice at sweep SFs) falls back
-    * to `shuffle_hash`, which stays a hash join and cannot OOM the
-    * driver. */
-  private[graft] val BroadcastRowCap = 2000000L
-
-  // Memo of probe counts keyed by the probed frame's analyzed logical
-  // plan (r15 verdict item 7: batchHint ran one count() Spark job PER
-  // CALL — ~16 gated sites probing the same checkpointed tombstone
-  // frame would have paid the job 16 times). Plan equality is
-  // structural, so re-probing the SAME frame object — or a plan-equal
-  // read of the same immutable parquet dir — is a map hit, zero jobs.
-  // Checkpointed frames (every production tombstone/touched frame)
-  // key on their LogicalRDD, whose captured RDD compares by identity:
-  // two different checkpoints never alias. WeakHashMap: entries die
-  // with their frames, so a long sweep session cannot accumulate.
-  private val probeCounts = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      java.lang.Long]())
-
-  /** The memoized `count()` behind every size gate below: one Spark
-    * job per distinct frame per session, cached-block-cheap when the
-    * frame is localCheckpointed (which every production caller does),
-    * free on every re-probe. */
-  private[graft] def probeCount(df: DataFrame): Long = {
-    val k = df.queryExecution.analyzed
-    val hit = probeCounts.get(k)
-    if (hit != null) hit.longValue()
-    else { val c = df.count(); probeCounts.put(k, c); c }
-  }
-
-  /** Test hook: drop the memo (forces fresh count jobs). */
-  private[graft] def resetProbeCounts(): Unit = probeCounts.clear()
-
-  /** Size-gated join-side hint for tombstone/touched frames — the
-    * three-tier ladder every forced strategy on a corpus-growing side
-    * must ride (the rule the r15 ×100 q265 probe proved necessary):
-    * broadcast while genuinely batch-sized; shuffle_hash while every
-    * task's hash build still fits the execution-memory budget
-    * ([[LlmQueries.gatedShuffleHash]] — still a hash join on uniform
-    * keys, no driver collect, no sort); above that, NO hint — the
-    * un-hinted join plans sort-merge, which spills gracefully at any
-    * scale and lets AQE re-pick on runtime stats. Callers pass
-    * localCheckpointed (or tiny literal) frames so the [[probeCount]]
-    * probe is a cached-block read, not a recompute; derived frames
-    * (selects/renames of a probed parent) pass the parent's count as
-    * an explicit upper bound instead of paying a second job. */
-  private[graft] def batchHint(df: DataFrame): DataFrame =
-    batchHint(df, probeCount(df))
-
-  private[graft] def batchHint(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= BroadcastRowCap) broadcast(df)
-    else LlmQueries.gatedShuffleHash(df, rows)
-
-  /** Scan-split-GATED spread for heavy per-row projections (r17, the
-    * r16 verdict's fix for the unconditional repartition sweep): on the
-    * harness's single-row-group parquet tables every scan is ONE task,
-    * so per-row work planned above the scan runs single-threaded unless
-    * an exchange spreads it — but at 100 TB the scan has natural splits
-    * and an unconditional `repartition(defaultParallelism)` is (a) a
-    * full shuffle of the projected corpus (for text operators the text
-    * column, i.e. the bulk of the table) and (b) a partition count
-    * pinned to the DRIVER's core count. The gate reads the planned
-    * scan's partition count (plan-time only — no job runs) and passes
-    * the frame through untouched whenever the source already yields >=
-    * defaultParallelism splits, so the at-scale plan carries no
-    * exchange at all. */
-  private[graft] def spreadScan[T](df: Dataset[T]): Dataset[T] = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
-  }
-
-  /** [[spreadScan]] plus materialization for MULTI-CONSUMER frames
-    * (q116's shape — the r16 verdict's top item: repartitioning a frame
-    * its engine consumes 3x rebuilt the scan + round-robin exchange 3x
-    * with no cut, 2.9 -> 9.8 s at 32 cores). When the gate fires, the
-    * spread frame is localCheckpointed so every consumer reads the
-    * materialized blocks; when the scan parallelizes by itself the
-    * frame passes through UN-materialized — the consumers' repeated
-    * scans stay the documented measured-cheaper-than-checkpoint
-    * at-scale plan (see substringSpans' doc). */
-  private[graft] def spreadScanCheckpoint[T](df: Dataset[T]): Dataset[T] = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df
-    else df.repartition(p).localCheckpoint()
   }
 
   /** q265's engine: cluster-map maintenance under deletion via
@@ -724,7 +635,7 @@ object CorpusQueries extends QueryModule {
     // 8 GB broadcast cap at sweep scale. Cohort-scale sets fall back
     // to shuffle_hash (still a hash join on uniform keys, still no
     // sort) while the per-task build fits, then to un-hinted
-    // sort-merge — the full [[batchHint]] ladder. The probes are
+    // sort-merge — the full [[Gates.batchHint]] ladder. The probes are
     // O(checkpoint-read): del is
     // localCheckpointed by every production caller and tiny in the
     // spec geometries; touched/tm are checkpointed here anyway for
@@ -789,7 +700,7 @@ object CorpusQueries extends QueryModule {
     * pair graph existed only inside q265's plan. Compaction for an
     * edge list is edge-local: drop every edge with a tombstoned
     * endpoint (two batch-keyed anti-joins — size-gated broadcast per
-    * [[batchHint]]); no regroup, no explode, nothing else changes.
+    * [[Gates.batchHint]]); no regroup, no explode, nothing else changes.
     * Edge-count-sized frame per the StageMemo retention policy; q262
     * audits it against the erased set and the fold algebra before the
     * swap. */
@@ -1415,54 +1326,48 @@ object CorpusQueries extends QueryModule {
       // builds) are mutually independent small jobs that ran serially
       // at cpu/run 0.12 — a 4-thread pool submits them concurrently so
       // each job's tail is back-filled. Frames and checks unchanged.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val (docs, entries, cl, nCl, semPair, vecs, plantedDocs, nPd) =
-        try {
-          val fDocs = Future {
+        Overlap(s) { ov =>
+          val fDocs = ov {
             val d = Tables.documents(s, dir).select(col("doc_id"))
               .localCheckpoint() // c1 + c11 containment scans + gate probe
             probeCount(d)
             d
           }
-          val fEntries = Future {
+          val fEntries = ov {
             bm25Postings(s, dir)
               .select(col("w"), explode(col("posting")).as("e"))
               .select(col("w"), col("e.d").as("doc_id"), col("e.t").as("tf"))
               .localCheckpoint() // 3 consumers: orphan, dl refold, ts refold
           }
-          val fCl = Future {
+          val fCl = ov {
             val c = pairClusters(s, dir)
             (c, probeCount(c))
           }
-          val fSem = Future { LlmQueries.semIndex(s, dir) }
-          val fVecs = Future {
+          val fSem = ov { LlmQueries.semIndex(s, dir) }
+          val fVecs = ov {
             val v = LlmQueries.vecTable(s, dir).select(col("vec_id"))
               .localCheckpoint() // c6 census + c14 containment + gate probe
             probeCount(v)
             v
           }
-          val fPd = Future {
+          val fPd = ov {
             val p = LlmQueries.plantedNear(s, dir)
               .select(col("doc_id")).localCheckpoint() // 3 containment scans
             (p, probeCount(p))
           }
-          val (c0, n0) = Await.result(fCl, Duration.Inf)
-          val (p0, np0) = Await.result(fPd, Duration.Inf)
-          (Await.result(fDocs, Duration.Inf),
-            Await.result(fEntries, Duration.Inf), c0, n0,
-            Await.result(fSem, Duration.Inf),
-            Await.result(fVecs, Duration.Inf), p0, np0)
-        } finally pool.shutdown()
+          val (c0, n0) = ov.await(fCl)
+          val (p0, np0) = ov.await(fPd)
+          (ov.await(fDocs), ov.await(fEntries), c0, n0, ov.await(fSem),
+            ov.await(fVecs), p0, np0)
+        }
       // every artifact-keyed join below prefers hash over sort-merge
       // (uniform doc_id/w/cluster/cell keys; sorting both sides of ten
       // joins for one-pass existence checks would be waste) — but the
       // build sides are CORPUS-GROWING (full doc list, cluster map,
       // refold aggregates), so each rides a size gate: the
-      // [[batchHint]] ladder where the join kind allows a broadcast
-      // tier, [[LlmQueries.gatedShuffleHash]] alone for the full-outer
+      // [[Gates.batchHint]] ladder where the join kind allows a broadcast
+      // tier, [[Gates.gatedShuffleHash]] alone for the full-outer
       // refolds (full joins cannot broadcast-hash). Bounds come from
       // checkpointed parents — zero extra probe jobs per memo.
       val nEntries = probeCount(entries)
@@ -1471,14 +1376,14 @@ object CorpusQueries extends QueryModule {
           .agg(count(lit(1)).as("observed")))
       val c2 = chk("bm25_doclen_refold",
         bm25DocLens(s, dir)
-          .join(LlmQueries.gatedShuffleHash(entries.groupBy(col("doc_id"))
+          .join(gatedShuffleHash(entries.groupBy(col("doc_id"))
             .agg(sum(col("tf")).cast("long").as("dl2")), nEntries),
             Seq("doc_id"), "full")
           .filter(!(col("dl") <=> col("dl2")))
           .agg(count(lit(1)).as("observed")))
       val c3 = chk("bm25_termstats_refold",
         bm25TermStats(s, dir)
-          .join(LlmQueries.gatedShuffleHash(entries.groupBy(col("w"))
+          .join(gatedShuffleHash(entries.groupBy(col("w"))
             .agg(count(lit(1)).as("df2"), sum(col("tf")).cast("long").as("cf2")),
             nEntries), Seq("w"), "full")
           .filter(!(col("df") <=> col("df2")) || !(col("cf") <=> col("cf2")))
@@ -1598,52 +1503,49 @@ object CorpusQueries extends QueryModule {
       // same deterministic checkpoints, memoized stage builds still
       // serialize under StageMemo's monitor, and the count probes land
       // in the same probeCount memo the batchHint sites read.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val (del, centries, delV, delP, nDelP, sentries, mmap, survNodes,
           live) =
-        try {
-          val fDel = Future {
+        Overlap(s) { ov =>
+          import ov.ec
+          val fDel = ov {
             val d = Tables.documents(s, dir)
               .filter(col("doc_id") % 10 === 9).select(col("doc_id"))
               .localCheckpoint() // consumed by two checks
             probeCount(d) // prime the batchHint probe off the hot path
             d
           }
-          val fCentries = Future {
+          val fCentries = ov {
             compactedPostings(s, dir)
               .select(col("blk"), explode(col("posting")).as("e"))
               .select(col("blk"), col("e.d").as("doc_id"))
               .localCheckpoint() // 3 consumers: erased, universe, geometry
           }
-          val fDelV = Future {
+          val fDelV = ov {
             val d = LlmQueries.vecTable(s, dir)
               .filter(col("vec_id") % 5 === 2).select(col("vec_id"))
               .localCheckpoint() // consumed by the erased scan
             probeCount(d)
             d
           }
-          val fDelP = Future {
+          val fDelP = ov {
             val d = plantedErasureSet(s, dir)
             (d, probeCount(d))
           }
-          val fSentries = Future {
+          val fSentries = ov {
             compactedShingleIndex(s, dir)
               .select(col("h"), explode(col("docs")).as("doc_id"))
               .localCheckpoint() // 2 consumers: erased scan, census
           }
-          val fMmap = Future {
+          val fMmap = ov {
             val m = maintainedClusterMap(s, dir)
             probeCount(m)
             m
           }
-          val fPairs = Future { LlmQueries.ngramJaccardPairs(s, dir) }
+          val fPairs = ov { LlmQueries.ngramJaccardPairs(s, dir) }
           // the surviving-graph node set depends on the pair graph and
           // the tombstones; chained as a continuation so it starts the
           // moment both parents land
-          val fSurv = fDelP.zip(fPairs).map { case ((dp, n), pairs) =>
+          val fSurv = ov.track(fDelP.zip(fPairs).map { case ((dp, n), pairs) =>
             val p = pairs
               .join(batchHint(dp.select(col("doc_id").as("doc_a")), n),
                 Seq("doc_a"), "left_anti")
@@ -1654,20 +1556,16 @@ object CorpusQueries extends QueryModule {
               .localCheckpoint() // both c9 directions + the gate probe
             probeCount(sn)
             sn
-          }
-          val fLive = fPairs.map(p =>
-            p.select(col("doc_a"), col("doc_b")).localCheckpoint())
-          val (dp, n) = Await.result(fDelP, Duration.Inf)
-          (Await.result(fDel, Duration.Inf),
-            Await.result(fCentries, Duration.Inf),
-            Await.result(fDelV, Duration.Inf), dp, n,
-            Await.result(fSentries, Duration.Inf),
-            Await.result(fMmap, Duration.Inf),
-            Await.result(fSurv, Duration.Inf),
-            Await.result(fLive, Duration.Inf))
-        } finally pool.shutdown()
+          })
+          val fLive = ov.track(fPairs.map(p =>
+            p.select(col("doc_a"), col("doc_b")).localCheckpoint()))
+          val (dp, n) = ov.await(fDelP)
+          (ov.await(fDel), ov.await(fCentries), ov.await(fDelV), dp, n,
+            ov.await(fSentries), ov.await(fMmap), ov.await(fSurv),
+            ov.await(fLive))
+        }
       val delPH = batchHint(delP, nDelP)
-      // tombstone/artifact probes below ride the [[batchHint]] ladder
+      // tombstone/artifact probes below ride the [[Gates.batchHint]] ladder
       // (r15 verdict item 1): del/delV/delP are checkpointed, so each
       // gate probe is one cached-block count, memoized across sites
       val c1 = chk("compacted_postings_no_erased",
@@ -1835,7 +1733,7 @@ object CorpusQueries extends QueryModule {
         // compactor rewrites. Semi-join against the touched-unit set,
         // NOT a partitioned window max — a window would sort every
         // unit's entries just to broadcast one flag. The set is
-        // checkpointed (unit-count-sized) and rides the [[batchHint]]
+        // checkpointed (unit-count-sized) and rides the [[Gates.batchHint]]
         // ladder: touched units grow with the cohort, not the batch.
         val cost = entries
           .join(batchHint(entries.filter(masked).select(col(unitCol))
@@ -1864,19 +1762,16 @@ object CorpusQueries extends QueryModule {
       // ~10 serial small jobs (cpu/run 0.40 at 2.3 s wall). The
       // tombstones build concurrently, then the four family
       // constructions; frames and numbers unchanged.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val famRows =
-        try {
-          val fDelD = Future {
+        Overlap(s) { ov =>
+          import ov.ec
+          val fDelD = ov {
             val d = Tables.documents(s, dir)
               .filter(col("doc_id") % 10 === 9).select(col("doc_id"))
               .localCheckpoint()
             (d, probeCount(d))
           }
-          val fDelP = Future {
+          val fDelP = ov {
             val d = plantedErasureSet(s, dir)
             (d, probeCount(d))
           }
@@ -1884,32 +1779,32 @@ object CorpusQueries extends QueryModule {
           // but delP is the cohort-scale planted erasure set — the exact
           // ungated-broadcast class the r15 ×100 probe flagged); the
           // withColumn frames inherit their checkpointed parent's count
-          val fPost = fDelD.map { case (delD, nDelD) =>
+          val fPost = ov.track(fDelD.map { case (delD, nDelD) =>
             family("bm25_postings", bm25Postings(s, dir)
               .select(col("blk"), explode(col("posting")).as("e"))
               .select(col("blk"), col("e.d").as("doc_id"))
               .join(batchHint(delD.withColumn("erased", lit(true)), nDelD),
                 Seq("doc_id"), "left"), "blk", col("erased"))
-          }
-          val fSh = fDelP.map { case (delP, nDelP) =>
+          })
+          val fSh = ov.track(fDelP.map { case (delP, nDelP) =>
             family("shingle_index", shingleIndex(s, dir)
               .select(col("h"), explode(col("docs")).as("doc_id"))
               .join(batchHint(delP.withColumn("erased", lit(true)), nDelP),
                 Seq("doc_id"), "left"), "h", col("erased"))
-          }
-          val fMem = Future {
+          })
+          val fMem = ov {
             family("sem_members", LlmQueries.semIndex(s, dir)._2
               .select(col("vec_id"), col("cell"),
                 (col("vec_id") % 5 === 2).as("erased")), "cell",
               col("erased"))
           }
-          val fCl = fDelP.map { case (delP, nDelP) =>
+          val fCl = ov.track(fDelP.map { case (delP, nDelP) =>
             family("cluster_map", pairClusters(s, dir)
               .join(batchHint(delP.withColumn("erased", lit(true)), nDelP),
                 Seq("doc_id"), "left"), "cluster", col("erased"))
-          }
-          Seq(fPost, fSh, fMem, fCl).map(Await.result(_, Duration.Inf))
-        } finally pool.shutdown()
+          })
+          Seq(fPost, fSh, fMem, fCl).map(ov.await(_))
+        }
       famRows.reduce(_.unionByName(_))
         .withColumn("decision",
           when(col("masked_ppm") >= RebuildMaskedPpm ||
@@ -2565,7 +2460,7 @@ object CorpusQueries extends QueryModule {
       // at 32 cores in the graded run. One materialized 2-column spread
       // frame (the q200 shape) feeds all three builds; at scale the
       // gate skips both the exchange and the checkpoint (see
-      // [[spreadScanCheckpoint]]).
+      // [[Gates.spreadScanCheckpoint]]).
       dupSpanStrip(spreadScanCheckpoint(Tables.documents(s, dir)
         .select(col("doc_id"), col("text"))))
         .orderBy(col("doc_id"))),
@@ -4694,14 +4589,12 @@ object CorpusQueries extends QueryModule {
     // corpus-sized exchange appears at any scale.
     val dw = words.select(col("w")).distinct().localCheckpoint()
     val nDw = probeCount(dw)
-    // BYTES-gated, not row-gated (ADVICE r16): the broadcast frame
-    // carries word STRINGS, so the 2M-row cap alone could admit a
-    // ~100+ MB broadcast — inconsistent with the vecBatchHint
-    // discipline. ~48 B/row covers the (w, n_sub) unsafe row at
-    // natural-language word widths; over 64 MB estimated, fall back to
-    // the occurrence-local encode below.
+    // The ladder's broadcast tier (ADVICE r16: bytes, not rows — the
+    // frame carries word STRINGS): ~48 B/row covers the (w, n_sub)
+    // unsafe row at natural-language word widths; over the byte cap,
+    // fall back to the occurrence-local encode below.
     val encoded =
-      if (nDw * 48L <= 64L * 1024 * 1024)
+      if (broadcastable(nDw))
         words.join(
           broadcast(dw.crossJoin(broadcast(vocab))
             .withColumn("n_sub", expr(maxMatchCountSql))

@@ -366,7 +366,7 @@ object ExtendedQueries extends QueryModule {
       // stay tolerance-gated (only the 2% `apx_ok` boolean is emitted,
       // never the raw sketch), or the hash gate breaks under ANY
       // repartitioning change here.
-      graft.operators.CorpusQueries.spreadScan(Tables(s, dir, "lineitem")
+      graft.operators.Gates.spreadScan(Tables(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice")))
         .groupBy(col("l_returnflag"))
         .agg(percentile(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"),

@@ -508,16 +508,16 @@ object GovernanceQueries extends QueryModule {
         .localCheckpoint()
       // the deletion list is ~1/13 of the USER UNIVERSE — it grows
       // with the corpus, so the purge hints ride the size-gated
-      // [[CorpusQueries.batchHint]] ladder (broadcast while genuinely
+      // [[Gates.batchHint]] ladder (broadcast while genuinely
       // small, hash-join under the per-task budget, sort-merge above);
       // del is checkpointed so the gate probe is one cached-block read
-      val nDel = CorpusQueries.probeCount(del)
+      val nDel = Gates.probeCount(del)
       val marked = ev.join(
-        CorpusQueries.batchHint(del.withColumn("todel", lit(1)), nDel),
+        Gates.batchHint(del.withColumn("todel", lit(1)), nDel),
         Seq("user_id"), "left")
-      val retained = ev.join(CorpusQueries.batchHint(del, nDel),
+      val retained = ev.join(Gates.batchHint(del, nDel),
         Seq("user_id"), "left_anti")
-      val residual = retained.join(CorpusQueries.batchHint(del, nDel),
+      val residual = retained.join(Gates.batchHint(del, nDel),
         Seq("user_id"), "left_semi")
         .groupBy(col("event_type")).agg(count(lit(1)).as("res"))
       marked.groupBy(col("event_type"))

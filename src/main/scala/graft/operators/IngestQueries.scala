@@ -541,7 +541,7 @@ object IngestQueries extends QueryModule {
       // consumers below (bitmap build, present-probe side) re-ran it
       // (measured 4.0 s wall at cpu/run 0.87). One narrow doc_id
       // exchange spreads it; the checkpoint runs it once.
-      val canon = canonicalized(graft.operators.CorpusQueries.spreadScan(
+      val canon = canonicalized(graft.operators.Gates.spreadScan(
         docs.select(col("doc_id"), expr(RawUrlSql).as("url"))))
         .select(col("doc_id"), col("canon_url"))
         .localCheckpoint()
@@ -567,7 +567,7 @@ object IngestQueries extends QueryModule {
     "q282_crawl_policy" -> ((s, dir) => {
       // same repartition-before-the-regexp-chain shape as q281 (one
       // consumer here, so no checkpoint needed)
-      val canon = canonicalized(graft.operators.CorpusQueries.spreadScan(
+      val canon = canonicalized(graft.operators.Gates.spreadScan(
         Tables.documents(s, dir)
           .select(col("doc_id"), expr(RawUrlSql).as("url"))))
         .select(col("doc_id"),

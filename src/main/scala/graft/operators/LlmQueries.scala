@@ -4,6 +4,7 @@ import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import Gates._
 
 /** The LLM-training-data pipeline surface (BASELINE north star): text
   * analysis, document fingerprinting, exact/fuzzy deduplication, and
@@ -103,7 +104,7 @@ object LlmQueries extends QueryModule {
     // Moving it first spreads the compute AND yields the same spread
     // checkpoint layout (narrow projections preserve partitioning).
     // Scan-split-gated (r17): no exchange once the source has splits.
-    withTokens(CorpusQueries.spreadScan(plantedNear(s, dir)))
+    withTokens(spreadScan(plantedNear(s, dir)))
       .select(col("doc_id"), expr(shinglesSql("tk")).as("sh"))
       .filter(size(col("sh")) > 0)
       // fnv64 (the engine's own codegen'd FNV-1a), NOT Spark's xxhash64:
@@ -274,6 +275,13 @@ object LlmQueries extends QueryModule {
       .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
 
+  /** Total exploded-shingle rows of a docsets frame = the self-join's
+    * build-side cardinality. One tiny agg over the (checkpointed)
+    * per-doc frame — never an exploded-index scan. */
+  private def shingleRowCount(docsets: DataFrame): Long =
+    Option(docsets.agg(sum(col("sz")).cast("long")).head.get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+
   /** Exact Jaccard pairs >= `minJac` under a candidate-generation df cap.
     *
     * One tiny probe job asks whether any shingle exceeds the cap. The
@@ -292,59 +300,6 @@ object LlmQueries extends QueryModule {
     * from the merge scan over the full per-doc sorted arrays (hot
     * shingles included), so reported scores are exact regardless of the
     * cap. */
-  /** Force shuffle_hash ONLY while every task's hash build fits the
-    * execution-memory budget. The hint removes Spark's sort-merge
-    * fallback, and the exploded-index self-join's build side grows
-    * linearly with the corpus at a fixed shuffle-partition count — the
-    * round-15 ×100 probe broke exactly here ("Can't acquire 67108864
-    * bytes memory to build hash relation" inside q265's pair-graph
-    * stage build). Under the cap the measured ~2× win over sort-merge
-    * stands (the r9 9.4→5.1 s measurement); over it the un-hinted join
-    * plans sort-merge, which sorts-and-spills gracefully at any scale
-    * — and on a real cluster AQE still picks broadcast/skew handling
-    * where the runtime stats allow. ~48 bytes/row covers the
-    * unsafe-row (doc_id, sz[, nhot], h) build payload; the 32 MB/task
-    * budget sits well inside the per-task execution slice at local[32]
-    * and any sane executor sizing. */
-  private[graft] def gatedShuffleHash(df: DataFrame, buildRows: Long,
-      bytesPerRow: Long = 48L): DataFrame = {
-    val parts = math.max(scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(200), 1)
-    if (buildRows / parts * bytesPerRow <= 32L * 1024 * 1024)
-      df.hint("shuffle_hash")
-    else df
-  }
-
-  /** Unsafe-row estimate for the vector-payload build sides (64 double
-    * components + norm + ids + array headers ≈ 600 B): a 2M-row
-    * "batch" of embeddings is ~1.2 GB — NOT broadcastable — so vector
-    * frames skip [[CorpusQueries.batchHint]]'s broadcast tier and gate
-    * straight on the per-task hash-build budget with this row width. */
-  private[graft] val VecRowBytes = 600L
-
-  /** The [[CorpusQueries.batchHint]] ladder for VECTOR-payload build
-    * sides (r16): batchHint's 2M-ROW broadcast tier assumes narrow
-    * tombstone rows — 2M embedding rows are ~1.2 GB and must never
-    * broadcast — so this gate goes by BYTES: broadcast while the
-    * estimated build (rows × bytesPerRow) fits 64 MB (a dimension-
-    * table-sized relation on any sane executor), else fall to the
-    * per-task-budget shuffle-hash tier, else un-hinted sort-merge.
-    * Broadcasting the vector side leaves the PROBE side (candidate
-    * lists that grow faster than the corpus — e.g. q169's 2-hop
-    * frame) entirely un-shuffled, which is the point. */
-  private[graft] def vecBatchHint(df: DataFrame, rows: Long,
-      bytesPerRow: Long = VecRowBytes): DataFrame =
-    if (rows * bytesPerRow <= 64L * 1024 * 1024) broadcast(df)
-    else gatedShuffleHash(df, rows, bytesPerRow)
-
-  /** Total exploded-shingle rows of a docsets frame = the self-join's
-    * build-side cardinality. One tiny agg over the (checkpointed)
-    * per-doc frame — never an exploded-index scan. */
-  private def shingleRowCount(docsets: DataFrame): Long =
-    Option(docsets.agg(sum(col("sz")).cast("long")).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-
   private[graft] def jaccardPairsCapped(docsets: DataFrame, cap: Int,
       minJac: Double): DataFrame = {
     val idx = docsets.select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
@@ -617,7 +572,7 @@ object LlmQueries extends QueryModule {
     // about. localCheckpoint per the repo convention: blocks are reaped
     // by ContextCleaner with the frame instead of outliving the query
     // in the CacheManager (the r7 leak class).
-    tokenSetsOf(s, CorpusQueries.spreadScan(plantedNear(s, dir)))
+    tokenSetsOf(s, spreadScan(plantedNear(s, dir)))
       .localCheckpoint()
 
   /** The bigram-key projection of [[tokenSets]] over an ARBITRARY
@@ -798,8 +753,8 @@ object LlmQueries extends QueryModule {
     // bounds: the stored members artifact for exMembers (its erased
     // subset in the q258 path only shrinks it), the checkpointed batch
     // for nwAsg. Over budget the joins fall back to sort-merge.
-    val nMembers = graft.operators.CorpusQueries.probeCount(semIndex(s, dir)._2)
-    val nBatch = graft.operators.CorpusQueries.probeCount(nwAsg)
+    val nMembers = probeCount(semIndex(s, dir)._2)
+    val nBatch = probeCount(nwAsg)
     def hits(members: DataFrame, bound: Long, name: String): DataFrame = nwAsg
       .select(col("cell"), col("vec_id"), col("av").as("bv"),
         col("anrm").as("bnrm"))
@@ -856,15 +811,15 @@ object LlmQueries extends QueryModule {
   // proof (q270/q271) because their untouched-branch routing and
   // emptied-key drops are era-dependent.
   private[graft] def compactMembers(members: DataFrame, del: DataFrame): DataFrame = {
-    // size-gated hints ([[CorpusQueries.batchHint]] ladder, r15
+    // size-gated hints ([[Gates.batchHint]] ladder, r15
     // verdict item 1): del is batch-sized in production but the sweep
     // corpora pass cohort-scale sets; delCells is checkpointed
     // (cell-count-sized) so both branch probes are cached-block reads
-    val delH = CorpusQueries.batchHint(del)
+    val delH = batchHint(del)
     val delCells = members.join(delH, Seq("vec_id"), "left_semi")
       .select(col("cell")).distinct()
       .localCheckpoint() // both branches below + the gate probe
-    val delCellsH = CorpusQueries.batchHint(delCells)
+    val delCellsH = batchHint(delCells)
     val untouched = members.join(delCellsH, Seq("cell"), "left_anti")
       .select(col("vec_id"), col("cell"))
     val rewritten = members.join(delCellsH, Seq("cell"), "left_semi")
@@ -925,7 +880,7 @@ object LlmQueries extends QueryModule {
     * counted for the salt fanout — without the cut each consumer
     * re-runs the seed selection (3 corpus scans). */
   private def stratifiedCells(s: SparkSession, e: DataFrame): DataFrame = {
-    val n = CorpusQueries.probeCount(e) // memo-shared with the edge gates
+    val n = probeCount(e) // memo-shared with the edge gates
     val nLab = math.max(1L,
       e.agg(countDistinct(col("label"))).head().getLong(0))
     val quota = math.max(1,
@@ -1015,14 +970,14 @@ object LlmQueries extends QueryModule {
       explode(expr(s"sequence(0, ${fanout - 1})")))
     // the probe build side is 2·fanout rows per probe node WITH the
     // vector payload — corpus-growing when probe == build, so the hint
-    // rides the BYTES-gated vecBatchHint ladder (r17, verdict item 7):
+    // rides the ladder at vector row width (r17, verdict item 7):
     // while the exploded probe side fits 64 MB it broadcasts, which
     // leaves the corpus-side cell assignment entirely UN-shuffled (the
     // (cell, salt) exchange of every vector payload disappears); past
     // the byte cap the old per-task-budget shuffle-hash tier and the
     // sort-merge fallback re-engage unchanged.
-    val nProbe = CorpusQueries.probeCount(probe)
-    salted.join(vecBatchHint(probesR, nProbe * 2L * fanout),
+    val nProbe = probeCount(probe)
+    salted.join(batchHint(probesR, nProbe * 2L * fanout, VecRowBytes),
       Seq("cell", "salt"))
       .filter(col("src_id") =!= col("nbr_id"))
       .withColumn("score",
@@ -1141,7 +1096,7 @@ object LlmQueries extends QueryModule {
       // spread before tokenize+simhash (r16, the tokenSets
       // convention): the per-doc signature fold ran inside the
       // single-file scan task. Scan-split-gated (r17).
-      withTokens(CorpusQueries.spreadScan(plantedNear(s, dir)))
+      withTokens(spreadScan(plantedNear(s, dir)))
         .select(col("doc_id"),
           graft.functions.TextFunctions.simhash64(col("tk")).as("sh"))
         .localCheckpoint()
@@ -1842,7 +1797,7 @@ object LlmQueries extends QueryModule {
       // the ContextCleaner reclaims when the frame is unreferenced,
       // unlike persist() entries that would pile up in the CacheManager
       // across a 127-query session
-      val hashed = CorpusQueries.spreadScan(
+      val hashed = spreadScan(
           Tables.documents(s, dir).select(col("doc_id")).as[Long])
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -1869,7 +1824,7 @@ object LlmQueries extends QueryModule {
     // nothing shuffles but the final order for the gate.
     "q148_image_resize" -> ((s, dir) => {
       import s.implicits._
-      CorpusQueries.spreadScan(
+      spreadScan(
           Tables.documents(s, dir).select(col("doc_id")).as[Long])
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -1896,7 +1851,7 @@ object LlmQueries extends QueryModule {
     // final sort.
     "q198_shot_boundaries" -> ((s, dir) => {
       import s.implicits._
-      CorpusQueries.spreadScan(
+      spreadScan(
           Tables.documents(s, dir).select(col("doc_id")).as[Long])
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -1954,7 +1909,7 @@ object LlmQueries extends QueryModule {
     // session end like a persist() entry would.
     "q124_image_neardup" -> ((s, dir) => {
       import s.implicits._
-      val hashed = CorpusQueries.spreadScan(
+      val hashed = spreadScan(
           Tables.documents(s, dir).select(col("doc_id")).as[Long])
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -1978,7 +1933,7 @@ object LlmQueries extends QueryModule {
     // the one shuffle carries fingerprint keys, state is (min, count).
     "q125_audio_fp_dedup" -> ((s, dir) => {
       import s.implicits._
-      val fp = CorpusQueries.spreadScan(
+      val fp = spreadScan(
           Tables.documents(s, dir).select(col("doc_id")).as[Long])
         .mapPartitions(_.map(id => (id, MultimodalOps.audioFingerprint(
           MultimodalOps.mkWav16(id % 30, (id % 4).toInt * 7, 4096)))))
@@ -2466,14 +2421,14 @@ object LlmQueries extends QueryModule {
       // grow with the corpus — each hash preference is gated on the
       // per-task build budget; bounds come from the edge checkpoint
       // and the memoized corpus count (zero extra probe jobs)
-      val nEdges = CorpusQueries.probeCount(edges)
-      val nVecs = CorpusQueries.probeCount(e) // memo hit (stratifiedCells)
+      val nEdges = probeCount(edges)
+      val nVecs = probeCount(e) // memo hit (stratifiedCells)
       // batchHint ladder (r16): the adjacency is narrow and batch-shaped
-      // at harness scale — broadcast under the row cap leaves the 1-hop
+      // at harness scale — broadcast under the byte cap leaves the 1-hop
       // side un-shuffled; the shuffle-hash/sort-merge tiers take over as
       // the edge list grows (same gate as before, one tier richer).
       val twoHop = und.as("x")
-        .join(CorpusQueries.batchHint(und.as("y"), 2L * nEdges),
+        .join(batchHint(und.as("y"), 2L * nEdges),
           col("x.nbr_id") === col("y.src_id"))
         .select(col("x.src_id").as("src_id"), col("y.nbr_id").as("cand_id"))
       val cand = twoHop
@@ -2488,14 +2443,14 @@ object LlmQueries extends QueryModule {
         org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaDouble,
           org.apache.spark.sql.Encoders.scalaLong))
-      // vecBatchHint (r16): broadcasting the two vector fetches (bytes-
-      // gated — see the helper) leaves the 2-hop candidate list, which
+      // vector-width ladder (r16): broadcasting the two vector fetches
+      // (bytes-gated — see [[Gates.batchHint]]) leaves the 2-hop candidate list, which
       // grows FASTER than the corpus, entirely un-shuffled before its
       // partial-agged top-k; above the byte cap the old shuffle-hash
       // tier re-engages unchanged (measured 94 MB of candidate shuffle
       // at sf0.1 for a 6 MB vector side).
-      cand.join(vecBatchHint(va, nVecs), Seq("src_id"))
-        .join(vecBatchHint(vb, nVecs), Seq("cand_id"))
+      cand.join(batchHint(va, nVecs, VecRowBytes), Seq("src_id"))
+        .join(batchHint(vb, nVecs, VecRowBytes), Seq("cand_id"))
         .withColumn("score", round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
         .groupBy(col("src_id"))
         .agg(topk(col("score"), col("cand_id")).as("top"))

@@ -294,7 +294,7 @@ object RelationalQueries extends QueryModule {
       // exchange costs ~3 MB; the Expand and both aggregate passes then
       // spread across every core. Scan-split-gated (r17): at 100 TB the
       // natural splits spread the Expand and no exchange is planned.
-      val l = graft.operators.CorpusQueries.spreadScan(
+      val l = graft.operators.Gates.spreadScan(
         Tables(s, dir, "lineitem").select(cols.map(col): _*))
       val measures = count(lit(1)).as("n") +: cols.flatMap(c => Seq(
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$c"),

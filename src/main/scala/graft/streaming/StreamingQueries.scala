@@ -791,7 +791,7 @@ object StreamingQueries extends QueryModule {
       // arm consumes the canonical frame twice (winner agg + scoring
       // join) — spread it once; scan-split-gated (r17).
       urlFrontier(graft.operators.IngestQueries.canonicalized(
-        graft.operators.CorpusQueries.spreadScan(raw))
+        graft.operators.Gates.spreadScan(raw))
         .select(col("canon_url"), col("doc_id"), col("ts")))
         .orderBy(col("doc_id"))
     })
@@ -958,11 +958,11 @@ object StreamingQueries extends QueryModule {
       val er = ev.filter(col("kind") === "erase")
         .select(col("doc_id")).distinct()
         .localCheckpoint() // three consumers below + the gate probe
-      // size-gated ([[graft.operators.CorpusQueries.batchHint]]): the
+      // size-gated ([[graft.operators.Gates.batchHint]]): the
       // gate corpus's tombstone arm is the cohort-scale RTBF slice,
       // which grows with the corpus — the exact ungated-broadcast
       // class the r15 ×100 probe flagged
-      val erH = graft.operators.CorpusQueries.batchHint(er)
+      val erH = graft.operators.Gates.batchHint(er)
       val ad = ev.filter(col("kind") === "admit")
       ad.join(erH, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), lit("admit").as("action"), col("dl"))
@@ -1164,7 +1164,7 @@ object StreamingQueries extends QueryModule {
   def prefixProbeDedup(s: SparkSession, newDocs: DataFrame,
       corpus: DataFrame): DataFrame = {
     val corpusSets = graft.operators.LlmQueries
-      .tokenSetsOf(s, graft.operators.CorpusQueries.spreadScan(corpus))
+      .tokenSetsOf(s, graft.operators.Gates.spreadScan(corpus))
       .localCheckpoint()
     val probeSets = graft.operators.LlmQueries.tokenSetsOf(s, newDocs)
     val pairs = graft.operators.LlmQueries

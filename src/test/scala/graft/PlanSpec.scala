@@ -538,8 +538,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q146 kNN graph: probe side bytes-gated broadcast, corpus side unshuffled, ranking partial-agged, no window") {
     // The all-nodes graph build must keep q46's discipline with a probe
     // table that is now corpus-sized: centroids broadcast via the only
-    // nested-loop join; the candidate-probe join rides the vecBatchHint
-    // BYTES ladder (r17) — at gate scale the exploded probe side fits
+    // nested-loop join; the candidate-probe join rides the Gates.batchHint
+    // BYTES ladder at vector row width (r17) — at gate scale the exploded probe side fits
     // the 64 MB estimate and BROADCASTS, which leaves the corpus-side
     // cell assignment entirely un-shuffled (no (cell, salt) exchange of
     // vector payloads); past the byte cap the code's shuffle-hash tier
@@ -580,7 +580,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Same invariants as q146 with the probe side now batch-sized: the
     // only nested-loop join is centroid scoring against the broadcast
     // cell table; the batch-sized probe side sits well under the
-    // vecBatchHint byte gate, so it broadcasts and the frozen index
+    // vector-width Gates.batchHint byte gate, so it broadcasts and the frozen index
     // side is never shuffled; both the index-side argmax and the
     // per-probe top-5 are partial aggregates — a window would sort
     // each touched cell's pair stream in one task.
@@ -769,7 +769,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = plan("q155_knn_graph_sqrtcells")
     assert(!p.contains("Window"), p)
     assert(!p.contains("CartesianProduct"), p)
-    // the probe/candidate join rides the vecBatchHint BYTES ladder
+    // the probe/candidate join rides the vector-width Gates.batchHint ladder
     // (r17): at gate scale the probe side fits 64 MB and broadcasts —
     // the corpus-side assignment is never shuffled by (cell, salt) —
     // while past the gate the shuffle-hash tier re-engages; never
@@ -867,7 +867,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (2-hop expand + two vector fetches — sort-merge would sort
     // 64-double payloads), candidate ranking as the TopK partial agg
     // (ObjectHashAggregate), no window, nothing cartesian. r16: the
-    // vector fetches ride the bytes-gated vecBatchHint ladder, so at
+    // vector fetches ride the bytes-gated Gates.batchHint ladder, so at
     // gate scale they are BROADCAST hash joins (the candidate list is
     // never shuffled); above the byte cap the shuffle-hash tier
     // re-engages — either way never sort-merge.
@@ -1149,74 +1149,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!p.contains("SortMergeJoin"), s"$q: ${p.take(4000)}")
       assert(!p.contains("CartesianProduct"), s"$q: ${p.take(4000)}")
     }
-  }
-
-  // r15 verdict items 1+7: every forced physical strategy on a
-  // corpus-growing side rides the size-gated ladder, and the gate's
-  // count probe is memoized so gated plans never pay an extra job.
-  test("batchHint ladder: broadcast under the row cap, shuffle_hash in the hash band, un-hinted sort-merge above") {
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val probe = spark.range(100).toDF("doc_id")
-      val build = spark.range(10).toDF("doc_id")
-      def planOf(b: org.apache.spark.sql.DataFrame): String =
-        probe.join(b, Seq("doc_id"), "left_semi").queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
-      // tier 1: batch-sized → explicit broadcast (beats the disabled
-      // auto threshold — the hint is the decision, not the stats)
-      val p1 = planOf(operators.CorpusQueries.batchHint(build, 10L))
-      assert(p1.contains("BroadcastHashJoin"), p1)
-      // tier 2: over the broadcast cap but per-task hash build fits
-      // ((cap+1)/4 partitions × 48 B ≈ 24 MB ≤ 32 MB) → shuffle_hash
-      val p2 = planOf(operators.CorpusQueries.batchHint(build,
-        operators.CorpusQueries.BroadcastRowCap + 1))
-      assert(p2.contains("ShuffledHashJoin"), p2)
-      // tier 3: hash build over budget → NO forced strategy; the
-      // un-hinted join plans sort-merge (spills gracefully, AQE can
-      // still re-pick) — the exact fallback the ×100 q265 probe
-      // proved necessary
-      val p3 = planOf(operators.CorpusQueries.batchHint(build, 4000000000L))
-      assert(p3.contains("SortMergeJoin"), p3)
-      assert(!p3.contains("ShuffledHashJoin") && !p3.contains("BroadcastHashJoin"), p3)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-  }
-
-  test("probeCount memoizes: re-probing the same frame runs zero extra Spark jobs") {
-    val df = spark.range(5000).toDF("doc_id").localCheckpoint()
-    operators.CorpusQueries.resetProbeCounts()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    // the async listener bus needs draining before each read: wait for
-    // at least `min` events, then for two consecutive stable reads
-    def settle(min: Int): Int = {
-      val deadline = System.currentTimeMillis() + 20000
-      while (jobs.get() < min && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      var last = -1
-      var cur = jobs.get()
-      while (cur != last) { last = cur; Thread.sleep(250); cur = jobs.get() }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val c1 = operators.CorpusQueries.probeCount(df)
-      assert(c1 == 5000L)
-      val after1 = settle(1)
-      assert(after1 >= 1, "the first probe must be a real count job")
-      // a re-probe AND a full batchHint of the same frame: memo hits,
-      // no new job anywhere in the gated plan's construction
-      assert(operators.CorpusQueries.probeCount(df) == c1)
-      operators.CorpusQueries.batchHint(df)
-      val after2 = settle(after1)
-      assert(after2 == after1,
-        s"re-probe ran ${after2 - after1} extra job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("q234 SQ8 / q235 unseen mass: stats broadcast, no window, map-side combine") {
