@@ -2,7 +2,15 @@ package graft
 
 import graft.functions.{KustoRender, KustoRenderOptions, KustoRowRenderer, TimestampMode}
 import graft.sources.ParquetMetadata
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.{SimpleFutureAction, SparkEnv}
+import org.apache.spark.io.LZ4CompressionCodec
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.Try
 
 /** CLI shim reproducing the reference's entry surface 1:1
   * (`/root/reference/pq2json/src/main.rs:10-157`) over SparkSession — the
@@ -19,10 +27,16 @@ import org.apache.spark.sql.SparkSession
   *     "output", so output always goes to stdout).
   *   - errors print `ERROR: ...` on stderr and exit nonzero
   *     (`main.rs:159-165`).
-  *   - conversion streams through `toLocalIterator`, so driver memory is
-  *     O(partition) — the Spark analogue of the reference's O(row)
-  *     streaming loop (`converter.rs:133`). Row order is scan order, which
-  *     for a single parquet file matches the reference's file order.
+  *   - conversion streams like the reference's row loop
+  *     (`converter.rs:133`), but one input split per Spark job, with up to
+  *     `defaultParallelism` jobs in flight; each returns its split's lines
+  *     as one compressed UTF-8 block, written to OUT strictly in split
+  *     order. Driver memory is at most `defaultParallelism` compressed
+  *     blocks, each under `spark.driver.maxResultSize`. Row order is scan
+  *     order, which for a single parquet file matches the reference's
+  *     file order.
+  *   - a failed write to OUT (full disk, closed pipe) is an error, not a
+  *     silently truncated output.
   */
 object Pq2Json {
 
@@ -196,7 +210,19 @@ object Pq2Json {
       val u64Paths = u64Sampled.flatMap(_._2).toSet
       u64FooterWarnings(u64Sampled).foreach(System.err.println)
       val opts = a.opts.copy(unsignedPaths = u64Paths)
-      val df = spark.read.parquet(a.input)
+      // The stream reads through a copy of the caller's session (runtime
+      // confs kept) that cuts at least two splits per core, unless the
+      // caller sets that count itself: smaller splits keep every core
+      // busy and bring the first block sooner. -d reads through the
+      // caller's session, whose split count is its part-file count.
+      val reader =
+        if (a.distributed || spark.conf.getOption(MinPartitionNum).isDefined) spark
+        else {
+          val clone = GraftShims.cloneSession(spark)
+          clone.conf.set(MinPartitionNum, 2L * spark.sparkContext.defaultParallelism)
+          clone
+        }
+      val df = reader.read.parquet(a.input)
       val rendered =
         if (a.csv) KustoRender.toKustoCsv(df, a.columns, opts)
         else {
@@ -220,11 +246,61 @@ object Pq2Json {
         // faithful and -d is the scale escape hatch; within each part
         // file, line order is scan order.
         rendered.write.mode("overwrite").text(a.output.get) // parseArgs requires -o
-      } else {
-        val it = rendered.toLocalIterator()
-        while (it.hasNext) { out.print(it.next().getString(0)); out.print("\n") }
+      } else stream(rendered, out)
+    }
+  }
+
+  private val MinPartitionNum = "spark.sql.files.minPartitionNum"
+
+  /** Writes `rendered`'s one text column to `out`, a line per row, in
+    * partition order. Each partition is one Spark job returning one
+    * [[encodeBlock]]; at most `defaultParallelism` jobs are in flight, and
+    * partition `i + window` is submitted once block `i` is written, so the
+    * driver holds at most `window` compressed blocks and never decodes a
+    * row. Any failure (a job's, or the write's) cancels the jobs in
+    * flight and waits for them to end before it propagates. */
+  private def stream(rendered: DataFrame, out: java.io.PrintStream): Unit = {
+    val qe = rendered.queryExecution
+    val sc = rendered.sparkSession.sparkContext
+    SQLExecution.withNewExecutionId(qe, Some("pq2json")) {
+      val rows = qe.toRdd
+      val n = rows.getNumPartitions
+      val codec = new LZ4CompressionCodec(sc.getConf)
+      val inFlight = new java.util.ArrayDeque[SimpleFutureAction[Array[Byte]]]()
+      var next = 0
+      def submitNext(): Unit = if (next < n) {
+        var result: Array[Byte] = null
+        inFlight.add(sc.submitJob(rows, encodeBlock, Seq(next),
+          (_: Int, b: Array[Byte]) => result = b, result))
+        next += 1
+      }
+      try {
+        while (next < math.min(n, sc.defaultParallelism)) submitNext()
+        while (!inFlight.isEmpty) {
+          val block = Await.result(inFlight.peek(), Duration.Inf)
+          inFlight.poll()
+          codec.compressedInputStream(new java.io.ByteArrayInputStream(block)).transferTo(out)
+          // PrintStream swallows IOExceptions; checkError flushes and reports them
+          if (out.checkError()) throw new java.io.IOException("write to output failed")
+          submitNext()
+        }
+      } catch {
+        case e: Throwable =>
+          inFlight.forEach(_.cancel())
+          inFlight.forEach(f => Try(Await.ready(f, Duration.Inf)))
+          throw e
       }
     }
+  }
+
+  /** One partition's lines as raw UTF-8, each ending in `\n`, compressed
+    * with Spark's default block codec (LZ4). Runs on the executors. */
+  private def encodeBlock(lines: Iterator[InternalRow]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val z = new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(bytes)
+    lines.foreach { r => r.getUTF8String(0).writeTo(z); z.write('\n') }
+    z.close()
+    bytes.toByteArray
   }
 
   def main(argv: Array[String]): Unit = {

@@ -20,4 +20,10 @@ object GraftShims {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(id, info, builder)
+
+  /** A session that shares `spark`'s context and copies its state,
+    * runtime confs included (`newSession()` would drop them), so confs
+    * set on the copy never reach `spark` (`cloneSession` is private[sql]). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }

@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.functions.KustoRender
+import org.apache.spark.scheduler.{SchedulerProbe, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -198,5 +203,186 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Pq2Json.u64FooterWarnings(Seq(
       f("a.parquet", Set("k"), Set("k")),
       f("b.parquet", Set("k"), Set("k")))).isEmpty)
+  }
+
+  /** Writes each frame as one parquet file, `part-0000i.parquet`, into a
+    * new directory. */
+  private def fileDir(prefix: String, dfs: Seq[DataFrame]): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    dfs.zipWithIndex.foreach { case (df, i) =>
+      val tmp = Files.createTempDirectory("one-file").resolve("out")
+      df.coalesce(1).write.parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, dir.resolve(f"part-$i%05d.parquet"))
+    }
+    dir
+  }
+
+  /** Ten small files with unequal row counts: every file is its own split,
+    * so a conversion runs more splits than the session has cores. */
+  private lazy val unevenDir: Path = {
+    val counts = Seq(40, 300, 7, 120, 1, 260, 33, 90, 150, 12)
+    fileDir("uneven", counts.scanLeft(0)(_ + _).zip(counts).map { case (start, n) =>
+      spark.range(start, start + n).selectExpr("id", "concat('é✓-', id) AS s",
+        "named_struct('a', id % 7, 'b', array(cast(id AS string), null)) AS st")
+    })
+  }
+
+  /** `KustoRender.toKustoJson` over the caller's session, collected in
+    * order: what the stream must write, line for line. */
+  private def collectedJson(path: String): String =
+    KustoRender.toKustoJson(spark.read.parquet(path)).collect()
+      .map(_.getString(0) + "\n").mkString
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  /** Jobs started, jobs started and not yet ended, and the most of
+    * those seen at once. */
+  private final class JobWatch extends SparkListener {
+    val started = new AtomicInteger(0)
+    val active = new AtomicInteger(0)
+    val max = new AtomicInteger(0)
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
+      started.incrementAndGet()
+      max.accumulateAndGet(active.incrementAndGet(), math.max); ()
+    }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit = { active.decrementAndGet(); () }
+  }
+
+  private def watchingJobs[T](body: JobWatch => T): T = {
+    val w = new JobWatch
+    spark.sparkContext.addSparkListener(w)
+    try body(w) finally spark.sparkContext.removeSparkListener(w)
+  }
+
+  /** No job is left running by the DAGScheduler, and the listener, once
+    * the bus delivers the last job end, counts none active. */
+  private def assertNoJobsLeft(w: JobWatch): Unit = {
+    val sc = spark.sparkContext
+    assert(SchedulerProbe.activeJobs(sc) == 0)
+    val deadline = System.currentTimeMillis() + 10000
+    SchedulerProbe.drain(sc)
+    while (w.active.get() != 0 && System.currentTimeMillis() < deadline) {
+      Thread.sleep(50)
+      SchedulerProbe.drain(sc)
+    }
+    assert(w.active.get() == 0)
+  }
+
+  test("stream: a directory with more splits than cores converts in scan order, line for line") {
+    val got = watchingJobs { w =>
+      val out = capture(Array(unevenDir.toString))
+      SchedulerProbe.drain(spark.sparkContext)
+      assert(w.started.get() >= 10, "one job per file") // more than the session's 4 cores
+      out
+    }
+    assert(got.count(_ == '\n') == 1013)
+    assert(got == collectedJson(unevenDir.toString))
+  }
+
+  test("stream: a multi-row-group file whose splits include empty byte ranges converts in file order (JSON and CSV)") {
+    val dir = Files.createTempDirectory("multirg-stream").resolve("out").toString
+    spark.range(0, 20000).selectExpr("id", "concat('row-', id) AS s").coalesce(1)
+      .write.option("parquet.block.size", "16384").parquet(dir)
+    val file = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    withConf("spark.sql.files.maxPartitionBytes" -> "4096") {
+      val groups = graft.sources.ParquetMetadata.rowGroups(file).length
+      val splits = spark.read.parquet(file).rdd.getNumPartitions
+      // more splits than row groups: some splits hold no row group's midpoint
+      assert(groups > 1 && splits > groups && splits > spark.sparkContext.defaultParallelism,
+        s"groups=$groups splits=$splits")
+      assert(capture(Array(file)).split("\n").toSeq ==
+        (0 until 20000).map(i => s"""{"id":$i,"s":"row-$i"}"""))
+      assert(capture(Array("--csv", file)).split("\n").toSeq ==
+        (0 until 20000).map(i => s"$i,row-$i\r"))
+    }
+  }
+
+  /** One file with the most bytes but only 200 rows, so it is the first
+    * split and renders at once, then four small files of 200k compressible
+    * rows that each render for much longer: when the first split fails,
+    * or its block cannot be written, three jobs are still running. */
+  private lazy val racingDir: Path = {
+    def rows(n: Long, s: String) = spark.range(n).selectExpr("id % 3 AS k", s"$s AS s",
+      "named_struct('a', 1, 'b', array(1, 2, 3)) AS st")
+    val dir = fileDir("racing", rows(200, "concat_ws('', transform(sequence(1, 16), " +
+      "i -> sha2(cast(id * 100 + i AS string), 512)))") +: Seq.fill(4)(rows(200000, "'x'")))
+    val sizes = dir.toFile.listFiles().sortBy(_.getName).map(_.length)
+    assert(sizes.tail.forall(_ < sizes.head), sizes.toSeq)
+    dir
+  }
+
+  test("stream: at most defaultParallelism jobs in flight and none left after run, also when a split fails") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    watchingJobs { w =>
+      capture(Array(unevenDir.toString))
+      assertNoJobsLeft(w)
+      assert(w.max.get() <= parallelism && w.max.get() > 1, s"max active jobs ${w.max.get()}")
+    }
+    // the first split's file with its data pages overwritten; its footer
+    // stays intact, so only its scan task fails (Spark then fails every
+    // active job over the same RDD)
+    val bad = Files.createTempDirectory("corrupt")
+    racingDir.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.copy(f.toPath, bad.resolve(f.getName)))
+    val first = bad.resolve("part-00000.parquet")
+    val bytes = Files.readAllBytes(first)
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footerLen, 0xff.toByte)
+    Files.write(first, bytes)
+    watchingJobs { w =>
+      intercept[org.apache.spark.SparkException](capture(Array(bad.toString)))
+      assertNoJobsLeft(w)
+      assert(w.max.get() <= parallelism, s"max active jobs ${w.max.get()}")
+    }
+  }
+
+  test("stream: a failed write is an error and cancels the jobs in flight") {
+    /** Accepts `limit` bytes, then fails like a full disk. */
+    final class FailingSink(limit: Int) extends java.io.OutputStream {
+      private var written = 0
+      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        if (written + len > limit) throw new java.io.IOException("No space left on device")
+        written += len
+      }
+    }
+    watchingJobs { w =>
+      val out = new java.io.PrintStream(new FailingSink(1000), false, "UTF-8")
+      val e = intercept[java.io.IOException](
+        Pq2Json.run(spark, Pq2Json.parseArgs(Array(racingDir.toString)), out))
+      assert(e.getMessage == "write to output failed")
+      assertNoJobsLeft(w)
+    }
+  }
+
+  test("stream: the split setting stays on a session copy that keeps the caller's runtime confs") {
+    val key = "spark.sql.files.minPartitionNum"
+    capture(Array(unevenDir.toString))
+    assert(!spark.conf.getAll.contains(key))
+    // unannotated BINARY and no Spark schema in the footer, so the
+    // caller's binaryAsString decides how the column reads
+    val dir = Files.createTempDirectory("binary").resolve("b.parquet").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary bin; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(dir)).withType(schema).build()
+    val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try (0 until 3).foreach(i => writer.write(rows.newGroup().append("id", i.toLong).append("bin", s"b$i")))
+    finally writer.close()
+    val plain = capture(Array(dir))
+    assert(!plain.contains("\"bin\":\"b0\""), plain)
+    withConf("spark.sql.parquet.binaryAsString" -> "true") {
+      val asString = capture(Array(dir))
+      assert(asString.contains("\"bin\":\"b0\""), asString)
+      assert(asString == collectedJson(dir))
+    }
+    assert(!spark.conf.getAll.contains(key))
   }
 }
