@@ -67,14 +67,6 @@ object Bench {
     if (!ok) "-1"
     else String.valueOf(math.min(math.round(v * 10), 99L))
 
-  /** Wire key for one query: the numeric id in BASE 62
-    * (digits, lowercase, uppercase — "q185_..." -> "2Z"). Wire-key
-    * compaction #5 — full names (r1-r7), qNN (r8), bare decimal ids at
-    * 174 queries, base-36 at 189, base-62 at 202 (ids 36-61 return to
-    * one char; 2 chars now reach id 3843). Decode: index each char in
-    * "0-9a-zA-Z", most-significant first. bench_detail.json always
-    * carries full names. BenchFormatSpec pins uniqueness and the tail
-    * budget. */
   /** Wire form of the per-query values — THE PARSER CONTRACT (wire
     * compaction #7). A FULL run emits a position-keyed ARRAY: element i
     * is query i in SORTED full-name order, so the decode rule is
@@ -128,6 +120,14 @@ object Bench {
 
   private val B62 =
     "0123456789abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
+  /** Wire key for one query: the numeric id in BASE 62
+    * (digits, lowercase, uppercase — "q185_..." -> "2Z"). Wire-key
+    * compaction #5 — full names (r1-r7), qNN (r8), bare decimal ids at
+    * 174 queries, base-36 at 189, base-62 at 202 (ids 36-61 return to
+    * one char; 2 chars now reach id 3843). Decode: index each char in
+    * "0-9a-zA-Z", most-significant first. bench_detail.json always
+    * carries full names. BenchFormatSpec pins uniqueness and the tail
+    * budget. */
   def wireKey(name: String): String = {
     val id = name.split("_").head.stripPrefix("q")
     try {
@@ -254,11 +254,7 @@ object Bench {
     // before this).
     try {
       graft.functions.GraftFunctions.register(spark)
-      val wtopk = org.apache.spark.sql.functions.udaf(
-        new graft.functions.TopKAggregator.TopK(2),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
+      val wtopk = graft.operators.Vectors.topK(2)
       spark.range(0, 1000)
         .selectExpr("id % 7 AS g",
           "vec_dot(array(CAST(id AS DOUBLE), 2.0D), array(3.0D, 4.0D)) AS s", "id AS i")

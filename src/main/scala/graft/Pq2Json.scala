@@ -51,6 +51,12 @@ object Pq2Json {
     var a = Args()
     var i = 0
     var omitNulls, omitBags, omitLists, prune = false
+    def value(): String = {
+      i += 1
+      if (i >= argv.length)
+        throw new IllegalArgumentException(s"missing value for ${argv(i - 1)}")
+      argv(i)
+    }
     while (i < argv.length) {
       argv(i) match {
         case "--omit-nulls" => omitNulls = true
@@ -64,14 +70,11 @@ object Pq2Json {
         case "--cslschema" => a = a.copy(cslSchema = true)
         case "--rowgroups" => a = a.copy(rowGroups = true)
         case "-t" | "--timestamp" =>
-          i += 1
-          a = a.copy(opts = a.opts.copy(timestampMode = TimestampMode.parse(argv(i))))
+          a = a.copy(opts = a.opts.copy(timestampMode = TimestampMode.parse(value())))
         case "-c" | "--columns" =>
-          i += 1
-          a = a.copy(columns = Some(parseJsonStringArray(argv(i))))
+          a = a.copy(columns = Some(parseJsonStringArray(value())))
         case "-o" | "--output" =>
-          i += 1
-          a = a.copy(output = Some(argv(i)))
+          a = a.copy(output = Some(value()))
         case "-d" | "--distributed" => a = a.copy(distributed = true)
         case v if v.startsWith("-v") => // verbosity: accepted, unused
         case other if a.input == null => a = a.copy(input = other)
@@ -231,7 +234,7 @@ object Pq2Json {
           val projected = a.columns match {
             case Some(cols) =>
               val present = df.columns.toSet
-              df.select(cols.filter(present.contains).map(df.col): _*)
+              df.select(cols.filter(present.contains).map(KustoRender.exactCol): _*)
             case None => df
           }
           KustoRender.toKustoJson(projected, opts)

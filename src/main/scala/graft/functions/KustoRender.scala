@@ -95,10 +95,14 @@ object KustoRender {
 
   // ---- whole-row encodes (entry points 1 and 2, `converter.rs:30-59`) ----
 
+  /** The top-level column named exactly `name`: dots stay part of the
+    * name and embedded backticks are escaped by doubling. */
+  def exactCol(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
   /** JSONL encode: df -> single `json` column, one JSON object per row with
     * full Kusto semantics. Equivalent of `top_level_rows_to_json`. */
   def toKustoJson(df: DataFrame, opts: KustoRenderOptions = KustoRenderOptions()): DataFrame = {
-    val st = struct(df.columns.map(n => col(s"`$n`")).toIndexedSeq: _*)
+    val st = struct(df.columns.map(exactCol).toIndexedSeq: _*)
     df.select(expr2col(KustoJsonExpr(col2expr(st), opts)).as("json"))
   }
 
@@ -115,7 +119,7 @@ object KustoRender {
       case Some(cols) =>
         (cols.map(c => !present.contains(c)), cols.filter(present.contains))
     }
-    val st = struct(selected.map(n => col(s"`$n`")).toIndexedSeq: _*)
+    val st = struct(selected.map(exactCol).toIndexedSeq: _*)
     df.select(expr2col(KustoCsvLineExpr(col2expr(st), opts, slots)).as("line"))
   }
 

@@ -87,15 +87,6 @@ object CorpusQueries extends QueryModule {
     resolved.select(col("node").as("doc_id"), col("cluster"))
   }
 
-  /** q158's engine (factored so ScaleSpec can drive planted graphs):
-    * triangle count + global clustering coefficient of a (doc_a, doc_b)
-    * pair list via DEGREE-ORIENTED wedge closing. Each edge points from
-    * its (degree, id)-smaller endpoint, which bounds every out-degree at
-    * O(sqrt(m)) — a hub node with millions of neighbors contributes ZERO
-    * wedges from its own side (all its edges point in), so the wedge
-    * join's volume is Σ outdeg² ≤ m^1.5 instead of the naive Σ deg²
-    * which the hub makes quadratic. `orientedEdges` is exposed for the
-    * structural proof. */
   /** Number of byte-pair merges the q243 BPE trainer learns. Bounded and
     * small on purpose: each round is one vocabulary-sized pair count +
     * a 1-row argmax + a map-side merge apply, and the DuckDB oracle
@@ -217,11 +208,6 @@ object CorpusQueries extends QueryModule {
       .select(explode(expr(toksSql)).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
-  /** Encode an arbitrary (word, freq) dictionary with the FROZEN q243
-    * merge table truncated to `rounds` — the artifact-application path
-    * (q244/q248 on the training dictionary, q252 on a drift cohort):
-    * chained map-side literal replaces against the broadcast 1-row wide
-    * merge frame, then symbols = spaces - 1. */
   /** The frozen merge table as ONE wide row (l1/r1..lN/rN, missing
     * rounds as the unmatchable ''-pattern) — the broadcast-able form
     * every encode path rides: [[bpeEncodeDict]] here, and q255's
@@ -241,6 +227,11 @@ object CorpusQueries extends QueryModule {
     merges.agg(wideCols.head, wideCols.tail: _*)
   }
 
+  /** Encode an arbitrary (word, freq) dictionary with the FROZEN q243
+    * merge table truncated to `rounds` — the artifact-application path
+    * (q244/q248 on the training dictionary, q252 on a drift cohort):
+    * chained map-side literal replaces against the broadcast 1-row wide
+    * merge frame, then symbols = spaces - 1. */
   private[graft] def bpeEncodeDict(s: SparkSession, dir: String,
       words: DataFrame, rounds: Int): DataFrame =
     bpeEncodeDictWith(bpeWideMerges(s, dir, rounds), words, rounds)
@@ -435,21 +426,6 @@ object CorpusQueries extends QueryModule {
         propagationCap = 30).localCheckpoint()
     }
 
-  /** INCREMENTAL cluster-map maintenance (q249's engine): admit a
-    * delta batch into the q59 component labeling WITHOUT rebuilding the
-    * pair graph. The stored index is the memoized shingle-key frame
-    * ([[LlmQueries.shingleSets]]) plus the memoized cluster map
-    * ([[pairClusters]]) — at 100 TB both are materialized stage
-    * outputs, read not recomputed. Each delta doc probes the df-capped
-    * inverted index (the q129 path: only cold keys generate candidates,
-    * completeness for jac >= 0.5 within the cap's documented contract),
-    * verified pairs CONTRACT matched corpus docs to their stored
-    * cluster labels, and component resolution runs on the contracted
-    * bipartite graph (new docs ∪ touched clusters — delta-sized, never
-    * corpus-sized): a delta doc matching two clusters MERGES them, and
-    * the merged component takes the min label exactly as a full rebuild
-    * would. New-new delta edges are out of contract (the q129/q247
-    * ingestion discipline); docs matching nothing become singletons. */
   /** The q249/q250 arriving batch's shingle-key frame (new_id, dsz,
     * dhs), memoized ("delta_sets" — a batch is materialized once, then
     * admitted AND audited): four slices at +20000 — exact copies
@@ -735,6 +711,21 @@ object CorpusQueries extends QueryModule {
   private[graft] val TokenizerDriftMicro = 20000L
   private[graft] val DeadVocabPpm = 100000L
 
+  /** INCREMENTAL cluster-map maintenance (q249's engine): admit a
+    * delta batch into the q59 component labeling WITHOUT rebuilding the
+    * pair graph. The stored index is the memoized shingle-key frame
+    * ([[LlmQueries.shingleSets]]) plus the memoized cluster map
+    * ([[pairClusters]]) — at 100 TB both are materialized stage
+    * outputs, read not recomputed. Each delta doc probes the df-capped
+    * inverted index (the q129 path: only cold keys generate candidates,
+    * completeness for jac >= 0.5 within the cap's documented contract),
+    * verified pairs CONTRACT matched corpus docs to their stored
+    * cluster labels, and component resolution runs on the contracted
+    * bipartite graph (new docs ∪ touched clusters — delta-sized, never
+    * corpus-sized): a delta doc matching two clusters MERGES them, and
+    * the merged component takes the min label exactly as a full rebuild
+    * would. New-new delta edges are out of contract (the q129/q247
+    * ingestion discipline); docs matching nothing become singletons. */
   private[graft] def incrementalClustersBuild(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s) // fnv64
     val idx = LlmQueries.shingleSets(s, dir)
@@ -804,6 +795,15 @@ object CorpusQueries extends QueryModule {
       when(aFirst, col("db")).otherwise(col("da")).as("ddeg"))
   }
 
+  /** q158's engine (factored so ScaleSpec can drive planted graphs):
+    * triangle count + global clustering coefficient of a (doc_a, doc_b)
+    * pair list via DEGREE-ORIENTED wedge closing. Each edge points from
+    * its (degree, id)-smaller endpoint, which bounds every out-degree at
+    * O(sqrt(m)) — a hub node with millions of neighbors contributes ZERO
+    * wedges from its own side (all its edges point in), so the wedge
+    * join's volume is Σ outdeg² ≤ m^1.5 instead of the naive Σ deg²
+    * which the hub makes quadratic. `orientedEdges` is exposed for the
+    * structural proof. */
   private[graft] def triangleCensus(rawPairs: DataFrame): DataFrame = {
     val pairs = rawPairs.localCheckpoint()
     val deg = pairs.select(col("doc_a").as("n"))
@@ -4342,10 +4342,6 @@ object CorpusQueries extends QueryModule {
           .cast("double") / lit(1000000.0)).as("kept_share"))
   }
 
-  /** q192's per-doc repetition stats, factored for reuse by the q200
-    * scorecard and planted tests: one row per doc with the raw counts,
-    * the half-up ppm scores, and the integer cross-multiplied pass
-    * flags (see the q192 entry comment for the rules). Map-side only. */
   /** q137's hashed-bag-of-words linear scorer, factored so the
     * classifier-eval queries (q226 AUC, q227 calibration) share the
     * exact scoring chain they evaluate. Output one row per doc:
@@ -4406,6 +4402,10 @@ object CorpusQueries extends QueryModule {
           .as("auc"))
   }
 
+  /** q192's per-doc repetition stats, factored for reuse by the q200
+    * scorecard and planted tests: one row per doc with the raw counts,
+    * the half-up ppm scores, and the integer cross-multiplied pass
+    * flags (see the q192 entry comment for the rules). Map-side only. */
   private[graft] def repetitionStats(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("source"), expr(toksSql).as("tk"))
@@ -4517,13 +4517,6 @@ object CorpusQueries extends QueryModule {
       .orderBy(col("source"))
   }
 
-  /** The q165 subword chain, shared with q167's packing: corpus-derived
-    * greedy-longest-match vocabulary (top 128/64/32 character 2/3/4-grams
-    * by frequency under the count-DESC, gram-ASC total order) and the
-    * integer MaxMatch fold (state s = 4*count + pending_skip) — both
-    * engine-independent, so consumers stay fully row-level-oracled.
-    * Returns one row per document: (doc_id, lang, source, n_words,
-    * n_subtok). */
   /** Memoized ([[StageMemo]] "subword_counts"): the per-doc subword
     * statistic is a materialized corpus artifact (the tokenizer-audit
     * table a pipeline computes once), and its three gate consumers
@@ -4535,6 +4528,13 @@ object CorpusQueries extends QueryModule {
       subwordCountsBuild(s, dir).localCheckpoint()
     }
 
+  /** The q165 subword chain, shared with q167's packing: corpus-derived
+    * greedy-longest-match vocabulary (top 128/64/32 character 2/3/4-grams
+    * by frequency under the count-DESC, gram-ASC total order) and the
+    * integer MaxMatch fold (state s = 4*count + pending_skip) — both
+    * engine-independent, so consumers stay fully row-level-oracled.
+    * Returns one row per document: (doc_id, lang, source, n_words,
+    * n_subtok). */
   private[graft] def subwordCountsBuild(s: SparkSession, dir: String): DataFrame = {
     val words = spreadScan(Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("text")))
@@ -4736,19 +4736,6 @@ object CorpusQueries extends QueryModule {
         col("dup_frac"), col("clean_text"))
   }
 
-  /** q253's engine over a (doc_id, tk) frame, factored so ScaleSpec can
-    * drive planted span geometries: every token position covered by a
-    * duplicated 8-gram (>= 2 occurrences anywhere in the corpus, WITHIN
-    * a doc included) merges gaps-and-islands into maximal per-doc
-    * spans; spans of >= minLen tokens are the removable substrings.
-    * Grams fingerprint to fnv64 BEFORE the exchange (equality is all
-    * the census needs; 8-byte keys, not 8-word strings). NOT
-    * materialized despite the gram stream's 2 consumers (hot census +
-    * cover probe): measured, the checkpoint write+read costs MORE than
-    * recomputing the map-side tokenize→gram→hash pipeline (x10 probe:
-    * 3.6 s recompute vs 6.0 s checkpointed), and both consumers shuffle
-    * on the same key, so ReusedExchange dedupes the heavy exchange
-    * whenever the hot side is not broadcast. */
   /** q253/q260's shared planted corpus: the documents plus, for each
     * %10==6 doc, an excerpt doc (+60000) sharing the source's first 40
     * tokens then diverging into 5 doc-unique tokens — both consumers
@@ -4796,6 +4783,19 @@ object CorpusQueries extends QueryModule {
             " x -> x.tok)"))).as("fp"))
   }
 
+  /** q253's engine over a (doc_id, tk) frame, factored so ScaleSpec can
+    * drive planted span geometries: every token position covered by a
+    * duplicated 8-gram (>= 2 occurrences anywhere in the corpus, WITHIN
+    * a doc included) merges gaps-and-islands into maximal per-doc
+    * spans; spans of >= minLen tokens are the removable substrings.
+    * Grams fingerprint to fnv64 BEFORE the exchange (equality is all
+    * the census needs; 8-byte keys, not 8-word strings). NOT
+    * materialized despite the gram stream's 2 consumers (hot census +
+    * cover probe): measured, the checkpoint write+read costs MORE than
+    * recomputing the map-side tokenize→gram→hash pipeline (x10 probe:
+    * 3.6 s recompute vs 6.0 s checkpointed), and both consumers shuffle
+    * on the same key, so ReusedExchange dedupes the heavy exchange
+    * whenever the hot side is not broadcast. */
   private[graft] def substringSpans(s: SparkSession, corpus: DataFrame,
       minLen: Int): DataFrame = {
     graft.functions.GraftFunctions.register(s) // fnv64
@@ -4902,20 +4902,12 @@ object CorpusQueries extends QueryModule {
     * doc_id), so the shuffle carries O(sources x K) buffer rows no
     * matter how skewed the mega-domain. `private[graft]` for the
     * ScaleSpec planted-skew proof. */
-  private[graft] def sourceCap(d: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new graft.functions.TopKAggregator.TopK(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
-    d.select(col("source"), col("doc_id"), expr(uhashSql).as("h"))
-      // uhash < 2^32 is exact in a double, so the negation is lossless
-      .groupBy(col("source"))
-      .agg(topk((-col("h")).cast("double"), col("doc_id")).as("top"))
-      .select(col("source"), posexplode(col("top")))
-      .select(col("source"), (col("pos") + 1).as("rnk"),
-        col("col._2").as("doc_id"), (-col("col._1")).cast("long").as("h"))
+  private[graft] def sourceCap(d: DataFrame, k: Int): DataFrame =
+    // uhash < 2^32 is exact in a double, so the negation is lossless
+    Vectors.ranked(d.select(col("source"), col("doc_id"), expr(uhashSql).as("h")),
+        k, Seq("source"), (-col("h")).cast("double"), col("doc_id"), "doc_id", "h")
+      .select(col("source"), col("rnk"), col("doc_id"), (-col("h")).cast("long").as("h"))
       .orderBy(col("source"), col("rnk"))
-  }
 
   /** Word n-grams of a tokens column (optionally distinct), zip-fusing n
     * shifted slices so the (re-inlined) tokenizer evaluates once per ROW

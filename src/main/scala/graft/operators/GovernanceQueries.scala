@@ -24,13 +24,6 @@ object GovernanceQueries extends QueryModule {
 
   private val Micro = 1000000L
 
-  /** Half-up a/b onto the 1e-6 grid, nonnegative operands, as a SQL
-    * fragment over DECIMAL(38,0) columns: (2a*1e6 + b) DIV (2b).
-    * private[graft]: the one definition of the overflow-safe micro
-    * grid — the BPE fertility family (CorpusQueries, StreamingQueries
-    * q255) shares it, so a rounding-rule change can never fork the
-    * engine sites (the oracles' HUGEINT arithmetic is the other
-    * half of the contract). */
   /** Exact order-insensitive double sum: route through DECIMAL(38,6)
     * then back to double — ONE definition (r14 review: it existed as
     * module-private copies in Relational/Streaming/Extended). See the
@@ -38,6 +31,13 @@ object GovernanceQueries extends QueryModule {
   private[graft] def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast(DecimalType(38, 6))).cast("double")
 
+  /** Half-up a/b onto the 1e-6 grid, nonnegative operands, as a SQL
+    * fragment over DECIMAL(38,0) columns: (2a*1e6 + b) DIV (2b).
+    * private[graft]: the one definition of the overflow-safe micro
+    * grid — the BPE fertility family (CorpusQueries, StreamingQueries
+    * q255) shares it, so a rounding-rule change can never fork the
+    * engine sites (the oracles' HUGEINT arithmetic is the other
+    * half of the contract). */
   private[graft] def gridDiv(num: String, den: String): String =
     s"(2 * CAST($num AS DECIMAL(38,0)) * $Micro + $den) DIV (2 * CAST($den AS DECIMAL(38,0)))"
 

@@ -498,10 +498,6 @@ object IngestQueries extends QueryModule {
     // row_number, proven equal to it row-level. kept_sum (sum of the
     // kept doc_ids) pins the SELECTION, not just the counts.
     "q278_domain_caps" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(DomainCap),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
       val hosts = Tables.documents(s, dir)
         .select(col("doc_id"), expr(HostSql).as("host"))
       withRegistrableDomain(hosts)
@@ -512,7 +508,7 @@ object IngestQueries extends QueryModule {
             "16, 10) AS BIGINT)"))
         .groupBy(col("dom"))
         .agg(count(lit(1)).as("n_docs"),
-          topk(col("score").cast("double"), col("doc_id")).as("tk"))
+          Vectors.topK(DomainCap)(col("score").cast("double"), col("doc_id")).as("tk"))
         .select(col("dom"), col("n_docs"),
           least(col("n_docs"), lit(DomainCap.toLong)).as("n_kept"),
           (col("n_docs") - least(col("n_docs"), lit(DomainCap.toLong)))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Gates._
+import Vectors._
 
 /** The LLM-training-data pipeline surface (BASELINE north star): text
   * analysis, document fingerprinting, exact/fuzzy deduplication, and
@@ -28,7 +29,6 @@ object LlmQueries extends QueryModule {
 
   // ---- shared text fragments (kept in sync with the DuckDB oracles) ------
 
-  /** whitespace-normalized lowercase text */
   /** Whitespace class for every engine-side tokenizer/normalizer,
     * written as the EXPLICIT character class equal to RE2's \s: Java's
     * \s additionally matches vertical tab \x0B, so a VT in a document
@@ -41,6 +41,7 @@ object LlmQueries extends QueryModule {
   // singly-escaped class had its \f/\r eaten by the SQL unescape,
   // silently making 'f' and 'r' whitespace (caught at the q44 gate)
   private[graft] val WsClass = "[ \\\\t\\\\n\\\\f\\\\r]"
+  /** whitespace-normalized lowercase text */
   private[operators] val normSql =
     s"lower(trim(regexp_replace(text, '$WsClass+', ' ')))"
   /** whitespace tokens. IMPORTANT: never inline this inside an array
@@ -605,9 +606,6 @@ object LlmQueries extends QueryModule {
     d.unionByName(d.select((col("doc_id") + PlantedOffset).as("doc_id"), col("text")))
   }
 
-  /** Documents plus a near-duplicate copy (last 5 tokens dropped).
-    * `private[operators]`: CorpusQueries' cluster-keeper query (q135)
-    * scores the SAME planted corpus the q34/q59 pair graph runs over. */
   /** Planted near-dup copies live at doc_id + this offset — shared by
     * every consumer that must map a planted id back to its original's
     * metadata (q239's source universe) so the convention has one
@@ -616,6 +614,9 @@ object LlmQueries extends QueryModule {
     * necessarily textual. */
   private[graft] val PlantedOffset = 10000L
 
+  /** Documents plus a near-duplicate copy (last 5 tokens dropped).
+    * `private[operators]`: CorpusQueries' cluster-keeper query (q135)
+    * scores the SAME planted corpus the q34/q59 pair graph runs over. */
   private[operators] def plantedNear(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     d.unionByName(withTokens(d).select((col("doc_id") + PlantedOffset).as("doc_id"),
@@ -662,12 +663,36 @@ object LlmQueries extends QueryModule {
     * cosine against the original is exactly 1.0 and its normalized
     * components are bit-identical — deterministic planted near-dups. */
   private def plantedVecs(s: SparkSession, dir: String): DataFrame = {
-    val e = vecTable(s, dir)
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    val e = vectors(s, dir, "vec_id", "label")
     e.unionByName(e.select((col("vec_id") + 100000).as("vec_id"), col("label"),
       expr("transform(v, x -> x * 2.0D)").as("v")))
   }
+
+  /** L2-normalized vectors (vec_id, nv) of `e` (vec_id, v). */
+  private def unitVecs(e: DataFrame): DataFrame =
+    e.withColumn("nv", expr(s"transform(v, x -> x / ${normOf("v")})"))
+      .select(col("vec_id"), col("nv"))
+
+  /** One Lloyd round over unit vectors `e` (vec_id, nv) of `n` rows:
+    * E-step argmin (d2, cid) against the ⌈√n⌉ smallest-vec_id seeds,
+    * then the exact fixed-point CentroidFixed M-step. Returns the
+    * checkpointed cells (cid, cv). */
+  private def lloydCells(e: DataFrame, n: Long): DataFrame = {
+    val seeds = smallestIdSeeds(e, sqrtCells(n), "cid", col("nv").as("cv"))
+    nearestCentroid(e, seeds, "nv", "cv", "nv")
+      .select(col("cid"), col("nv"))
+      .groupBy(col("cid"))
+      .agg(centroid(col("nv")).as("cv"))
+      .localCheckpoint()
+  }
+
+  /** Each unit vector's one-cell residency against `cells` (cid, cv):
+    * (vec_id, cell, av, anrm), checkpointed. */
+  private def cellMembers(e: DataFrame, cells: DataFrame): DataFrame =
+    nearestCentroid(e, cells, "nv", "cv", "nv")
+      .select(col("vec_id"), col("cid").as("cell"), col("nv").as("av"))
+      .withColumn("anrm", expr(normOf("av")))
+      .localCheckpoint()
 
   /** The FROZEN semantic index over the raw embeddings table, shared by
     * the batch admission gate (q245) and the streaming admission
@@ -680,46 +705,10 @@ object LlmQueries extends QueryModule {
     * "sem_members"): a pipeline trains the index ONCE and every
     * admission path reads it — at 100 TB the members frame IS the index
     * store. */
-  /** Squared Euclidean distance in the EXACT op order the DuckDB
-    * oracles replicate (dot(v,v) - 2·dot(v,cc) + dot(cc,cc)) — ONE
-    * definition for the train / admission / rebuild E-steps (r14
-    * review: three hand copies could silently fork the assignment). */
-  private def d2Expr(v: String, cc: String) = expr(s"vec_dot($v, $v)") -
-    lit(2.0) * expr(s"vec_dot($v, $cc)") + expr(s"vec_dot($cc, $cc)")
-
   private[graft] def semIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s) // vec_dot
-    def d2(v: String, cc: String) = d2Expr(v, cc)
-    lazy val ex = vecTable(s, dir)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nv", expr(s"transform(v, x -> x / ${normSqlOf("v")})"))
-      .select(col("vec_id"), col("nv"))
-    val cells = StageMemo(s, dir, "sem_cells") {
-      val n = ex.count()
-      val c = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val seeds = ex.orderBy(col("vec_id")).limit(c)
-        .select(col("vec_id").cast("int").as("cid"), col("nv").as("cv"))
-        .localCheckpoint()
-      val assigned1 = ex.crossJoin(broadcast(seeds))
-        .withColumn("d2", d2("nv", "cv"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cid"), col("nv"))).as("m"))
-        .select(col("m.cid").as("cid"), col("m.nv").as("nv"))
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
-      assigned1.groupBy(col("cid"))
-        .agg(centroid(col("nv")).as("cv"))
-        .localCheckpoint()
-    }
-    val members = StageMemo(s, dir, "sem_members") {
-      ex.crossJoin(broadcast(cells))
-        .withColumn("d2", d2("nv", "cv"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cid"), col("nv"))).as("m"))
-        .select(col("vec_id"), col("m.cid").as("cell"), col("m.nv").as("av"))
-        .withColumn("anrm", expr(normSqlOf("av")))
-        .localCheckpoint()
-    }
+    lazy val ex = unitVecs(vectors(s, dir, "vec_id"))
+    val cells = StageMemo(s, dir, "sem_cells") { lloydCells(ex, ex.count()) }
+    val members = StageMemo(s, dir, "sem_members") { cellMembers(ex, cells) }
     (cells, members)
   }
 
@@ -733,19 +722,8 @@ object LlmQueries extends QueryModule {
     * earlier batch members (new_hits), keep iff neither. */
   private[graft] def semAdmissionRecord(s: SparkSession, dir: String,
       exMembers: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // vec_dot
     val (cells, _) = semIndex(s, dir)
-    def d2(v: String, cc: String) = d2Expr(v, cc)
-    val nw = admissionDelta(s, dir)
-      .withColumn("nv", expr(s"transform(v, x -> x / ${normSqlOf("v")})"))
-      .select(col("vec_id"), col("nv"))
-    val nwAsg = nw.crossJoin(broadcast(cells))
-      .withColumn("d2", d2("nv", "cv"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("cid"), col("nv"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cell"), col("m.nv").as("av"))
-      .withColumn("anrm", expr(normSqlOf("av")))
-      .localCheckpoint()
+    val nwAsg = cellMembers(unitVecs(admissionDelta(s, dir)), cells)
     // the member build sides carry full vectors and GROW WITH THE
     // CORPUS (exMembers is the stored artifact) — the shuffle_hash
     // preference is gated on the per-task build budget at the vector
@@ -777,13 +755,6 @@ object LlmQueries extends QueryModule {
       .orderBy(col("vec_id"))
   }
 
-  /** q259's engine over the stored members frame (vec_id, cell, av,
-    * anrm) and a (vec_id) tombstone set, factored so ScaleSpec can
-    * drive multi-cell geometries. Touched cells come from the erased
-    * vectors' STORED residencies (members is keyed by vec_id — the
-    * lookup is one batch-sized semi-join, never a members scan);
-    * untouched cells pass through whole, only touched cells pay the
-    * anti-join. Projected to scalar (vec_id, cell) for the gate. */
   /** The q259-compacted members as a memoized stage
     * ("compacted_members"): the post-swap sem-index era — q259 ships
     * it, the q262 validate-then-swap audit reads the same stored frame
@@ -810,6 +781,13 @@ object LlmQueries extends QueryModule {
   // identically. The postings/shingle compactors DO need the chained
   // proof (q270/q271) because their untouched-branch routing and
   // emptied-key drops are era-dependent.
+  /** q259's engine over the stored members frame (vec_id, cell, av,
+    * anrm) and a (vec_id) tombstone set, factored so ScaleSpec can
+    * drive multi-cell geometries. Touched cells come from the erased
+    * vectors' STORED residencies (members is keyed by vec_id — the
+    * lookup is one batch-sized semi-join, never a members scan);
+    * untouched cells pass through whole, only touched cells pay the
+    * anti-join. Projected to scalar (vec_id, cell) for the gate. */
   private[graft] def compactMembers(members: DataFrame, del: DataFrame): DataFrame = {
     // size-gated hints ([[Gates.batchHint]] ladder, r15
     // verdict item 1): del is batch-sized in production but the sweep
@@ -834,9 +812,7 @@ object LlmQueries extends QueryModule {
     * second-generation copies of vec_id%6==0 at +400000 (dup of BOTH
     * the indexed original and the earlier +200000 batch member). */
   private[graft] def admissionDelta(s: SparkSession, dir: String): DataFrame = {
-    val base = vecTable(s, dir)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    val base = vectors(s, dir, "vec_id")
     base.filter(col("vec_id") % 3 === 0)
       .select((col("vec_id") + 200000).as("vec_id"),
         expr("transform(v, x -> x * 2.0D)").as("v"))
@@ -846,6 +822,51 @@ object LlmQueries extends QueryModule {
       .unionByName(base.filter(col("vec_id") % 6 === 0)
         .select((col("vec_id") + 400000).as("vec_id"),
           expr("transform(v, x -> x * 4.0D)").as("v")))
+  }
+
+  /** q146's label-stratified scale-adaptive cell table, shared with the
+    * NN-descent refinement (q169): each label contributes a quota of
+    * ⌈√n / |labels|⌉ seed vectors (its smallest vec_ids, picked by the
+    * bounded-heap TopK partial agg — exchange = labels × quota rows,
+    * never a window), so total cells ≥ max(|labels|, ⌈√n⌉): the IVF
+    * sizing rule with a per-label coverage floor. The two sizing counts
+    * are tiny agg actions (the q155 precedent); ids are exact in double
+    * far beyond the corpus range (2^53). localCheckpointed: the table
+    * is broadcast into BOTH aggregate branches of [[knnGraphEdges]] AND
+    * counted for the salt fanout — without the cut each consumer
+    * re-runs the seed selection (3 corpus scans). */
+  private def stratifiedCells(s: SparkSession, e: DataFrame): DataFrame = {
+    val n = probeCount(e) // memo-shared with the edge gates
+    val nLab = math.max(1L,
+      e.agg(countDistinct(col("label"))).head().getLong(0))
+    val quota = math.max(1,
+      math.ceil(math.sqrt(n.toDouble) / nLab.toDouble).toInt)
+    val seedIds = e.groupBy(col("label"))
+      .agg(topK(quota)((-col("vec_id")).cast("double"), col("vec_id")).as("top"))
+      .select(explode(col("top")).as("t"))
+      .select(col("t._2").as("vec_id"))
+    e.join(broadcast(seedIds), Seq("vec_id"))
+      .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"),
+        col("nrm").as("cnrm"))
+      .localCheckpoint()
+  }
+
+  /** q169's hub-bounded undirected adjacency over a (src_id, nbr_id)
+    * k-NN edge list: all forward edges (out-degree k by construction)
+    * plus AT MOST 5 reverse edges per node — its 5 smallest
+    * in-neighbor ids, picked by the bounded-heap TopK partial agg (the
+    * reverse-neighbor SAMPLING of the NN-descent algorithm). Caps every
+    * adjacency degree at k+5, so the 2-hop expand is ≤ (k+5)²·n rows no
+    * matter how skewed the in-degree distribution is — the structural
+    * defense against cosine hubness. `private[graft]` so LlmSpec
+    * can prove the bound on a planted star. */
+  private[graft] def descentAdjacency(edges: DataFrame): DataFrame = {
+    val fw = edges.select(col("src_id"), col("nbr_id"))
+    val rev = fw.groupBy(col("nbr_id"))
+      .agg(topK(5)((-col("src_id")).cast("double"), col("src_id")).as("top"))
+      .select(col("nbr_id").as("src_id"), explode(col("top")).as("t"))
+      .select(col("src_id"), col("t._2").as("nbr_id"))
+    fw.unionAll(rev)
   }
 
   /** Shared kNN-graph core (k = 5) for q146/q155: blocked all-corpus
@@ -868,59 +889,6 @@ object LlmQueries extends QueryModule {
     * the per-task build budget) because the (cell, salt) keys are
     * uniform by construction and sort-merge would sort millions of
     * 2x64-double pair-precursor rows per side. */
-  /** q146's label-stratified scale-adaptive cell table, shared with the
-    * NN-descent refinement (q169): each label contributes a quota of
-    * ⌈√n / |labels|⌉ seed vectors (its smallest vec_ids, picked by the
-    * bounded-heap TopK partial agg — exchange = labels × quota rows,
-    * never a window), so total cells ≥ max(|labels|, ⌈√n⌉): the IVF
-    * sizing rule with a per-label coverage floor. The two sizing counts
-    * are tiny agg actions (the q155 precedent); ids are exact in double
-    * far beyond the corpus range (2^53). localCheckpointed: the table
-    * is broadcast into BOTH aggregate branches of [[knnGraphEdges]] AND
-    * counted for the salt fanout — without the cut each consumer
-    * re-runs the seed selection (3 corpus scans). */
-  private def stratifiedCells(s: SparkSession, e: DataFrame): DataFrame = {
-    val n = probeCount(e) // memo-shared with the edge gates
-    val nLab = math.max(1L,
-      e.agg(countDistinct(col("label"))).head().getLong(0))
-    val quota = math.max(1,
-      math.ceil(math.sqrt(n.toDouble) / nLab.toDouble).toInt)
-    val seedTop = udaf(new graft.functions.TopKAggregator.TopK(quota),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
-    val seedIds = e.groupBy(col("label"))
-      .agg(seedTop((-col("vec_id")).cast("double"), col("vec_id")).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._2").as("vec_id"))
-    e.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-      .localCheckpoint()
-  }
-
-  /** q169's hub-bounded undirected adjacency over a (src_id, nbr_id)
-    * k-NN edge list: all forward edges (out-degree k by construction)
-    * plus AT MOST 5 reverse edges per node — its 5 smallest
-    * in-neighbor ids, picked by the bounded-heap TopK partial agg (the
-    * reverse-neighbor SAMPLING of the NN-descent algorithm). Caps every
-    * adjacency degree at k+5, so the 2-hop expand is ≤ (k+5)²·n rows no
-    * matter how skewed the in-degree distribution is — the structural
-    * defense against cosine hubness. `private[graft]` so LlmSpec
-    * can prove the bound on a planted star. */
-  private[graft] def descentAdjacency(edges: DataFrame): DataFrame = {
-    val revTop = udaf(new graft.functions.TopKAggregator.TopK(5),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
-    val fw = edges.select(col("src_id"), col("nbr_id"))
-    val rev = fw.groupBy(col("nbr_id"))
-      .agg(revTop((-col("src_id")).cast("double"), col("src_id")).as("top"))
-      .select(col("nbr_id").as("src_id"), explode(col("top")).as("t"))
-      .select(col("src_id"), col("t._2").as("nbr_id"))
-    fw.unionAll(rev)
-  }
-
   private def knnGraphEdges(s: SparkSession, e: DataFrame,
       cells: DataFrame): DataFrame = knnGraphEdgesOn(s, e, e, cells)
 
@@ -935,32 +903,14 @@ object LlmQueries extends QueryModule {
     * the split costs nothing. */
   private def knnGraphEdgesOn(s: SparkSession, build: DataFrame,
       probe: DataFrame, cells: DataFrame): DataFrame = {
-    def scoredOn(e: DataFrame) = e.crossJoin(broadcast(cells))
-      .withColumn("cell_score",
-        expr("vec_dot(v, cv)") / (col("nrm") * col("cnrm")))
     // corpus side: each vector lives in exactly ONE cell (q46 argmax)
-    val withCell = scoredOn(build).groupBy(col("vec_id"))
-      .agg(max(struct(col("cell_score"), (-col("cell")).as("negc"),
-        col("v"), col("nrm"))).as("m"))
-      .select(col("vec_id").as("nbr_id"), (-col("m.negc")).as("cell"),
-        col("m.v").as("bv"), col("m.nrm").as("bnrm"))
-    // probe side: every node's top-2 cells (bounded heap, ties by cell
-    // asc — deterministic), payload carried by first() in the same agg
-    val top2 = udaf(new graft.functions.TopKAggregator.TopK(2),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
-    val probes = scoredOn(probe).groupBy(col("vec_id"))
-      .agg(top2(col("cell_score"), col("cell").cast("long")).as("top"),
-        first(col("v")).as("av"), first(col("nrm")).as("anrm"))
-      .select(col("vec_id").as("src_id"), col("av"), col("anrm"),
-        explode(col("top")).as("t"))
-      .select(col("src_id"), col("av"), col("anrm"),
-        col("t._2").cast("int").as("cell"))
-    val topk = udaf(new graft.functions.TopKAggregator.TopK(5),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
+    val withCell = nearestCell(cellScores(build, cells), "v", "nrm")
+      .select(col("vec_id").as("nbr_id"), col("cell"),
+        col("v").as("bv"), col("nrm").as("bnrm"))
+    // probe side: every node's top-2 cells, payload carried by first()
+    // in the same agg
+    val probes = probeCells(cellScores(probe, cells), "src_id",
+      "av" -> first(col("v")), "anrm" -> first(col("nrm")))
     val nCells = cells.count().toInt
     val fanout = math.max(1,
       s.sparkContext.defaultParallelism / math.max(nCells, 1))
@@ -983,10 +933,10 @@ object LlmQueries extends QueryModule {
       .withColumn("score",
         round(expr("vec_dot(av, bv)") / (col("anrm") * col("bnrm")), 4))
       .groupBy(col("src_id"))
-      .agg(topk(col("score"), col("nbr_id")).as("top"))
-      // rank + score ride along (the heap emits in (score DESC, nbr_id
-      // ASC) order): q146/q155 count edges, q169 reads the id pairs,
-      // q175 filters rnk = 1 for the mutual-top-1 join
+      .agg(topK(5)(col("score"), col("nbr_id")).as("top"))
+      // rank + score ride along (the [[Vectors.ranked]] tail, heap
+      // element named `t`): q146/q155 count edges, q169 reads the id
+      // pairs, q175 filters rnk = 1 for the mutual-top-1 join
       .select(col("src_id"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("src_id"), col("t._2").as("nbr_id"),
         col("t._1").as("score"), (col("pos") + 1).as("rnk"))
@@ -1145,16 +1095,8 @@ object LlmQueries extends QueryModule {
       .filter(col("hamming") <= 6)
   }
 
-  /** Ordered-fold dot product and norms — index order on both engines.
-    * vec_dot is the codegen'd [[graft.functions.VecDot]] (registered by
-    * each vector query's builder): bit-identical to the HOF
-    * `aggregate(zip_with(...))` fold it replaced — same left-to-right
-    * IEEE sum from +0.0 — but one fused primitive loop inside the
-    * whole-stage-codegen span instead of interpreted lambdas plus a
-    * zipped-array allocation per PAIR. norm reuses it as vec_dot(v, v)
-    * (acc + x*x in index order, exactly the old sum-of-squares fold). */
+  /** The pair dot product, see [[Vectors.normOf]]. */
   private val dotSql = "vec_dot(av, bv)"
-  private def normSqlOf(v: String) = s"sqrt(vec_dot($v, $v))"
 
   /** q132's PQ training + encode stage, exposed so the spec can pin
     * mechanism parity (the engine's chosen code per (vector, subspace)
@@ -1166,30 +1108,22 @@ object LlmQueries extends QueryModule {
     * so the n x codes stream partial-aggregates map-side and the encode
     * exchange carries M=8 rows per vector. */
   private[graft] def pqEncode(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s) // vec_dot
-    val e = vecTable(s, dir)
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-    val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
+    val e = vectors(s, dir, "vec_id", "label")
     val cells = e.groupBy(col("label")).agg(centroid(col("v")).as("cv"))
       .select(col("label").as("code"), col("cv"))
-    val codebook = cells
-      .select(col("code"), explode(expr(
-        "transform(sequence(0, 7), m -> struct(m AS m, slice(cv, m*8+1, 8) AS c8))")).as("x"))
-      .select(col("code"), col("x.m").as("m"), col("x.c8").as("c8"))
-      .withColumn("nc", expr("vec_dot(c8, c8)"))
-    val sub = e.select(col("vec_id"), explode(expr(
-        "transform(sequence(0, 7), m -> struct(m AS m, slice(v, m*8+1, 8) AS sv))")).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-      .withColumn("nv", expr("vec_dot(sv, sv)"))
-    val enc = sub.join(broadcast(codebook), Seq("m"))
-      .withColumn("d", col("nv") + col("nc") - lit(2) * expr("vec_dot(sv, c8)"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("d"), col("code"))).as("sel"))
-      .select(col("vec_id"), col("m"), col("sel.code").as("code"))
-    (codebook, enc)
+    val codebook = subCodebook(cells, col("code"), "cv")
+    (codebook, pqCodes(e, "v", codebook))
   }
 
+
+  /** Top-3 smallest `dist` per query_id of `cand` (query_id, nbr_id,
+    * dist): the heap ranks -dist, so DESC score is ASC distance with ties
+    * toward the smaller nbr_id; +0.0 turns a possible -0.0 back into 0.0
+    * for the hash gate. */
+  private def rankedByDist(cand: DataFrame): DataFrame =
+    ranked(cand, 3, Seq("query_id"), -col("dist"), col("nbr_id"), "nbr_id")
+      .select(col("query_id"), col("nbr_id"), (-col("score") + lit(0.0)).as("dist"),
+        col("rnk"))
 
   /** q145's residual IVF-PQ, factored so PlanSpec can explain the WHOLE
     * DAG: the query runs with `checkpoint = true` (cells and scored each
@@ -1201,65 +1135,27 @@ object LlmQueries extends QueryModule {
       checkpoint: Boolean): DataFrame = {
     def cp(df: DataFrame): DataFrame =
       if (checkpoint) df.localCheckpoint() else df
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v")))
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
+      val e = withNorm(vectors(s, dir, "vec_id", "label"))
       // cells feeds 3 consumers (scoring, corpus residuals, query
       // residuals) and scored feeds 2 (assignment, probes) — checkpoint
       // both so the corpus-sized CentroidFixed agg and the n x cells
       // scoring pass run ONCE instead of per consumer
-      val cells = e.groupBy(col("label")).agg(centroid(col("v")).as("cv"))
-        .select(col("label").as("cell"), col("cv"))
-        .withColumn("cnrm", expr(normSqlOf("cv")))
-        .transform(cp)
-      val scored = e.crossJoin(broadcast(cells))
-        .withColumn("cell_score",
-          expr("vec_dot(v, cv)") / (col("nrm") * col("cnrm")))
-        .transform(cp)
+      val cells = labelCells(e).transform(cp)
+      val scored = cellScores(e, cells).transform(cp)
       // q46's argmax assignment with label riding along (the residual
       // codebook groups by ORIGINAL label, not by assigned cell)
-      val withCell = scored.groupBy(col("vec_id"))
-        .agg(max(struct(col("cell_score"), (-col("cell")).as("negc"),
-          col("v"), col("label"))).as("m"))
-        .select(col("vec_id"), (-col("m.negc")).as("cell"),
-          col("m.v").as("v"), col("m.label").as("label"))
+      val withCell = nearestCell(scored, "v", "label")
       val resid = withCell
         .join(broadcast(cells.select(col("cell"), col("cv"))), Seq("cell"))
         .withColumn("r", expr("zip_with(v, cv, (a, b) -> a - b)"))
         .select(col("vec_id"), col("cell"), col("label"), col("r"))
         .transform(cp) // shared by codebook, encode, and recon-cell
-      val rcb = resid.groupBy(col("label")).agg(centroid(col("r")).as("rc"))
-        .select(col("label").as("code"), explode(expr(
-          "transform(sequence(0, 7), m -> struct(m AS m, slice(rc, m*8+1, 8) AS c8))")).as("x"))
-        .select(col("code"), col("x.m").as("m"), col("x.c8").as("c8"))
-        .withColumn("nc", expr("vec_dot(c8, c8)"))
-      val sub = resid.select(col("vec_id"), explode(expr(
-          "transform(sequence(0, 7), m -> struct(m AS m, slice(r, m*8+1, 8) AS sv))")).as("x"))
-        .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-        .withColumn("nv", expr("vec_dot(sv, sv)"))
-      val enc = sub.join(broadcast(rcb), Seq("m"))
-        .withColumn("d", col("nv") + col("nc") - lit(2) * expr("vec_dot(sv, c8)"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("d"), col("code"))).as("sel"))
-        .select(col("vec_id"), col("m"), col("sel.code").as("code"))
-      val recon = enc
-        .join(broadcast(rcb.select(col("m"), col("code"), col("c8"))), Seq("m", "code"))
-        .groupBy(col("vec_id"))
-        .agg(expr("flatten(transform(sort_array(collect_list(struct(m, c8))), x -> x.c8))").as("rv"))
+      val rcb = subCodebook(resid.groupBy(col("label")).agg(centroid(col("r")).as("rc")),
+        col("label").as("code"), "rc")
+      val recon = pqDecode(pqCodes(resid, "r", rcb), rcb)
         .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
         .withColumn("nr", expr("vec_dot(rv, rv)"))
-      val top2 = udaf(new graft.functions.TopKAggregator.TopK(2),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      val probes = scored.filter(col("vec_id") < 10)
-        .groupBy(col("vec_id"))
-        .agg(top2(col("cell_score"), col("cell").cast("long")).as("top"))
-        .select(col("vec_id").as("query_id"), explode(col("top")).as("t"))
-        .select(col("query_id"), col("t._2").cast("int").as("cell"))
+      val probes = probeCells(scored.filter(col("vec_id") < 10), "query_id")
       // per probed cell the query re-residualizes against THAT cell's
       // centroid — the asymmetric-distance trick needs query and
       // candidate expressed in the same cell-local frame
@@ -1270,21 +1166,12 @@ object LlmQueries extends QueryModule {
         .withColumn("rq", expr("zip_with(qv0, cv, (a, b) -> a - b)"))
         .withColumn("nrq", expr("vec_dot(rq, rq)"))
         .select(col("cell"), col("query_id"), col("rq"), col("nrq"))
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(3),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      recon.select(col("vec_id").as("nbr_id"), col("cell"), col("rv"), col("nr"))
+      val cand = recon.select(col("vec_id").as("nbr_id"), col("cell"), col("rv"), col("nr"))
         .join(broadcast(qp), Seq("cell"))
         .filter(col("query_id") =!= col("nbr_id"))
         .withColumn("dist",
           round(col("nrq") + col("nr") - lit(2) * expr("vec_dot(rq, rv)"), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(-col("dist"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          (-col("col._1") + lit(0.0)).as("dist"), (col("pos") + 1).as("rnk"))
-        .orderBy(col("query_id"), col("rnk"))
+      rankedByDist(cand).orderBy(col("query_id"), col("rnk"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1553,13 +1440,10 @@ object LlmQueries extends QueryModule {
     // corpus scanned once, never exchanged; ranking uses the ROUNDED
     // half score (plus nbr_id) so both engines order identically.
     "q89_matryoshka" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = vecTable(s, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
         .withColumn("h", expr("slice(v, 1, size(v) div 2)"))
-        .withColumn("nrm", expr(normSqlOf("v")))
-        .withColumn("hnrm", expr(normSqlOf("h")))
+        .withColumn("nrm", expr(normOf("v")))
+        .withColumn("hnrm", expr(normOf("h")))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("av"),
           col("h").as("ah"), col("nrm").as("anrm"), col("hnrm").as("ahnrm"))
@@ -1571,20 +1455,12 @@ object LlmQueries extends QueryModule {
       // the EXPENSIVE full-dim score is computed only for the anchors x k
       // survivors on the join-back — at 100 TB the full-dim read is
       // 50 pairs, not n x anchors.
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(5),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      val top = c.join(broadcast(q.select(col("query_id"), col("ah"), col("ahnrm"))),
+      val pairs = c.join(broadcast(q.select(col("query_id"), col("ah"), col("ahnrm"))),
           col("query_id") =!= col("nbr_id"))
         .withColumn("score_half", round(
           expr("vec_dot(ah, bh)") / (col("ahnrm") * col("bhnrm")), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(col("score_half"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          col("col._1").as("score_half"), (col("pos") + 1).as("rnk"))
-      top
+      ranked(pairs, 5, Seq("query_id"), col("score_half"), col("nbr_id"), "nbr_id",
+          "score_half")
         .join(c.select(col("nbr_id"), col("bv"), col("bnrm")), Seq("nbr_id"))
         .join(broadcast(q.select(col("query_id"), col("av"), col("anrm"))),
           Seq("query_id"))
@@ -1596,7 +1472,6 @@ object LlmQueries extends QueryModule {
     }),
 
     "q37_knn_cosine" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
       // norms project BEFORE the join: computed once per VECTOR on the
       // scan side (n + q sqrt-folds), not once per PAIR after it (n*q);
       // the per-pair work is the dot product alone. Bit-identical scores:
@@ -1606,23 +1481,13 @@ object LlmQueries extends QueryModule {
       // stream through one sort task at 100 TB, while the heap keeps k
       // pairs per partial buffer and the exchange carries O(anchors x k).
       // Identical semantics: beats() is exactly (score DESC, nbr_id ASC).
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(vectors(s, dir, "vec_id"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("av"), col("nrm").as("anrm"))
       val c = e.select(col("vec_id").as("nbr_id"), col("v").as("bv"), col("nrm").as("bnrm"))
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(5),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
+      val pairs = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
         .withColumn("score", round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(col("score"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          col("col._1").as("score"), (col("pos") + 1).as("rnk"))
+      ranked(pairs, 5, Seq("query_id"), col("score"), col("nbr_id"), "nbr_id")
         .orderBy(col("query_id"), col("rnk"))
     }),
 
@@ -1634,34 +1499,24 @@ object LlmQueries extends QueryModule {
     // are engine-independent and the whole query is DuckDB-oracled —
     // quantization error shows up only as score differences vs q37.
     "q66_int8_topk" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
       // the quantized ints re-project to a double array on the SCAN side
       // so the per-pair dot is the codegen'd vec_dot (same cast-then-
       // multiply fold the zip_with HOF ran, just compiled); top-k is the
       // q107 bounded-heap aggregate — see q37 for why a query_id window
       // does not survive 100 TB.
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
         .withColumn("mx", expr("aggregate(v, 0.0D, (acc, x) -> greatest(acc, abs(x)))"))
         .filter(col("mx") > 0)
         .withColumn("qv", expr(
           "transform(v, x -> CAST(CAST(round(x * 127.0D / mx) AS INT) AS DOUBLE))"))
-        .withColumn("qn", expr(normSqlOf("qv")))
+        .withColumn("qn", expr(normOf("qv")))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("qv").as("qa"), col("qn").as("qna"))
       val c = e.select(col("vec_id").as("nbr_id"), col("qv").as("qb"), col("qn").as("qnb"))
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(5),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
+      val pairs = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
         .withColumn("score",
           round(expr("vec_dot(qa, qb)") / (col("qna") * col("qnb")), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(col("score"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          col("col._1").as("score"), (col("pos") + 1).as("rnk"))
+      ranked(pairs, 5, Seq("query_id"), col("score"), col("nbr_id"), "nbr_id")
         .orderBy(col("query_id"), col("rnk"))
     }),
 
@@ -1670,10 +1525,8 @@ object LlmQueries extends QueryModule {
     // scale with Σ bucket² — the LSH-style scale path — while the planted
     // 2x-scaled copies land in the same bucket deterministically.
     "q38_dedup_embedding" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
       // per-vector norm projected once, reused by the bucket AND the score
-      val e = plantedVecs(s, dir)
-        .withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(plantedVecs(s, dir))
         .withColumn("bkt", floor(expr("element_at(v, 1)") / col("nrm") * 50))
       val a = e.select(col("vec_id").as("vec_a"), col("label"), col("bkt"),
         col("v").as("av"), col("nrm").as("anrm"))
@@ -1699,7 +1552,6 @@ object LlmQueries extends QueryModule {
     // is L * Sigma bucket^2, never corpus^2, and B grows with corpus
     // density to keep buckets bounded.
     "q39_ann_lsh" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
       val L = 8; val B = 4
       val planes: Column = array((0 until L * B).map { j =>
         array((0 until 64).map { i =>
@@ -1708,8 +1560,7 @@ object LlmQueries extends QueryModule {
           lit(if (((x >>> 33) & 1L) == 1L) 1.0 else -1.0)
         }: _*)
       }: _*)
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
         .withColumn("planes", planes)
         .select(col("vec_id"), col("v"), explode(expr(
           s"""transform(sequence(0, ${L - 1}), t -> named_struct(
@@ -1719,7 +1570,7 @@ object LlmQueries extends QueryModule {
                   THEN CAST(pow(2, b) AS INT) ELSE 0 END)))"""))
           .as("tb"))
         .select(col("vec_id"), col("v"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        .withColumn("nrm", expr(normSqlOf("v"))) // once per (vector, table) row, not per pair
+        .withColumn("nrm", expr(normOf("v"))) // once per (vector, table) row, not per pair
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("av"),
           col("nrm").as("anrm"), col("tbl"), col("bucket"))
@@ -1730,20 +1581,13 @@ object LlmQueries extends QueryModule {
       // whole candidate stream in one task. The dropDuplicates exchange
       // (the union of the L tables) already keys by query_id, so the
       // aggregate's partial buffers sit on co-partitioned data.
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(3),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      c.join(broadcast(q), Seq("tbl", "bucket")).filter(col("query_id") =!= col("nbr_id"))
+      val pairs = c.join(broadcast(q), Seq("tbl", "bucket"))
+        .filter(col("query_id") =!= col("nbr_id"))
         .select(col("query_id"), col("nbr_id"), col("av"), col("bv"),
           col("anrm"), col("bnrm"))
         .dropDuplicates("query_id", "nbr_id") // union of the L tables
         .withColumn("score", round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(col("score"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          col("col._1").as("score"), (col("pos") + 1).as("rnk"))
+      ranked(pairs, 3, Seq("query_id"), col("score"), col("nbr_id"), "nbr_id")
         .orderBy(col("query_id"), col("rnk"))
     }),
 
@@ -1960,20 +1804,17 @@ object LlmQueries extends QueryModule {
     // leaves the map side, so the n_corpus x n_eval pair stream is
     // never shuffled (a window or max+join-back would shuffle it all).
     "q127_semantic_decontam" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = vecTable(s, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
       val eval = e.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("eval_id"), col("v").as("av"))
-        .withColumn("anrm", expr(normSqlOf("av")))
+        .withColumn("anrm", expr(normOf("av")))
       val leaked = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 50)
         .select((col("vec_id") + 100000).as("vec_id"),
           expr("transform(v, x -> x * 2.0D)").as("bv"))
       val corpus = e.filter(col("vec_id") % 10 =!= 0)
         .select(col("vec_id"), col("v").as("bv"))
         .union(leaked)
-        .withColumn("bnrm", expr(normSqlOf("bv")))
+        .withColumn("bnrm", expr(normOf("bv")))
       corpus.crossJoin(broadcast(eval))
         .withColumn("score",
           round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
@@ -1997,11 +1838,7 @@ object LlmQueries extends QueryModule {
     // At 100 TB this is the mining pass of every embedding-model
     // training loop; the anchor side is a batch (bounded), broadcast.
     "q128_hard_negatives" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(vectors(s, dir, "vec_id", "label"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
           col("v").as("av"), col("nrm").as("anrm"))
@@ -2030,16 +1867,8 @@ object LlmQueries extends QueryModule {
     // At scale the centroid table is tiny (cells x dim) and broadcast;
     // the corpus is scanned once to assign cells, once to probe.
     "q46_ann_ivf" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      import s.implicits._
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v"))) // once per vector
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
-      val cells = e.groupBy(col("label")).agg(centroid(col("v")).as("cv"))
-        .select(col("label").as("cell"), col("cv"))
-        .withColumn("cnrm", expr(normSqlOf("cv"))) // once per centroid
+      val e = withNorm(vectors(s, dir, "vec_id", "label"))
+      val cells = labelCells(e)
       // assign every vector (and query) to its nearest centroid by cosine:
       // a broadcast CROSS join against the (tiny) centroid table — each
       // vector scores ALL cells, argmax wins. (An equi-join on label here
@@ -2052,14 +1881,7 @@ object LlmQueries extends QueryModule {
       // a realistic IVF cell count that is a k x-corpus shuffle). The
       // (score, -cell) prefix is a unique key per vector, so the struct
       // comparison never reaches the v/nrm payload fields.
-      val withCell = e.crossJoin(broadcast(cells))
-        .withColumn("cell_score",
-          expr("vec_dot(v, cv)") / (col("nrm") * col("cnrm")))
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("cell_score"), (-col("cell")).as("negc"),
-          col("v"), col("nrm"))).as("m"))
-        .select(col("vec_id"), (-col("m.negc")).as("cell"),
-          col("m.v").as("v"), col("m.nrm").as("nrm"))
+      val withCell = nearestCell(cellScores(e, cells), "v", "nrm")
       val q = withCell.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("av"),
           col("nrm").as("anrm"), col("cell"))
@@ -2068,17 +1890,9 @@ object LlmQueries extends QueryModule {
       // probe ranking is the q37 bounded-heap TopK — a query_id window
       // would sort each query's whole posting list in one task, and an
       // IVF cell at 100 TB is corpus/cells rows
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(3),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      c.join(broadcast(q), Seq("cell")).filter(col("query_id") =!= col("nbr_id"))
+      val pairs = c.join(broadcast(q), Seq("cell")).filter(col("query_id") =!= col("nbr_id"))
         .withColumn("score", round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(col("score"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          col("col._1").as("score"), (col("pos") + 1).as("rnk"))
+      ranked(pairs, 3, Seq("query_id"), col("score"), col("nbr_id"), "nbr_id")
         .orderBy(col("query_id"), col("rnk"))
     }),
 
@@ -2094,49 +1908,19 @@ object LlmQueries extends QueryModule {
     // can never duplicate a candidate), and the final top-3 is again
     // the bounded heap. Zero windows, zero pair-stream exchanges.
     "q131_ann_ivf_multiprobe" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v")))
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
-      val cells = e.groupBy(col("label")).agg(centroid(col("v")).as("cv"))
-        .select(col("label").as("cell"), col("cv"))
-        .withColumn("cnrm", expr(normSqlOf("cv")))
-      val scored = e.crossJoin(broadcast(cells))
-        .withColumn("cell_score",
-          expr("vec_dot(v, cv)") / (col("nrm") * col("cnrm")))
-      val withCell = scored.groupBy(col("vec_id"))
-        .agg(max(struct(col("cell_score"), (-col("cell")).as("negc"),
-          col("v"), col("nrm"))).as("m"))
-        .select(col("vec_id"), (-col("m.negc")).as("cell"),
-          col("m.v").as("v"), col("m.nrm").as("nrm"))
-      val top2 = udaf(new graft.functions.TopKAggregator.TopK(2),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      val probes = scored.filter(col("vec_id") < 10)
-        .groupBy(col("vec_id"))
-        .agg(top2(col("cell_score"), col("cell").cast("long")).as("top"))
-        .select(col("vec_id").as("query_id"), explode(col("top")).as("t"))
-        .select(col("query_id"), col("t._2").cast("int").as("cell"))
+      val e = withNorm(vectors(s, dir, "vec_id", "label"))
+      val scored = cellScores(e, labelCells(e))
+      val withCell = nearestCell(scored, "v", "nrm")
+      val probes = probeCells(scored.filter(col("vec_id") < 10), "query_id")
       val q = withCell.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("av"),
           col("nrm").as("anrm"))
       val qp = probes.join(q, Seq("query_id")) // 2 rows per query
       val c = withCell.select(col("vec_id").as("nbr_id"), col("v").as("bv"),
         col("nrm").as("bnrm"), col("cell"))
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(3),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      c.join(broadcast(qp), Seq("cell")).filter(col("query_id") =!= col("nbr_id"))
+      val pairs = c.join(broadcast(qp), Seq("cell")).filter(col("query_id") =!= col("nbr_id"))
         .withColumn("score", round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
-        .groupBy(col("query_id"))
-        .agg(topk(col("score"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          col("col._1").as("score"), (col("pos") + 1).as("rnk"))
+      ranked(pairs, 3, Seq("query_id"), col("score"), col("nbr_id"), "nbr_id")
         .orderBy(col("query_id"), col("rnk"))
     }),
 
@@ -2159,34 +1943,17 @@ object LlmQueries extends QueryModule {
     // so the argmin and the rounded output agree bit-for-bit.
     "q132_ann_pq" -> ((s, dir) => {
       val (codebook, enc) = pqEncode(s, dir)
-      val e = vecTable(s, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
       // what PQ serving stores is (vec_id, 8 codes); the reconstruction
       // below is the decode the ADC distance implicitly runs against
-      val recon = enc
-        .join(broadcast(codebook.select(col("m"), col("code"), col("c8"))), Seq("m", "code"))
-        .groupBy(col("vec_id"))
-        .agg(expr("flatten(transform(sort_array(collect_list(struct(m, c8))), x -> x.c8))").as("rv"))
-        .withColumn("nr", expr("vec_dot(rv, rv)"))
+      val recon = pqDecode(enc, codebook).withColumn("nr", expr("vec_dot(rv, rv)"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("av"))
         .withColumn("nq", expr("vec_dot(av, av)"))
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(3),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      recon.select(col("vec_id").as("nbr_id"), col("rv").as("bv"), col("nr"))
+      val cand = recon.select(col("vec_id").as("nbr_id"), col("rv").as("bv"), col("nr"))
         .crossJoin(broadcast(q)).filter(col("query_id") =!= col("nbr_id"))
         .withColumn("dist", round(col("nq") + col("nr") - lit(2) * expr(dotSql), 4))
-        .groupBy(col("query_id"))
-        // heap ranks by -dist (DESC score == ASC distance, ties id ASC)
-        .agg(topk(-col("dist"), col("nbr_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        // +0.0 normalizes a possible -0.0 back to 0.0 for the hash gate
-        .select(col("query_id"), col("col._2").as("nbr_id"),
-          (-col("col._1") + lit(0.0)).as("dist"), (col("pos") + 1).as("rnk"))
-        .orderBy(col("query_id"), col("rnk"))
+      rankedByDist(cand).orderBy(col("query_id"), col("rnk"))
     }),
 
     // --- IVF-PQ: the production serving architecture (FAISS IVFPQ) that
@@ -2226,7 +1993,6 @@ object LlmQueries extends QueryModule {
     // scale the e6 numerators stay under 2^63 up to ~10^9 docs; past
     // that the same chain runs on DECIMAL(38,0)/HUGEINT.
     "q150_hybrid_retrieval" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
       val terms = Seq("join", "filter", "hash")
       val toks = withTokens(Tables.documents(s, dir).select(col("doc_id"), col("text")))
         .select(col("doc_id") +: expr("CAST(size(tk) AS BIGINT)").as("dl") +:
@@ -2250,29 +2016,20 @@ object LlmQueries extends QueryModule {
         val sat = expr(s"(44000000000000 * tf_$t + $den) div (2 * $den)")
         ridf * sat
       }.reduceLeft(_ + _)
-      val top20 = udaf(new graft.functions.TopKAggregator.TopK(20),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
       // the heap ranks doubles, so the exact 1e-12-unit BIGINT casts to
       // DOUBLE right before ranking: long->double is round-to-nearest
       // in BOTH engines, so even scores past 2^53 land on identical
       // doubles and identical ranks; the oracle replicates the cast
-      val lex = scored.withColumn("ls_e12", termScore)
-        .filter(col("ls_e12") > 0)
-        .agg(top20(col("ls_e12").cast("double"), col("doc_id")).as("top"))
-        .select(posexplode(col("top")))
-        .select(col("col._2").as("doc_id"), (col("pos") + 1).as("l_rank"))
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v")))
+      val lex = ranked(scored.withColumn("ls_e12", termScore).filter(col("ls_e12") > 0),
+          20, Nil, col("ls_e12").cast("double"), col("doc_id"), "doc_id")
+        .select(col("doc_id"), col("rnk").as("l_rank"))
+      val e = withNorm(vectors(s, dir, "vec_id"))
       val qv = e.filter(col("vec_id") === 0)
         .select(col("v").as("av"), col("nrm").as("anrm"))
-      val dense = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
-        .withColumn("score", round(expr("vec_dot(av, v)") / (col("anrm") * col("nrm")), 6))
-        .agg(top20(col("score"), col("vec_id")).as("top"))
-        .select(posexplode(col("top")))
-        .select(col("col._2").as("doc_id"), (col("pos") + 1).as("d_rank"))
+      val dense = ranked(e.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
+          .withColumn("score", round(expr("vec_dot(av, v)") / (col("anrm") * col("nrm")), 6)),
+          20, Nil, col("score"), col("vec_id"), "doc_id")
+        .select(col("doc_id"), col("rnk").as("d_rank"))
       // RRF arms half-up on the 1e-6 grid: 1/(60+rank); the arm sum is
       // an exact integer whose final /1e6 double division is identical
       // on both engines (1e6 is a power-of-two-free exact double, and
@@ -2327,8 +2084,7 @@ object LlmQueries extends QueryModule {
     // in its probed cells). n_nodes/n_edges are genuine oracle
     // arithmetic; the booleans pin recall and graph completeness.
     "q146_knn_graph" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = plantedVecs(s, dir).withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(plantedVecs(s, dir))
       val edges = knnGraphEdges(s, e, stratifiedCells(s, e))
       val nodes = e.agg(count(lit(1)).as("n_nodes"))
       val es = edges.agg(count(lit(1)).as("n_edges"),
@@ -2360,14 +2116,10 @@ object LlmQueries extends QueryModule {
     // additionally certifies every node found a full 5 neighbors, i.e.
     // sqrt-sizing left no starved cells at the gate scale.
     "q155_knn_graph_sqrtcells" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = plantedVecs(s, dir).withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(plantedVecs(s, dir))
       val n = e.count()
-      val c = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val cells = e.orderBy(col("vec_id")).limit(c)
-        .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"),
-          col("nrm").as("cnrm"))
-        .localCheckpoint()
+      val c = sqrtCells(n)
+      val cells = smallestIdSeeds(e, c, "cell", col("v").as("cv"), col("nrm").as("cnrm"))
       val edges = knnGraphEdges(s, e, cells)
       val es = edges.agg(count(lit(1)).as("n_edges"),
         count(when(col("nbr_id") === col("src_id") + 100000L, 1)).as("n_pl"))
@@ -2408,8 +2160,7 @@ object LlmQueries extends QueryModule {
     // contract) and rescores at the maximal 1.0, so refinement can
     // never evict it — descent only ADDS better neighbors.
     "q169_knn_descent" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = plantedVecs(s, dir).withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(plantedVecs(s, dir))
       // localCheckpoint: the edge list feeds BOTH sides of the 2-hop
       // self-join and the 1-hop union — without the cut the whole
       // blocked build runs three times
@@ -2439,24 +2190,17 @@ object LlmQueries extends QueryModule {
         col("nrm").as("anrm"))
       val vb = e.select(col("vec_id").as("cand_id"), col("v").as("bv"),
         col("nrm").as("bnrm"))
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(5),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
       // vector-width ladder (r16): broadcasting the two vector fetches
       // (bytes-gated — see [[Gates.batchHint]]) leaves the 2-hop candidate list, which
       // grows FASTER than the corpus, entirely un-shuffled before its
       // partial-agged top-k; above the byte cap the old shuffle-hash
       // tier re-engages unchanged (measured 94 MB of candidate shuffle
       // at sf0.1 for a 6 MB vector side).
-      cand.join(batchHint(va, nVecs, VecRowBytes), Seq("src_id"))
+      val scored = cand.join(batchHint(va, nVecs, VecRowBytes), Seq("src_id"))
         .join(batchHint(vb, nVecs, VecRowBytes), Seq("cand_id"))
         .withColumn("score", round(expr(dotSql) / (col("anrm") * col("bnrm")), 4))
-        .groupBy(col("src_id"))
-        .agg(topk(col("score"), col("cand_id")).as("top"))
-        .select(col("src_id"), posexplode(col("top")))
-        .select(col("src_id"), (col("pos") + 1).as("rnk"),
-          col("col._2").as("nbr_id"), col("col._1").as("score"))
+      ranked(scored, 5, Seq("src_id"), col("score"), col("cand_id"), "nbr_id")
+        .select(col("src_id"), col("rnk"), col("nbr_id"), col("score"))
         .orderBy(col("src_id"), col("rnk"))
     }),
 
@@ -2481,38 +2225,11 @@ object LlmQueries extends QueryModule {
     // E-steps, the fixed-point M-step, and the keeper rule are all
     // replicated in DuckDB (q138/q145's playbook).
     "q166_semdedup" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = plantedVecs(s, dir)
-        .withColumn("nv", expr(s"transform(v, x -> x / ${normSqlOf("v")})"))
-        .select(col("vec_id"), col("nv"))
+      val e = unitVecs(plantedVecs(s, dir))
       val n = e.count()
-      val c = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val seeds = e.orderBy(col("vec_id")).limit(c)
-        .select(col("vec_id").cast("int").as("cid"), col("nv").as("cv"))
-        .localCheckpoint()
-      def d2(v: String, cc: String) = d2Expr(v, cc)
-      // E-step 1 against the raw seeds; (d2, cid) is unique per vector
-      // so the min-struct never compares the payload (q138's argument)
-      val assigned1 = e.crossJoin(broadcast(seeds))
-        .withColumn("d2", d2("nv", "cv"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cid"), col("nv"))).as("m"))
-        .select(col("m.cid").as("cid"), col("m.nv").as("nv"))
-      // M-step: exact fixed-point centroids (order-independent, oracle-
-      // replicable — see CentroidFixed)
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
-      val cells = assigned1.groupBy(col("cid"))
-        .agg(centroid(col("nv")).as("cv"))
-        .localCheckpoint()
-      // E-step 2 against the updated centroids; payload (nv + its norm)
-      // rides the argmin into the pair join
-      val assigned2 = e.crossJoin(broadcast(cells))
-        .withColumn("d2", d2("nv", "cv"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cid"), col("nv"))).as("m"))
-        .select(col("vec_id"), col("m.cid").as("cell"), col("m.nv").as("av"))
-        .withColumn("anrm", expr(normSqlOf("av")))
-        .localCheckpoint()
+      // one Lloyd round, then E-step 2 against the updated centroids;
+      // payload (nv + its norm) rides the argmin into the pair join
+      val assigned2 = cellMembers(e, lloydCells(e, n))
       val bSide = assigned2.select(col("cell"), col("vec_id"),
         col("av").as("bv"), col("anrm").as("bnrm"))
       // assigned2 is corpus-sized WITH vector payload: the intra-cell
@@ -2627,11 +2344,8 @@ object LlmQueries extends QueryModule {
     // reversed vectors of vec_id%4==2 (novel probes). Full edge list
     // compared row-level (the q169 precedent).
     "q246_incremental_knn" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val base = vecTable(s, dir)
-        .select(col("vec_id"), col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val ex = base.withColumn("nrm", expr(normSqlOf("v")))
+      val base = vectors(s, dir, "vec_id", "label")
+      val ex = withNorm(base)
       val cells = stratifiedCells(s, ex) // frozen on the indexed corpus
       val batch = base.filter(col("vec_id") % 4 === 1)
         .select((col("vec_id") + 300000).as("vec_id"),
@@ -2639,7 +2353,7 @@ object LlmQueries extends QueryModule {
         .unionByName(base.filter(col("vec_id") % 4 === 2)
           .select((col("vec_id") + 300000).as("vec_id"),
             reverse(col("v")).as("v")))
-        .withColumn("nrm", expr(normSqlOf("v")))
+        .transform(withNorm)
       knnGraphEdgesOn(s, ex, batch, cells)
         .orderBy(col("src_id"), col("rnk"))
     }),
@@ -2897,11 +2611,7 @@ object LlmQueries extends QueryModule {
     // oracle re-derives the whole chain (cells, assignment, probes,
     // rank-1, mutual join) with the engine's exact tie order.
     "q175_mutual_knn" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // vec_dot
-      val e = vecTable(s, dir)
-        .select(col("vec_id"), col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("nrm", expr(normSqlOf("v")))
+      val e = withNorm(vectors(s, dir, "vec_id", "label"))
       val r1 = knnGraphEdges(s, e, stratifiedCells(s, e))
         .filter(col("rnk") === 1)
         .select(col("src_id"), col("nbr_id"), col("score"))
@@ -3188,12 +2898,6 @@ object LlmQueries extends QueryModule {
       |        FROM corpus)),
       |shz AS (SELECT doc_id, len(sh) AS sz, sh FROM shl WHERE len(sh) > 0)""".stripMargin
 
-  /** Full row-level oracle for the MinHash-LSH pair list: recompute the
-    * FNV shingle keys, the 16-seed mix64 family (same [[MinhashSeeds]]
-    * constants, staged one fmix64 step per CTE so nothing re-evaluates
-    * exponentially), band by signature 4-tuples (the engine's xxhash64
-    * band KEY is just a bucketing of tuple equality), then exact Jaccard
-    * >= 0.5 over the string shingle sets for the candidates. */
   /** The q151 LSH pipeline as a shared CTE block ending in
     * `lshp(doc_a, doc_b, jac)` — the verified MinHash-LSH pair set,
     * consumed by the q151 row-level oracle AND q35's certification
@@ -3228,15 +2932,17 @@ object LlmQueries extends QueryModule {
        |         WHERE $jacSql >= 0.5)""".stripMargin
   }
 
+  /** Full row-level oracle for the MinHash-LSH pair list: recompute the
+    * FNV shingle keys, the 16-seed mix64 family (same [[MinhashSeeds]]
+    * constants, staged one fmix64 step per CTE so nothing re-evaluates
+    * exponentially), band by signature 4-tuples (the engine's xxhash64
+    * band KEY is just a bucketing of tuple equality), then exact Jaccard
+    * >= 0.5 over the string shingle sets for the candidates. */
   private def q151OracleSql: String =
     s"""WITH $lshPairCtes
        |SELECT doc_a, doc_b, jac FROM lshp
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** q35's certification oracle: the LSH pair set (q151's chain) vs the
-    * df-capped exact truth, every output column computed from the two
-    * recomputed sets — the engine's exact relationship, independently
-    * re-derived. */
   /** q208's oracle: the q151 signature chain (`sig`) re-banded at each
     * swept (bands, rows) shape by GROUP BY j // r — tuple-equality
     * banding, exactly what the engine's xxhash64 band keys bucket — and
@@ -3285,6 +2991,10 @@ object LlmQueries extends QueryModule {
        |FROM sel CROSS JOIN nt ORDER BY bands DESC""".stripMargin
   }
 
+  /** q35's certification oracle: the LSH pair set (q151's chain) vs the
+    * df-capped exact truth, every output column computed from the two
+    * recomputed sets — the engine's exact relationship, independently
+    * re-derived. */
   private def q35OracleSql: String =
     s"""WITH $lshPairCtes,
        |exd AS (SELECT doc_id, sz, unnest(sh) AS s FROM shz),
@@ -3338,11 +3048,6 @@ object LlmQueries extends QueryModule {
        |  m.n6f >= m.n6 * 0.75 AS planted_recall_ok
        |FROM n CROSS JOIN m""".stripMargin
 
-  /** Full row-level oracle for the SimHash pair list: FNV-1a token
-    * hashes (deduped by hash, like SimHash64's seen-set), 64 bit votes,
-    * signature = positive-vote bits (unsigned, wrapped to the engine's
-    * signed Long at the end), 4x16-bit band join with the engine's
-    * first-matching-band dedup, Hamming <= 6 via bit_count(xor). */
   /** The q152 SimHash pipeline as a shared CTE block ending in
     * `shd(doc_id, u, sh)` (per-doc signatures) and `found(doc_a,
     * doc_b, hamming)` (the banded pair list at Hamming <= 6) — consumed
@@ -3378,6 +3083,11 @@ object LlmQueries extends QueryModule {
        |    CAST(bit_count(xor(sha, shb)) AS INT) AS hamming
        |  FROM fb WHERE bit_count(xor(sha, shb)) <= 6)""".stripMargin
 
+  /** Full row-level oracle for the SimHash pair list: FNV-1a token
+    * hashes (deduped by hash, like SimHash64's seen-set), 64 bit votes,
+    * signature = positive-vote bits (unsigned, wrapped to the engine's
+    * signed Long at the end), 4x16-bit band join with the engine's
+    * first-matching-band dedup, Hamming <= 6 via bit_count(xor). */
   private def q152OracleSql: String =
     s"""WITH $simhashChainCtes
        |SELECT doc_a, doc_b, hamming FROM found

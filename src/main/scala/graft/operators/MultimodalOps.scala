@@ -228,19 +228,6 @@ object MultimodalOps {
     }.toDF()
   }
 
-  /** Container metadata extracted by REAL header parsing (no codec libs
-    * needed — these are byte-layout reads of the container formats, the
-    * part of "decode" that never required a native library):
-    *
-    *   - PNG: width/height from the IHDR chunk (big-endian u32 at offsets
-    *     16/20 after the 8-byte signature), channels from the color type
-    *   - JPEG: baseline/progressive SOF segment walk (skip APPn/DQT/...
-    *     by their big-endian lengths until a C0-CF frame marker, excluding
-    *     C4/C8/CC), height/width/components from the frame header
-    *   - WAV: RIFF/WAVE fmt fields, little-endian (channels, sample rate)
-    *
-    * Only pixel/sample decoding remains stubbed in [[extractFeatures]].
-    */
   /** Sniff-only container label for decoded pixels (r14 review):
     * [[probe]] covers png/jpeg/wav/mp4 only, so a decodable BMP/GIF
     * was labeled "unknown" despite real pixels — and every image paid
@@ -258,6 +245,19 @@ object MultimodalOps {
       doc_id: Long, format: String, width: Int, height: Int, channels: Int,
       n_bytes: Long)
 
+  /** Container metadata extracted by REAL header parsing (no codec libs
+    * needed — these are byte-layout reads of the container formats, the
+    * part of "decode" that never required a native library):
+    *
+    *   - PNG: width/height from the IHDR chunk (big-endian u32 at offsets
+    *     16/20 after the 8-byte signature), channels from the color type
+    *   - JPEG: baseline/progressive SOF segment walk (skip APPn/DQT/...
+    *     by their big-endian lengths until a C0-CF frame marker, excluding
+    *     C4/C8/CC), height/width/components from the frame header
+    *   - WAV: RIFF/WAVE fmt fields, little-endian (channels, sample rate)
+    *
+    * Only pixel/sample decoding remains stubbed in [[extractFeatures]].
+    */
   def probe(id: Long, b: Array[Byte]): MediaProbe = {
     def u8(i: Int): Int = b(i) & 0xff
     def u16be(i: Int): Int = (u8(i) << 8) | u8(i + 1)

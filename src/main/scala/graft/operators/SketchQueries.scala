@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Vectors._
 
 /** Sketch-accelerated and clustering operators: bloom-filter semi-join
   * reduction, Misra-Gries heavy hitters with exact confirmation,
@@ -108,19 +109,12 @@ object SketchQueries extends QueryModule {
     // its spill) is the cost this operator deletes. posexplode turns the
     // per-group array back into ranked rows; the window form is the
     // oracle, so the two formulations are proven equivalent.
-    "q107_topk_per_group" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopKAggregator.TopK(3),
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaDouble,
-          org.apache.spark.sql.Encoders.scalaLong))
-      Tables(s, dir, "orders")
-        .groupBy(col("o_orderstatus"))
-        .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
-        .select(col("o_orderstatus"), posexplode(col("top")))
-        .select(col("o_orderstatus"), (col("pos") + 1).cast("long").as("rnk"),
-          col("col._1").as("o_totalprice"), col("col._2").as("o_orderkey"))
-        .orderBy(col("o_orderstatus"), col("rnk"))
-    }),
+    "q107_topk_per_group" -> ((s, dir) =>
+      ranked(Tables(s, dir, "orders"), 3, Seq("o_orderstatus"),
+          col("o_totalprice"), col("o_orderkey"), "o_orderkey", "o_totalprice")
+        .select(col("o_orderstatus"), col("rnk").cast("long").as("rnk"),
+          col("o_totalprice"), col("o_orderkey"))
+        .orderBy(col("o_orderstatus"), col("rnk"))),
 
     // --- mergeable distinct-count rollup (Datasketches HLL): one sketch
     // per group, then the corpus-wide distinct from UNIONING the sketches
@@ -156,12 +150,7 @@ object SketchQueries extends QueryModule {
     // composes from. d2 = <v,v> - 2<v,c> + <c,c> keeps the float ops
     // identical to the oracle's list_dot_product formulation.
     "q94_kmeans_assign" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      // codegen'd VecDot, bit-identical to the HOF fold it replaced
-      val dot = "vec_dot(%s, %s)"
-      val e = LlmQueries.vecTable(s, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("c"))
       // nearest-centroid argmin as a partial-agged min(struct(d2, cid))
@@ -170,13 +159,8 @@ object SketchQueries extends QueryModule {
       // hash-exchanged (a row_number window keyed by vec_id would
       // shuffle all n x k rows to discard k-1 of every k). (d2, cid)
       // is unique per vector, so the tie-break (cid asc) is exact.
-      e.crossJoin(broadcast(cents))
-        .withColumn("d2",
-          expr(dot.format("v", "v")) - lit(2.0) * expr(dot.format("v", "c")) +
-            expr(dot.format("c", "c")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cid"))).as("m"))
-        .select(col("m.cid").as("cid"), col("m.d2").as("d2"))
+      nearestCentroid(e, cents, "v", "c")
+        .select(col("cid"), col("d2"))
         .groupBy(col("cid"))
         .agg(count(lit(1)).as("n"),
           // decimal-exact sum / count instead of avg(double): accumulation
@@ -202,23 +186,13 @@ object SketchQueries extends QueryModule {
     // convention), which is what lets a clustering ITERATION be
     // hash-gated cross-engine rather than rows-only.
     "q138_kmeans_lloyd" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val dot = "vec_dot(%s, %s)"
-      val e = LlmQueries.vecTable(s, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
       val seeds = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("c"))
       // (d2, cid) is unique per vector, so the struct comparison never
       // reaches the v payload (same argument as q46's cell assignment)
-      val assigned = e.crossJoin(broadcast(seeds))
-        .withColumn("d2",
-          expr(dot.format("v", "v")) - lit(2.0) * expr(dot.format("v", "c")) +
-            expr(dot.format("c", "c")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("cid"), col("v"))).as("m"))
-        .select(col("m.cid").as("cid"), col("m.v").as("v"))
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
+      val assigned = nearestCentroid(e, seeds, "v", "c", "v")
+        .select(col("cid"), col("v"))
       assigned.groupBy(col("cid"))
         .agg(count(lit(1)).as("n"), centroid(col("v")).as("nc"))
         .join(broadcast(seeds), Seq("cid"))
@@ -244,17 +218,10 @@ object SketchQueries extends QueryModule {
     // d2 keeps q94's op sequence, the running min is least() in both
     // engines, radius = round(sqrt(dmin), 6) only at output.
     "q141_kmeans_seed" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val dot = "vec_dot(%s, %s)"
-      def d2(v: String, c: String) =
-        expr(dot.format(v, v)) - lit(2.0) * expr(dot.format(v, c)) +
-          expr(dot.format(c, c))
-      val e = LlmQueries.vecTable(s, dir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val e = vectors(s, dir, "vec_id")
       val anchor = e.filter(col("vec_id") === 0).select(col("v").as("c"))
       var state = e.crossJoin(broadcast(anchor))
-        .withColumn("dmin", d2("v", "c"))
+        .withColumn("dmin", d2Expr("v", "c"))
         .select(col("vec_id"), col("v"), col("dmin"))
         .localCheckpoint()
       var out: DataFrame = null
@@ -275,7 +242,7 @@ object SketchQueries extends QueryModule {
         out = if (out == null) pick.drop("c")
               else out.unionByName(pick.drop("c"))
         if (r < 4) state = state.crossJoin(broadcast(pick.select(col("c"))))
-          .withColumn("dmin", least(col("dmin"), d2("v", "c")))
+          .withColumn("dmin", least(col("dmin"), d2Expr("v", "c")))
           .select(col("vec_id"), col("v"), col("dmin"))
           .localCheckpoint()
       }
@@ -294,11 +261,7 @@ object SketchQueries extends QueryModule {
     // corpus-sized. The broadcast self-join of the tiny centroid table
     // is the k-means-scale analogue of q134's source-pair sketch matrix.
     "q143_centroid_confusion" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      val e = LlmQueries.vecTable(s, dir)
-        .select(col("label"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val centroid = udaf(new graft.functions.VectorAggregators.CentroidFixed(64))
+      val e = vectors(s, dir, "label")
       val cents = e.groupBy(col("label")).agg(centroid(col("v")).as("c"))
         .withColumn("nrm", expr("sqrt(vec_dot(c, c))"))
         .localCheckpoint() // probe AND broadcast sides both read it —

@@ -5,20 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Event-time windowing over the `events` stream table. The reference has
-  * no streaming at all (finite-file input, SURVEY §1.1); this is the
-  * Structured Streaming surface the Spark engine adds. Each builder below
-  * is ONE function applied to either a batch DataFrame (driver correctness
-  * gate, DuckDB oracle) or a `readStream` DataFrame (StreamingSpec runs the
-  * same code through MemoryStream + watermarks) — batch/stream parity by
-  * construction, which is exactly how Structured Streaming is meant to be
-  * used.
-  *
-  * Scale: watermark + windowed aggregation keeps state bounded to open
-  * windows per key; the tumbling/sliding aggs shuffle once on the window
-  * key, session windows shuffle on (user, session) with Spark's built-in
-  * session merge.
-  */
 /** q274's event/state/output rows (top-level so the implicit product
   * encoders resolve for flatMapGroupsWithState in both modes). */
 case class IngestEv(doc_id: Long, kind: String, dl: Long,
@@ -34,6 +20,20 @@ case class UrlEv(canon_url: String, doc_id: Long, ts: java.sql.Timestamp)
 case class UrlState(bestTs: Long, bestId: Long, others: List[Long])
 case class UrlOut(doc_id: Long, action: String, canon_url: String)
 
+/** Event-time windowing over the `events` stream table. The reference has
+  * no streaming at all (finite-file input, SURVEY §1.1); this is the
+  * Structured Streaming surface the Spark engine adds. Each builder below
+  * is ONE function applied to either a batch DataFrame (driver correctness
+  * gate, DuckDB oracle) or a `readStream` DataFrame (StreamingSpec runs the
+  * same code through MemoryStream + watermarks) — batch/stream parity by
+  * construction, which is exactly how Structured Streaming is meant to be
+  * used.
+  *
+  * Scale: watermark + windowed aggregation keeps state bounded to open
+  * windows per key; the tumbling/sliding aggs shuffle once on the window
+  * key, session windows shuffle on (user, session) with Spark's built-in
+  * session merge.
+  */
 object StreamingQueries extends QueryModule {
 
   /** Exact order-insensitive double sum (see RelationalQueries doc). */
@@ -112,10 +112,6 @@ object StreamingQueries extends QueryModule {
   def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
     attributionJoin(clicks, purchases, "inner")
 
-  /** ONE definition of the attribution interval join (r14 review: the
-    * condition and watermarks existed twice) — the inner and outer
-    * forms differ ONLY in join type, so the interval/watermark can
-    * never fork between them. */
   /** The q147/q269 gate inputs, shared (r14 review). */
   private def clickPurchaseFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = Tables.events(s, dir)
@@ -125,6 +121,10 @@ object StreamingQueries extends QueryModule {
        .select(col("user_id").as("p_user"), col("ts").as("p_ts")))
   }
 
+  /** ONE definition of the attribution interval join (r14 review: the
+    * condition and watermarks existed twice) — the inner and outer
+    * forms differ ONLY in join type, so the interval/watermark can
+    * never fork between them. */
   private def attributionJoin(clicks: DataFrame, purchases: DataFrame,
       joinType: String): DataFrame =
     clicks.withWatermark("c_ts", "1 hour")
@@ -870,17 +870,6 @@ object StreamingQueries extends QueryModule {
     }
   }
 
-  /** q263's builder: join a (doc_id, ts) tombstone frame — batch OR
-    * streaming — against the stored BM25 artifacts to emit per-doc
-    * erase records. The per-doc touch census (how many posting rows
-    * hold the doc, and in which block) derives from the MEMOIZED
-    * postings artifact and is localCheckpointed per builder call so a
-    * streaming run's micro-batches never re-derive it (per index era
-    * a production job would persist it durably; here the derivation
-    * is one explode + partial-agg over the already-materialized
-    * postings frame); the stream side is pure join work. A tombstone for a doc the
-    * index never held emits nothing (inner joins) — the sink's signal
-    * that the request needs no index maintenance. */
   /** q274's builder over a unified (doc_id, kind ∈ admit|erase, dl, ts)
     * event frame — batch OR streaming.
     *
@@ -973,6 +962,17 @@ object StreamingQueries extends QueryModule {
     }
   }
 
+  /** q263's builder: join a (doc_id, ts) tombstone frame — batch OR
+    * streaming — against the stored BM25 artifacts to emit per-doc
+    * erase records. The per-doc touch census (how many posting rows
+    * hold the doc, and in which block) derives from the MEMOIZED
+    * postings artifact and is localCheckpointed per builder call so a
+    * streaming run's micro-batches never re-derive it (per index era
+    * a production job would persist it durably; here the derivation
+    * is one explode + partial-agg over the already-materialized
+    * postings frame); the stream side is pure join work. A tombstone for a doc the
+    * index never held emits nothing (inner joins) — the sink's signal
+    * that the request needs no index maintenance. */
   def tombstoneLedger(s: SparkSession, dels: DataFrame,
       postings: DataFrame, doclen: DataFrame): DataFrame = {
     val touch = postings

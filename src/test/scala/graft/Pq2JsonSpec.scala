@@ -46,6 +46,24 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
       Pq2Json.parseArgs(Array("-c", "not-json", "x")))
   }
 
+  for (flag <- Seq("-t", "-c", "-o"))
+    test(s"arg parsing: $flag given last is a missing value, not an index error") {
+      val e = intercept[IllegalArgumentException](
+        Pq2Json.parseArgs(Array("in.parquet", flag)))
+      assert(e.getMessage == s"missing value for $flag")
+    }
+
+  test("column names are exact: a dot and a backtick convert under JSON, --csv and -c") {
+    val s = spark
+    import s.implicits._
+    val in = fileDir("exact-names", Seq(Seq((1, "x")).toDF("a.b", "c`d"))).toString
+    assert(capture(Array(in)) == "{\"a.b\":1,\"c`d\":\"x\"}\n")
+    assert(capture(Array("--csv", in)) == "1,x\r\n")
+    assert(capture(Array("-c", """["a.b"]""", in)) == "{\"a.b\":1}\n")
+    assert(capture(Array("-c", """["c`d"]""", in)) == "{\"c`d\":\"x\"}\n")
+    assert(capture(Array("--csv", "-c", """["c`d","a.b"]""", in)) == "x,1\r\n")
+  }
+
   test("-d/--distributed: -o becomes a parallel-written part-file directory") {
     val outDir = java.nio.file.Files.createTempDirectory("dist-out").toString + "/out"
     capture(Array("-d", "-o", outDir, s"$dir/nation.parquet"))
