@@ -177,7 +177,7 @@ final class KustoRowRenderer(schema: StructType, opts: KustoRenderOptions,
     }
     case DateType => (g, i, sb) => {
       val days = g.getInt(i) // reference reads u32; i32 negatives overflow chrono
-      days >= 0 && text(sb, LocalDate.ofEpochDay(days.toLong).format(DateTimeFormatter.ISO_LOCAL_DATE), csv)
+      days >= 0 && { if (!csv) sb.append('"'); isoDate(sb, days); if (!csv) sb.append('"'); true }
     }
     case TimestampType | TimestampNTZType => opts.timestampMode match {
       case TimestampMode.Ticks => (g, i, sb) => {
@@ -198,7 +198,7 @@ final class KustoRowRenderer(schema: StructType, opts: KustoRenderOptions,
       case TimestampMode.IsoStr => (g, i, sb) => {
         val ms = micros2millis(g.getLong(i))
         // u64 seconds out of chrono range -> null (`:322-325`)
-        ms >= 0 && text(sb, IsoFmt.format(java.time.Instant.ofEpochMilli(ms)), csv)
+        ms >= 0 && { if (!csv) sb.append('"'); isoTimestamp(sb, ms); if (!csv) sb.append('"'); true }
       }
     }
     case st: StructType =>
@@ -258,6 +258,54 @@ object KustoRowRenderer {
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'", java.util.Locale.ROOT)
     .withZone(java.time.ZoneOffset.UTC)
 
+  /** Epoch day and epoch millisecond of 10000-01-01, where ISO text turns
+    * five-digit and `DateTimeFormatter` prefixes the year with `+`. */
+  private val Year10kDay: Int = LocalDate.of(10000, 1, 1).toEpochDay.toInt
+  private val Year10kMs: Long = Year10kDay * 86400000L
+
+  /** Appends epoch day `days` ≥ 0 as ISO `yyyy-MM-dd` (`converter.rs:334-343`).
+    * Below year 10000 the civil date comes from H. Hinnant's days-to-civil
+    * arithmetic (400-year eras of 146097 days, years starting in March);
+    * from 10000 on, `DateTimeFormatter` writes the signed year. */
+  private[graft] def isoDate(sb: Buf, days: Int): Unit =
+    if (days >= Year10kDay) sb.append(LocalDate.ofEpochDay(days).format(DateTimeFormatter.ISO_LOCAL_DATE))
+    else {
+      val z = days + 719468 // days since 0000-03-01
+      val era = z / 146097
+      val doe = z - era * 146097
+      val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
+      val doy = doe - (365 * yoe + yoe / 4 - yoe / 100)
+      val mp = (5 * doy + 2) / 153 // month from March = 0
+      val d = doy - (153 * mp + 2) / 5 + 1
+      val m = if (mp < 10) mp + 3 else mp - 9
+      val y = era * 400 + yoe + (if (m <= 2) 1 else 0)
+      digits(sb, y, 4).append('-')
+      digits(sb, m, 2).append('-')
+      digits(sb, d, 2)
+    }
+
+  /** Appends epoch millisecond `ms` ≥ 0 as `yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'`
+    * in UTC (`converter.rs:318-328`): the date per [[isoDate]], the time of
+    * day by division; `DateTimeFormatter` from year 10000 on. */
+  private[graft] def isoTimestamp(sb: Buf, ms: Long): Unit =
+    if (ms >= Year10kMs) sb.append(IsoFmt.format(java.time.Instant.ofEpochMilli(ms)))
+    else {
+      val days = (ms / 86400000L).toInt
+      val t = (ms - days * 86400000L).toInt
+      isoDate(sb, days)
+      digits(sb.append('T'), t / 3600000, 2).append(':')
+      digits(sb, t / 60000 % 60, 2).append(':')
+      digits(sb, t / 1000 % 60, 2).append('.')
+      digits(sb, t % 1000, 3).append("000Z")
+    }
+
+  /** `v` ≥ 0 as exactly `n` decimal digits, zero-padded. */
+  private def digits(sb: Buf, v: Int, n: Int): Buf = {
+    var p = if (n == 4) 1000 else if (n == 3) 100 else 10
+    while (p > 0) { sb.append(('0' + v / p % 10).toChar); p /= 10 }
+    sb
+  }
+
   /** serde_json BTreeMap key order = UTF-8 byte order. UTF8String.compareTo
     * compares the underlying UTF-8 bytes unsigned-lexicographically, which
     * differs from String's UTF-16 order for supplementary-plane text. */
@@ -274,7 +322,7 @@ object KustoRowRenderer {
 
   private def double(sb: Buf, d: Double, csv: Boolean): Boolean =
     !java.lang.Double.isNaN(d) && !java.lang.Double.isInfinite(d) &&
-      { sb.append(if (csv) Ryu.shortestCsv(d) else Ryu.shortest(d)); true }
+      { Ryu.append(sb, d, csv); true }
 
   /** A CSV field carries text raw (quoting is the line's job); JSON escapes it. */
   private def text(sb: Buf, s: String, csv: Boolean): Boolean = {

@@ -2591,9 +2591,7 @@ object LlmQueries extends QueryModule {
     // (localCheckpoint) and each round's state is k rows.
     "q174_kcenter_coreset" -> ((s, dir) =>
       kcenterChosen(vecTable(s, dir)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))")
-          .as("f")), k = 8)
+        .select(col("vec_id"), fixedPoint), k = 8)
         .orderBy(col("rnk"))),
 
     // --- mutual-kNN pair mining (q175): pairs of vectors that are each
@@ -2648,9 +2646,7 @@ object LlmQueries extends QueryModule {
     // converged, and the oracle re-derives all 20 rounds unrolled.
     "q171_embedding_pca" -> ((s, dir) =>
       pcaTopComponent(vecTable(s, dir)
-        .select(expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))")
-          .as("f")))
+        .select(fixedPoint))
         .orderBy(col("dim"))),
 
     // --- MMR diversified selection (q230): Carbonell & Goldstein's
@@ -2669,9 +2665,7 @@ object LlmQueries extends QueryModule {
     // window, no global sort, the corpus localCheckpointed once.
     "q230_mmr_select" -> ((s, dir) =>
       mmrChosen(vecTable(s, dir)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))")
-          .as("f")), k = 8)
+        .select(col("vec_id"), fixedPoint), k = 8)
         .orderBy(col("rnk"))),
 
     // --- duplicate-relation classification (q240): the triage step

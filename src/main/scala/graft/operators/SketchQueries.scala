@@ -405,9 +405,7 @@ object SketchQueries extends QueryModule {
       // JOIN counted them (r14 review; latent — testdata is clean)
       classSeparation(LlmQueries.vecTable(s, dir)
         .filter(col("embedding").isNotNull)
-        .select(col("label"), expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))")
-          .as("f")))
+        .select(col("label"), fixedPoint))
         .orderBy(col("dim"))),
 
     // --- int8 scalar-quantization audit (q234): the SQ8 compression
@@ -424,9 +422,7 @@ object SketchQueries extends QueryModule {
     "q234_sq8_audit" -> ((s, dir) =>
       sq8Audit(LlmQueries.vecTable(s, dir)
         .filter(col("embedding").isNotNull) // same rule as q231
-        .select(expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))")
-          .as("f")))
+        .select(fixedPoint))
         .orderBy(col("dim")))
   )
 

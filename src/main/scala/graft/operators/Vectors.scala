@@ -40,6 +40,11 @@ object Vectors {
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"): _*)
   }
 
+  /** `f`, the `embedding` column on the 2^16 integer grid: each component
+    * floor(x · 65536) as bigint, so sums and products stay exact. */
+  def fixedPoint: Column = expr(
+    "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))").as("f")
+
   /** L2 norm of array column `v`, as SQL. `vec_dot` is the codegen'd
     * [[graft.functions.VecDot]]: bit-identical to the HOF
     * `aggregate(zip_with(...))` fold (the same left-to-right IEEE sum

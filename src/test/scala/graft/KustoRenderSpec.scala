@@ -8,6 +8,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
+import java.time.LocalDate
+import java.time.format.DateTimeFormatter
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * /root/reference/pq2json/src/converter.rs unless noted.
   */
 class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  import KustoRenderSpec._
 
   @transient var spark: SparkSession = _
 
@@ -62,21 +67,82 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (!d.isNaN && !d.isInfinite) {
         val s = Ryu.shortest(d)
         assert(java.lang.Double.parseDouble(s) == d, s"round-trip $d -> $s")
-        // minimality: one fewer significant digit must NOT round-trip.
-        // significant digits = mantissa minus leading AND trailing zeros
-        // (positional zeros in "100.0"/"0.00001" are not significant).
-        val core = s.stripPrefix("-").takeWhile(_ != 'e').replace(".", "")
-        val sig = core.dropWhile(_ == '0').reverse.dropWhile(_ == '0').reverse
-        val nDigits = math.max(sig.length, 1)
-        if (nDigits > 1) {
-          val fewer = java.lang.String.format("%." + (nDigits - 2) + "e",
-            java.lang.Double.valueOf(d))
-          assert(java.lang.Double.parseDouble(fewer) != d,
-            s"$s not shortest: $fewer also round-trips")
-        }
+        if (!isExact(d)) fail(s"$s is not ${exactShortest(d)}")
       }
       i += 1
     }
+  }
+
+  test("ryu equals the exact oracle on the edge classes and on the trial loop's misrenders") {
+    val edge = scala.collection.mutable.ArrayBuffer(0.0, -0.0, Double.MinPositiveValue,
+      -Double.MinPositiveValue, Double.MaxValue, -Double.MaxValue, java.lang.Double.MIN_NORMAL)
+    for (b <- 1L until 4096L) edge += java.lang.Double.longBitsToDouble(b) // subnormals
+    for (e <- -1074 to 1023) edge += math.pow(2, e)
+    for (e <- -323 to 308) {
+      val p = s"1e$e".toDouble
+      edge ++= Seq(p, math.nextUp(p), math.nextDown(p))
+    }
+    // the notation switches: exponent -5 | -6 and 15 | 16
+    for (b <- Seq(1e-5, 1e16); n <- 1 to 50)
+      edge ++= Seq(b + (math.ulp(b) * n), b - (math.ulp(b) * n))
+    val rnd = new java.util.SplittableRandom(7)
+    for (_ <- 0 until 2000) // integers above 2^53
+      edge ++= Seq((9007199254740992L + rnd.nextLong(1L << 40)).toDouble,
+        rnd.nextLong(9007199254740992L, Long.MaxValue).toDouble)
+    // bit patterns the String.format trial loop rendered wrong (exponents
+    // 17, 18, 25): the first four were found by chance, the rest by a
+    // search in those decades; the loop's digits were not shortest or
+    // were the farther of two shortest candidates
+    edge ++= Seq(
+      0x43d73aa240bdce18L, 0xc3b3cc499111eeacL, 0xc53f96d914885d09L, 0x43d8a71a28c0c6f8L,
+      0x43db5d647777e465L, 0x43da072d17845447L, 0x43d8f10d26d65207L, 0x43d7eef0ffab4f23L,
+      0xc3dd99042248e323L, 0x43d444380011524cL, 0xc3d4b0d16eb74fb3L, 0xc3d4d859803c46aaL,
+      0x43d086627841ed63L, 0x43d4198c25599fa0L, 0xc3d753536f6e8878L, 0xc3de79a45e1416f3L,
+      0xc3ddad711054b379L, 0xc3d2020c9f8fb32aL, 0xc3d9f55e3f169942L, 0xc3df3259e7b06b28L,
+      0xc3d82401792bdd75L, 0xc3d0d67c24695d8eL, 0xc3d9a70e6f48d8baL, 0x43d159057813a1d4L,
+      0x43dd946d183fe99fL, 0xc3d63db718119925L, 0xc3dfccab310ab201L, 0xc3ddbc0dfd5813a3L,
+      0xc3de049a8f47f8b2L, 0xc3a0c03e70dac022L, 0x43ab619b406159e3L, 0xc3a4dbd7c9902e88L,
+      0x43a8610d0f0e17dcL, 0xc3a43bde79306ac8L, 0x43ab97c29726dbe7L, 0x43a0924713c86c6aL,
+      0x43a6a5a415a5a8d8L, 0x43a247330f300c97L, 0xc3a63ea0988b980eL, 0x43a96cce1734c9d3L,
+      0x43a8babd840f2977L, 0x43a2838ffce90c20L, 0xc3a06654c557f820L, 0xc3a5d1a50457475eL,
+      0x43a81c71f92ed904L, 0xc3d48a673c033804L, 0xc3d9dd710a169192L, 0xc3d1c7d4a135610aL,
+      0xc3bae1f8179ed811L, 0x43b3f84f9efdaca9L, 0x43b28c6c15ee7c2cL, 0xc3b0b35d803c5caaL,
+      0x43bdb747f5253816L, 0xc3bdc2512d998364L, 0xc3bc7de4514ffb9cL, 0x43d693eca8df49f0L,
+      0x43be60f4724b0a18L, 0x43bf0ea1f657d9e8L, 0x43bdd75ab8acd4f6L, 0xc3abcc4055f4a034L,
+      0x43bc420e5fe40b0bL, 0xc53f156cacdbda9aL, 0x45377cd1e44f186bL, 0xc53f992610e4dbd4L,
+      0xc53d05b0e25d8240L, 0xc5370494d69c7711L, 0xc53f9cb628817578L, 0xc53bee62be557224L,
+      0x453e0a6f44f5901bL, 0x453ee475c462538bL, 0xc539342dfba7c248L, 0x453a74d18a3ba77aL,
+      0xc536829b41ad8543L, 0xc53419e6afb38b5aL, 0x453e7bf4c45ca764L, 0xc538f82ce39ca268L,
+      0xc53ad973196f9d4bL
+    ).map(java.lang.Double.longBitsToDouble)
+    val bad = edge.filterNot(isExact)
+    assert(bad.isEmpty, bad.take(5).map(d => s"${Ryu.shortest(d)} != ${exactShortest(d)}"))
+  }
+
+  test("ryu equals Jackson's Schubfach, or the exact oracle where they differ, on 1M random patterns and NestedGen's doubles") {
+    var differ = 0
+    val bad = scala.collection.mutable.ArrayBuffer[Double]()
+    def check(d: Double): Unit = {
+      val mine = new java.math.BigDecimal(Ryu.shortest(d))
+      if (mine.compareTo(new java.math.BigDecimal(DoubleToDecimal.toString(d))) != 0) {
+        differ += 1
+        if (!isExact(d)) bad += d
+      }
+    }
+    val rnd = new java.util.SplittableRandom(20201019)
+    var i = 0
+    while (i < 1000000) {
+      val d = java.lang.Double.longBitsToDouble(rnd.nextLong())
+      if (!d.isNaN && !d.isInfinite) check(d)
+      i += 1
+    }
+    // every double the perfbench nested table can hold, whatever its
+    // seed: score k/997, ratio float k/7, geo lat and lon k/1000
+    for (k <- -1000000 until 1000000) check(k.toDouble / 997.0)
+    for (k <- 0 until 1000) check((k.toFloat / 7.0f).toDouble)
+    for (k <- -180000 until 180000) check(k.toDouble / 1000.0)
+    assert(bad.isEmpty, bad.take(5).map(d => s"${Ryu.shortest(d)} != ${exactShortest(d)}"))
+    info(s"$differ of them sent to the exact oracle")
   }
 
   test("ryu csv: trailing-zero strip, including the reference's 1e300 quirk") {
@@ -86,6 +152,55 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
     // converter.rs:210-212 strips '0' then '.' unconditionally — corrupting
     // scientific output; reproduced bug-for-bug.
     assert(Ryu.shortestCsv(1.0e300) == "1e3")
+  }
+
+  test("json and csv float text of the values the trial loop misrendered, and of the extremes") {
+    val cases = Seq(
+      java.lang.Double.longBitsToDouble(0x43d73aa240bdce18L) -> "6.69531444187027e18",
+      java.lang.Double.longBitsToDouble(0xc3b3cc499111eeacL) -> "-1.4265960693895444e18",
+      java.lang.Double.longBitsToDouble(0xc53f96d914885d09L) -> "-3.8189059803482717e25",
+      java.lang.Double.longBitsToDouble(0x43d8a71a28c0c6f8L) -> "7.105669361424916e18",
+      5e-324 -> "5e-324", // the JDK 19+ and Jackson spec print 4.9E-324
+      -Double.MinPositiveValue -> "-5e-324",
+      2 * Double.MinPositiveValue -> "1e-323",
+      1e23 -> "1e23",
+      Double.MaxValue -> "1.7976931348623157e308")
+    val df = spark.createDataFrame(
+      java.util.List.of(cases.map(c => Row(c._1)): _*),
+      StructType(Seq(StructField("d", DoubleType))))
+    assert(KustoRender.toKustoJson(df).collect().map(_.getString(0)).toSeq ==
+      cases.map(c => s"""{"d":${c._2}}"""))
+    assert(KustoRender.toKustoCsv(df).collect().map(_.getString(0)).toSeq == cases.map(_._2 + "\r"))
+  }
+
+  test("ISO date and timestamp writers are byte-identical to DateTimeFormatter") {
+    val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'", java.util.Locale.ROOT)
+      .withZone(java.time.ZoneOffset.UTC)
+    val sb = new java.lang.StringBuilder
+    val bad = scala.collection.mutable.ArrayBuffer[String]()
+    val y10k = LocalDate.of(10000, 1, 1).toEpochDay
+    var day = 0L
+    while (day <= y10k + 366) {
+      sb.setLength(0)
+      KustoRowRenderer.isoDate(sb, day.toInt)
+      val want = LocalDate.ofEpochDay(day).format(DateTimeFormatter.ISO_LOCAL_DATE)
+      if (sb.toString != want) bad += s"day $day: $sb != $want"
+      day += 1
+    }
+    def checkMs(ms: Long): Unit = {
+      sb.setLength(0)
+      KustoRowRenderer.isoTimestamp(sb, ms)
+      val want = tsFmt.format(java.time.Instant.ofEpochMilli(ms))
+      if (sb.toString != want) bad += s"ms $ms: $sb != $want"
+    }
+    val y10kMs = y10k * 86400000L
+    Seq(0L, 1L, 86399999L, y10kMs - 1, y10kMs, y10kMs + 1, Long.MaxValue).foreach(checkMs)
+    val rnd = new java.util.SplittableRandom(1970)
+    for (_ <- 0 until 1000000) { checkMs(rnd.nextLong(Long.MaxValue)); checkMs(rnd.nextLong(y10kMs)) }
+    assert(bad.isEmpty, bad.take(5))
+    sb.setLength(0)
+    KustoRowRenderer.isoTimestamp(sb, y10kMs - 1)
+    assert(sb.toString == "9999-12-31T23:59:59.999000Z")
   }
 
   // ---- scalar render expressions -----------------------------------------
@@ -423,5 +538,37 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(csl("bin") == "dynamic" && csl("nested") == "dynamic")
     val rgs = graft.sources.ParquetMetadata.rowGroups(file)
     assert(rgs.nonEmpty && rgs.head.numberOfRows == "1")
+  }
+}
+
+object KustoRenderSpec {
+  import java.math.{BigDecimal, MathContext, RoundingMode}
+
+  /** The exact shortest-and-closest decimal of finite, nonzero `d`: for the
+    * smallest p where the FLOOR or the CEILING p-digit rounding of the exact
+    * binary value parses back to `d`, the one of those that does; if both
+    * do, the closer, and on a tie the one with the even last digit. About
+    * 50 µs a call, so bulk checks go through Jackson first. */
+  def exactShortest(d: Double): BigDecimal = {
+    val x = new BigDecimal(d)
+    (1 to 17).iterator.map { p =>
+      val lo = x.round(new MathContext(p, RoundingMode.FLOOR))
+      val hi = x.round(new MathContext(p, RoundingMode.CEILING))
+      (lo.doubleValue == d, hi.doubleValue == d) match {
+        case (true, true) =>
+          val c = x.subtract(lo).abs.compareTo(hi.subtract(x).abs)
+          Some(if (c < 0 || (c == 0 && !lo.unscaledValue.testBit(0))) lo else hi)
+        case (true, false) => Some(lo)
+        case (false, true) => Some(hi)
+        case _ => None
+      }
+    }.collectFirst { case Some(b) => b }.get
+  }
+
+  /** `Ryu.shortest(d)` is the text of the exact decimal (zeros: of `d`). */
+  def isExact(d: Double): Boolean = {
+    val s = Ryu.shortest(d)
+    if (d == 0.0) s == (if (1.0 / d < 0) "-0.0" else "0.0")
+    else new BigDecimal(s).compareTo(exactShortest(d)) == 0
   }
 }

@@ -820,6 +820,34 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("q247 vector admission: a streamed vector equidistant from two centroids lands in the smaller cid, as Vectors.nearestCentroid") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    graft.functions.GraftFunctions.register(sp) // vec_dot
+    // (1,0,0,0) is at squared distance 0.25 from cids 5 and 3, 4.0 from 0
+    val cells = Seq((5, Seq(1.0, -0.5, 0.0, 0.0)), (0, Seq(-1.0, 0.0, 0.0, 0.0)),
+      (3, Seq(1.0, 0.5, 0.0, 0.0))).toDF("cid", "cv")
+    // one member per tied cell, parallel to the vector: it matches in either
+    val members = Seq((100L, 3, Seq(2.0, 0.0, 0.0, 0.0), 2.0),
+      (101L, 5, Seq(2.0, 0.0, 0.0, 0.0), 2.0)).toDF("vec_id", "cell", "av", "anrm")
+    val mem = MemoryStream[NewVec]
+    val q = StreamingQueries.vectorAdmission(sp, mem.toDF(), cells, members)
+      .writeStream.format("memory").queryName("vadm_tie")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      mem.addData(NewVec(1L, Seq(3.0, 0.0, 0.0, 0.0), ts("2024-01-01T00:00:00Z")))
+      q.processAllAvailable()
+      val streamed = sp.table("vadm_tie").select("vec_id", "cell", "mbr")
+        .as[(Long, Int, Long)].collect().toSeq
+      assert(streamed == Seq((1L, 3, 100L)))
+      val batch = graft.operators.Vectors.nearestCentroid(
+          Seq((1L, Seq(1.0, 0.0, 0.0, 0.0))).toDF("vec_id", "v"), cells, "v", "cv")
+        .select("vec_id", "cid", "d2").as[(Long, Int, Double)].collect().toSeq
+      assert(batch == Seq((1L, 3, 0.25)))
+    } finally q.stop()
+  }
+
   test("q263 tombstone ledger: streamed deletion feed matches the batch gate; replayed tombstones dedup") {
     val sp = spark
     import sp.implicits._
