@@ -1,12 +1,13 @@
 package graft
 
 import graft.functions.{KustoRender, KustoRenderOptions, KustoRowRenderer, TimestampMode}
-import graft.sources.ParquetMetadata
+import graft.sources.{ParquetMetadata, RowRangeScan}
 import org.apache.spark.{SimpleFutureAction, SparkEnv}
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
@@ -28,13 +29,21 @@ import scala.util.Try
   *   - errors print `ERROR: ...` on stderr and exit nonzero
   *     (`main.rs:159-165`).
   *   - conversion streams like the reference's row loop
-  *     (`converter.rs:133`), but one input split per Spark job, with up to
-  *     `defaultParallelism` jobs in flight; each returns its split's lines
-  *     as one compressed UTF-8 block, written to OUT strictly in split
-  *     order. Driver memory is at most `defaultParallelism` compressed
-  *     blocks, each under `spark.driver.maxResultSize`. Row order is scan
-  *     order, which for a single parquet file matches the reference's
-  *     file order.
+  *     (`converter.rs:133`), but one row range per Spark job, with up to
+  *     `defaultParallelism` jobs in flight; each returns its range's lines
+  *     as one compressed UTF-8 block, written to OUT strictly in scan
+  *     order. The ranges come from Spark's planned splits
+  *     ([[graft.sources.RowRangeScan]]): a row group of a file that Spark
+  *     cut into several splits — or of any file, when the scan has fewer
+  *     splits than cores — is cut into batch-aligned row ranges, so a
+  *     one-row-group file converts on every core; other splits stay whole.
+  *     A cut range carries at most 64 MiB of its row group's footer
+  *     `totalByteSize` (`RowRangeScan.MaxRangeBytes`), so its block stays
+  *     far below `spark.driver.maxResultSize` however large the group; a
+  *     whole split's block is as large as the split's rendered text.
+  *     Driver memory is at most `defaultParallelism` compressed blocks.
+  *     Row order is scan order, which for a single parquet file matches
+  *     the reference's file order.
   *   - a failed write to OUT (full disk, closed pipe) is an error, not a
   *     silently truncated output.
   */
@@ -164,8 +173,7 @@ object Pq2Json {
       // driver-side footer reads to O(directories) instead of O(files).
       // *.parquet-named files are sampled FIRST so a stray non-parquet
       // file cannot mask a brotli data file behind it; depth is capped so
-      // a symlink cycle cannot recurse forever. Unreadable footers are
-      // skipped — the scan itself will produce its own error for those.
+      // a symlink cycle cannot recurse forever.
       def sampleFiles(f: java.io.File, depth: Int = 0): Seq[String] =
         if (f.isFile) Seq(f.getPath)
         else if (f.isDirectory && depth < 32) {
@@ -181,6 +189,11 @@ object Pq2Json {
               .flatMap(sampleFiles(_, depth + 1))
         } else Seq.empty
       val sampled = sampleFiles(new java.io.File(a.input))
+      // Each sampled footer is read once: the codec gate, the u64 verdict
+      // and the stream's row-range plan all derive from the same value.
+      // Unreadable footers are skipped — the scan itself will produce its
+      // own error for those.
+      val footers = sampled.flatMap(p => Try(p -> ParquetMetadata.footer(p)).toOption)
       // When the host provides libbrotlidec (+ a C compiler for the JNI
       // shim), graft.sources.BrotliNative backs the
       // org.apache.hadoop.io.compress.BrotliCodec we ship under the
@@ -189,9 +202,7 @@ object Pq2Json {
       // the box. The fail-fast below is the degrade for hosts where the
       // native decoder cannot load.
       if (!graft.sources.BrotliNative.usable)
-        sampled.find { p =>
-          scala.util.Try(ParquetMetadata.codecs(p).contains("BROTLI")).getOrElse(false)
-        }.foreach { p =>
+        footers.collectFirst { case (p, f) if ParquetMetadata.codecs(f).contains("BROTLI") => p }.foreach { p =>
           throw new IllegalArgumentException(
             s"unsupported compression codec BROTLI in $p: no brotli parquet " +
               "codec is available to Spark on this host (" +
@@ -203,12 +214,9 @@ object Pq2Json {
       // Decimal(20,0) (indistinguishable from a true decimal), but the
       // reference renders raw u64 as a bare unsigned JSON number
       // (`converter.rs:296-302`) — the sampled footers carry the
-      // distinction into the render options. Unreadable footers are
-      // skipped like the codec pre-check.
-      val u64Sampled = sampled.flatMap { p =>
-        scala.util.Try((ParquetMetadata.unsignedInt64Paths(p),
-          ParquetMetadata.primitivePaths(p))).toOption
-          .map { case (u64, all) => (p, u64, all) }
+      // distinction into the render options.
+      val u64Sampled = footers.map { case (p, f) =>
+        (p, ParquetMetadata.unsignedInt64Paths(f), ParquetMetadata.primitivePaths(f))
       }
       val u64Paths = u64Sampled.flatMap(_._2).toSet
       u64FooterWarnings(u64Sampled).foreach(System.err.println)
@@ -249,24 +257,35 @@ object Pq2Json {
         // faithful and -d is the scale escape hatch; within each part
         // file, line order is scan order.
         rendered.write.mode("overwrite").text(a.output.get) // parseArgs requires -o
-      } else stream(rendered, out)
+      } else stream(rendered, out, footers.map { case (p, f) =>
+        java.nio.file.Paths.get(p).toAbsolutePath.normalize.toUri.getPath -> f
+      }.toMap)
     }
   }
 
   private val MinPartitionNum = "spark.sql.files.minPartitionNum"
 
   /** Writes `rendered`'s one text column to `out`, a line per row, in
-    * partition order. Each partition is one Spark job returning one
-    * [[encodeBlock]]; at most `defaultParallelism` jobs are in flight, and
-    * partition `i + window` is submitted once block `i` is written, so the
-    * driver holds at most `window` compressed blocks and never decodes a
-    * row. Any failure (a job's, or the write's) cancels the jobs in
-    * flight and waits for them to end before it propagates. */
-  private def stream(rendered: DataFrame, out: java.io.PrintStream): Unit = {
+    * scan order. The scan is first cut into row ranges
+    * ([[RowRangeScan.plan]]; `footers` holds the footers already read, by
+    * local path). Each partition — a range, or a split left whole — is one
+    * Spark job returning one [[encodeBlock]]; at most `defaultParallelism`
+    * jobs are in flight, and partition `i + window` is submitted once
+    * block `i` is written, so the driver holds at most `window` compressed
+    * blocks and never decodes a row. Any failure (a job's, or the
+    * write's) cancels the jobs in flight and waits for them to end before
+    * it propagates. */
+  private def stream(rendered: DataFrame, out: java.io.PrintStream,
+      footers: Map[String, ParquetMetadata.Footer]): Unit = {
     val qe = rendered.queryExecution
     val sc = rendered.sparkSession.sparkContext
+    def footerOf(f: PartitionedFile): Option[ParquetMetadata.Footer] = {
+      val uri = f.toPath.toUri
+      val local = if (uri.getScheme == null || uri.getScheme == "file") footers.get(uri.getPath) else None
+      local.orElse(Try(ParquetMetadata.footer(f.toPath.toString, sc.hadoopConfiguration)).toOption)
+    }
     SQLExecution.withNewExecutionId(qe, Some("pq2json")) {
-      val rows = qe.toRdd
+      val rows = RowRangeScan.prepare(qe, footerOf).map(_.execute()).getOrElse(qe.toRdd)
       val n = rows.getNumPartitions
       val codec = new LZ4CompressionCodec(sc.getConf)
       val inFlight = new java.util.ArrayDeque[SimpleFutureAction[Array[Byte]]]()

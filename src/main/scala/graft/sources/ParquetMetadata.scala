@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata => PqFooter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType, Type => PType}
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -28,19 +29,28 @@ object ParquetMetadata {
     * (`schema.rs:129-135`). */
   final case class RowGroupInfo(numberOfRows: String, totalByteSize: String)
 
-  private def footer(path: String) = {
-    val in = HadoopInputFile.fromPath(new Path(path), new Configuration())
-    val reader = ParquetFileReader.open(in)
-    try (reader.getFileMetaData, reader.getFooter)
+  /** One file's footer, read once; every footer-only report derives from
+    * it. `blocks` are the row groups in file order. */
+  final case class Footer(meta: PqFooter) {
+    def schema: MessageType = meta.getFileMetaData.getSchema
+    def blocks: Seq[BlockMetaData] = meta.getBlocks.asScala.toSeq
+  }
+
+  /** Building a `Configuration` loads Hadoop's default resources on every
+    * call (about 10 ms), so the local footer reads share one. */
+  private lazy val localConf = new Configuration()
+
+  /** Reads `path`'s footer, all row groups included. `conf` supplies the
+    * filesystem settings; the default reads local files. */
+  def footer(path: String, conf: Configuration = localConf): Footer = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    try Footer(reader.getFooter)
     finally reader.close()
   }
 
   /** Parquet schema tree + key-value metadata, the `--schema` op
     * (`schema.rs:18-35`). */
-  def schemaString(path: String): String = {
-    val (meta, _) = footer(path)
-    meta.getSchema.toString
-  }
+  def schemaString(path: String): String = footer(path).schema.toString
 
   /** The `--cslschema` op (`schema.rs:43-109`): map each top-level field of
     * the Parquet message type onto Kusto's 8-type surface. Port of the
@@ -59,10 +69,8 @@ object ParquetMetadata {
     * visibility rule bug-for-bug on both legacy and modern files: a naive
     * or NANOS timestamp column maps to `long`.
     */
-  def cslSchema(path: String): Seq[CslColumn] = {
-    val (meta, _) = footer(path)
-    meta.getSchema.getFields.asScala.toSeq.map(f => CslColumn(f.getName, fieldCslType(f)))
-  }
+  def cslSchema(path: String): Seq[CslColumn] =
+    footer(path).schema.getFields.asScala.toSeq.map(f => CslColumn(f.getName, fieldCslType(f)))
 
   private def fieldCslType(t: PType): String = t match {
     case _: GroupType => "dynamic" // schema.rs:107
@@ -137,8 +145,8 @@ object ParquetMetadata {
     * Paths cover primitives reachable through plain (non-REPEATED)
     * groups — the struct-nesting case; u64 inside lists/maps keeps the
     * decimal-string rendering (documented, exotic for raw-u64 files). */
-  def unsignedInt64Paths(path: String): Set[String] =
-    walkPrimitivePaths(path) { p =>
+  def unsignedInt64Paths(f: Footer): Set[String] =
+    walkPrimitivePaths(f) { p =>
       import org.apache.parquet.schema.PrimitiveType.{PrimitiveTypeName => PTN}
       p.getPrimitiveTypeName == PTN.INT64 &&
         (p.getLogicalTypeAnnotation match {
@@ -153,12 +161,13 @@ object ParquetMetadata {
     * [[unsignedInt64Paths]]. Lets the u64 footer-disagreement check tell
     * "path absent from this footer's schema" (a partial-schema dump, not
     * a disagreement) apart from "path present but signed" (ADVICE r12). */
-  def primitivePaths(path: String): Set[String] =
-    walkPrimitivePaths(path)(_ => true)
+  def primitivePaths(f: Footer): Set[String] =
+    walkPrimitivePaths(f)(_ => true)
 
-  private def walkPrimitivePaths(path: String)
-                                (pred: PrimitiveType => Boolean): Set[String] = {
-    val (meta, _) = footer(path)
+  def unsignedInt64Paths(path: String): Set[String] = unsignedInt64Paths(footer(path))
+  def primitivePaths(path: String): Set[String] = primitivePaths(footer(path))
+
+  private def walkPrimitivePaths(f: Footer)(pred: PrimitiveType => Boolean): Set[String] = {
     def walk(t: PType, prefix: String): Seq[String] = t match {
       case p: PrimitiveType =>
         if (pred(p) && !p.isRepetition(PType.Repetition.REPEATED))
@@ -169,7 +178,7 @@ object ParquetMetadata {
       case g: GroupType =>
         g.getFields.asScala.toSeq.flatMap(walk(_, prefix + g.getName + "."))
     }
-    meta.getSchema.getFields.asScala.toSeq.flatMap(walk(_, "")).toSet
+    f.schema.getFields.asScala.toSeq.flatMap(walk(_, "")).toSet
   }
 
   /** Distinct compression codec names used by any column chunk (footer
@@ -181,18 +190,13 @@ object ParquetMetadata {
     * libbrotlidec through [[graft.sources.BrotliNative]]) and fail fast
     * with a clear message only on hosts where that native path cannot
     * load. */
-  def codecs(path: String): Set[String] = {
-    val (_, blocks) = footer(path)
-    blocks.getBlocks.asScala
-      .flatMap(_.getColumns.asScala.map(_.getCodec.name())).toSet
-  }
+  def codecs(f: Footer): Set[String] =
+    f.blocks.flatMap(_.getColumns.asScala.map(_.getCodec.name())).toSet
+
+  def codecs(path: String): Set[String] = codecs(footer(path))
 
   /** The `--rowgroups` op (`schema.rs:118-143`): per row group
     * `{numberOfRows, totalByteSize}` — string-typed like the reference. */
-  def rowGroups(path: String): Seq[RowGroupInfo] = {
-    val (_, blocks) = footer(path)
-    blocks.getBlocks.asScala.toSeq.map { b =>
-      RowGroupInfo(b.getRowCount.toString, b.getTotalByteSize.toString)
-    }
-  }
+  def rowGroups(path: String): Seq[RowGroupInfo] =
+    footer(path).blocks.map(b => RowGroupInfo(b.getRowCount.toString, b.getTotalByteSize.toString))
 }

@@ -26,4 +26,11 @@ object GraftShims {
     * set on the copy never reach `spark` (`cloneSession` is private[sql]). */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Runs the physical preparation rules (transitions, whole-stage
+    * codegen) over `plan`, as `QueryExecution` does for its own plan. */
+  def prepareExecutedPlan(spark: SparkSession,
+      plan: org.apache.spark.sql.execution.SparkPlan): org.apache.spark.sql.execution.SparkPlan =
+    org.apache.spark.sql.execution.QueryExecution.prepareExecutedPlan(
+      spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -403,4 +403,174 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(!spark.conf.getAll.contains(key))
   }
+
+  /** One file of 50,000 rows in one row group: 13 reader batches of 4096
+    * rows, the last partial, with flat, nested and null values. */
+  private lazy val oneGroupFile: String = {
+    val dir = Files.createTempDirectory("one-group").resolve("out").toString
+    spark.range(50000).selectExpr("id",
+      "CASE WHEN id % 5 = 0 THEN NULL ELSE concat('s-', id) END AS s",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE id / 8.0 END AS d",
+      "named_struct('a', id % 7, 'b', array(cast(id AS string), NULL)) AS st",
+      "CASE WHEN id % 3 = 0 THEN NULL ELSE map('k', id) END AS m")
+      .coalesce(1).write.parquet(dir)
+    val file = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    assert(graft.sources.ParquetMetadata.rowGroups(file).length == 1)
+    file
+  }
+
+  test("stream: one row group converts as row ranges on several jobs, line for line (JSON, CSV, -c)") {
+    val file = oneGroupFile
+    val df = spark.read.parquet(file)
+    def lines(rendered: DataFrame, end: String) =
+      rendered.collect().map(_.getString(0) + end).mkString
+    val cols = Seq("st", "nope", "id", "m")
+    val cases = Seq(
+      Array(file) -> lines(KustoRender.toKustoJson(df), "\n"),
+      Array("--csv", file) -> lines(KustoRender.toKustoCsv(df), "\n"),
+      Array("-c", """["st","nope","id","m"]""", file) ->
+        lines(KustoRender.toKustoJson(df.select("st", "id", "m")), "\n"),
+      Array("--csv", "-c", """["st","nope","id","m"]""", file) ->
+        lines(KustoRender.toKustoCsv(df, Some(cols)), "\n"))
+    // the columnar scan skips whole batches; the row scan drops rows
+    for (vectorized <- Seq("true", "false"); (args, expected) <- cases)
+      withConf("spark.sql.parquet.enableVectorizedReader" -> vectorized) {
+        val got = watchingJobs { w =>
+          val out = capture(args)
+          SchedulerProbe.drain(spark.sparkContext)
+          // the schema job, then one job per range: more than one range
+          assert(w.started.get() > 2, s"${args.mkString(" ")}: ${w.started.get()} jobs")
+          out
+        }
+        assert(got.count(_ == '\n') == 50000)
+        assert(got == expected, s"vectorized=$vectorized ${args.mkString(" ")}")
+      }
+  }
+
+  test("row ranges: each split owns the row groups parquet-mr's range filter gives it") {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("owned").resolve("out").toString
+    spark.range(0, 40000).selectExpr("id", "concat('row-', id) AS s").coalesce(1)
+      .write.option("parquet.block.size", "32768").parquet(dir)
+    val file = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    val footer = graft.sources.ParquetMetadata.footer(file)
+    assert(footer.blocks.length >= 5, footer.blocks.length)
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (maxBytes <- Seq("4096", "20000", "65536", "1000000")) withConf(
+        "spark.sql.files.maxPartitionBytes" -> maxBytes,
+        "spark.sql.files.openCostInBytes" -> "0") {
+      val splits = spark.read.parquet(file).queryExecution.executedPlan
+        .collectFirst { case s: FileSourceScanExec => s }.get
+        .inputRDD.asInstanceOf[FileScanRDD].filePartitions.flatMap(_.files)
+      val owned = splits.map { f =>
+        val ours = graft.sources.RowRangeScan.ownedGroups(footer.blocks, f.start, f.length)
+          .map(footer.blocks(_).getStartingPos)
+        val theirs = org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
+          new org.apache.hadoop.fs.Path(file),
+          ParquetMetadataConverter.range(f.start, f.start + f.length))
+          .getBlocks.asScala.map(_.getStartingPos).toSeq
+        assert(ours == theirs, s"maxPartitionBytes=$maxBytes split ${f.start}+${f.length}")
+        ours
+      }
+      // every row group is read by exactly one split
+      assert(owned.flatten.sorted == footer.blocks.map(_.getStartingPos).sorted, maxBytes)
+    }
+  }
+
+  test("row ranges: cuts are batch-aligned, cover the group, and keep every range under its byte share") {
+    import graft.sources.RowRangeScan.{cut, MaxRangeBytes}
+    def check(rows: Long, bytes: Long, batch: Int, pieces: Int, maxBytes: Long = MaxRangeBytes) = {
+      val c = cut(rows, bytes, batch, pieces, maxBytes)
+      assert(c.head._1 == 0 && c.last._2 == rows)
+      assert(c.zip(c.tail).forall { case (a, b) => a._2 == b._1 && a._1 < a._2 })
+      assert(c.init.forall(r => r._2 % batch == 0))
+      // the share of the footer's totalByteSize a range carries, pro rata
+      // by rows, exceeds maxBytes only where the range is a single batch
+      assert(c.forall { case (lo, hi) =>
+        BigInt(hi - lo) * bytes <= BigInt(maxBytes) * rows || hi - lo <= batch })
+      c
+    }
+    assert(check(600000, 90L << 20, 4096, 4).length == 4)
+    assert(check(10, 1000, 4096, 4) == Seq((0L, 10L))) // one batch: nothing to cut
+    // 13 batches: ranges of at least MinRangeBatches, however many cores
+    assert(check(50000, 1000, 4096, 4).length == 3)
+    assert(check(50000, 1000, 4096, 40).length == 3)
+    assert(check(6000, 1000, 4096, 4).length == 1)
+    // large groups: the byte share, not the core count, sets the cuts
+    val big = check(50000000, 10L << 30, 4096, 4)
+    assert(big.length >= 160, big.length)
+    assert(check(3000000000L, 200L << 30, 4096, 1).length >= 3200)
+    // a batch over the share: one batch per range
+    assert(check(50000, 10L << 30, 4096, 1, maxBytes = 1).length == 13)
+    assert(cut(0, 0, 4096, 4).isEmpty)
+  }
+
+  test("row ranges: the planner keeps every range of a real file under its byte share") {
+    val file = oneGroupFile
+    val footer = graft.sources.ParquetMetadata.footer(file)
+    val g = footer.blocks.head
+    val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
+      org.apache.spark.sql.catalyst.InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(file), 0, new java.io.File(file).length)
+    val share = g.getTotalByteSize / 6
+    val ranges = graft.sources.RowRangeScan.plan(
+      Seq(org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf))),
+      parallelism = 2, batchSize = 4096, _ => Some(footer), maxBytes = share).get
+    assert(ranges.length >= 6, ranges.length)
+    assert(ranges.head.lo == 0 && ranges.last.hi == g.getRowCount)
+    assert(ranges.forall(r => BigInt(r.hi - r.lo) * g.getTotalByteSize <= BigInt(share) * g.getRowCount))
+    // each range reads only its row group's bytes
+    assert(ranges.forall(r => r.files.length == 1 && r.files.head.start == g.getStartingPos &&
+      r.files.head.length == g.getCompressedSize))
+    // a scan with enough splits for every core and no file cut is left as planned
+    assert(graft.sources.RowRangeScan.plan(
+      Seq(org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf))),
+      parallelism = 1, batchSize = 4096, _ => Some(footer)).isEmpty)
+  }
+
+  test("row ranges: slicing keeps exactly rows [lo, hi) inside and at batch edges, including the last partial batch") {
+    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.vectorized.ColumnarBatch
+    val sizes = Seq(4, 4, 4, 2) // rows 0..13, the last batch partial
+    val st = StructType(Seq(StructField("x", LongType)))
+    /** Batches of ids and structs {x: -id}, every fifth id null; counts pulls. */
+    def batches(pulled: java.util.concurrent.atomic.AtomicInteger) =
+      sizes.scanLeft(0)(_ + _).zip(sizes).iterator.map { case (start, n) =>
+        pulled.incrementAndGet()
+        val id = new OnHeapColumnVector(n, IntegerType)
+        val s = new OnHeapColumnVector(n, st)
+        (0 until n).foreach { i =>
+          val v = start + i
+          if (v % 5 == 0) { id.putNull(i); s.putNull(i); s.getChild(0).putNull(i) }
+          else { id.putInt(i, v); s.getChild(0).putLong(i, -v.toLong) }
+        }
+        new ColumnarBatch(Array(id, s), n)
+      }
+    def expected(lo: Int, hi: Int) = (lo until hi).map(v =>
+      if (v % 5 == 0) (None, None) else (Some(v), Some(-v.toLong)))
+    for (lo <- 0 to 14; hi <- lo to 15) {
+      val pulled = new java.util.concurrent.atomic.AtomicInteger()
+      val got = graft.sources.RowRangeScan.sliceBatches(batches(pulled), lo, hi).flatMap { b =>
+        (0 until b.numRows).map { i =>
+          val r = b.getRow(i)
+          (if (r.isNullAt(0)) None else Some(r.getInt(0)),
+            if (r.isNullAt(1)) None else Some(r.getStruct(1, 1).getLong(0)))
+        }
+      }.toSeq
+      assert(got == expected(lo, math.min(hi, 14)), s"lo=$lo hi=$hi")
+      // no batch past the one holding row hi - 1 is pulled
+      val need = if (hi == lo) 0 else sizes.scanLeft(0)(_ + _).indexWhere(_ >= math.min(hi, 14))
+      assert(hi == lo || pulled.get() == need, s"lo=$lo hi=$hi pulled=${pulled.get()}")
+      val rows = graft.sources.RowRangeScan.sliceRows(
+        (0 until 14).iterator.map(v => org.apache.spark.sql.catalyst.InternalRow(v)), lo, hi)
+      assert(rows.map(_.getInt(0)).toSeq == (lo until math.min(hi, 14)), s"rows lo=$lo hi=$hi")
+    }
+  }
 }
+
