@@ -37,10 +37,12 @@ import scala.util.Try
   *     cut into several splits — or of any file, when the scan has fewer
   *     splits than cores — is cut into batch-aligned row ranges, so a
   *     one-row-group file converts on every core; other splits stay whole.
-  *     A cut range carries at most 64 MiB of its row group's footer
-  *     `totalByteSize` (`RowRangeScan.MaxRangeBytes`), so its block stays
-  *     far below `spark.driver.maxResultSize` however large the group; a
-  *     whole split's block is as large as the split's rendered text.
+  *     The cut is for parallelism: a group becomes at most as many
+  *     ranges as there are cores, so a range's block is about its group's
+  *     rendered text over that count, and a whole split's block is as
+  *     large as the split's rendered text. Neither is bounded by the
+  *     data: a row group whose text over the core count exceeds
+  *     `spark.driver.maxResultSize` still fails the conversion.
   *     Driver memory is at most `defaultParallelism` compressed blocks.
   *     Row order is scan order, which for a single parquet file matches
   *     the reference's file order.
@@ -267,8 +269,8 @@ object Pq2Json {
 
   /** Writes `rendered`'s one text column to `out`, a line per row, in
     * scan order. The scan is first cut into row ranges
-    * ([[RowRangeScan.plan]]; `footers` holds the footers already read, by
-    * local path). Each partition — a range, or a split left whole — is one
+    * ([[RowRangeScan.prepare]]; `footers` holds the footers already read,
+    * by local path; any other is read at most once). Each partition — a range, or a split left whole — is one
     * Spark job returning one [[encodeBlock]]; at most `defaultParallelism`
     * jobs are in flight, and partition `i + window` is submitted once
     * block `i` is written, so the driver holds at most `window` compressed
@@ -281,8 +283,7 @@ object Pq2Json {
     val sc = rendered.sparkSession.sparkContext
     def footerOf(f: PartitionedFile): Option[ParquetMetadata.Footer] = {
       val uri = f.toPath.toUri
-      val local = if (uri.getScheme == null || uri.getScheme == "file") footers.get(uri.getPath) else None
-      local.orElse(Try(ParquetMetadata.footer(f.toPath.toString, sc.hadoopConfiguration)).toOption)
+      if (uri.getScheme == null || uri.getScheme == "file") footers.get(uri.getPath) else None
     }
     SQLExecution.withNewExecutionId(qe, Some("pq2json")) {
       val rows = RowRangeScan.prepare(qe, footerOf).map(_.execute()).getOrElse(qe.toRdd)

@@ -3,6 +3,7 @@ package graft.sources
 import graft.sources.ParquetMetadata.Footer
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,9 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
 import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.Decimal
-import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
+
+import scala.util.Try
 
 /** Rows `[lo, hi)` of what `files` read, counted from the first row they
   * read. A range cut from a row group holds one file narrowed to that
@@ -30,12 +31,15 @@ final case class RowRange(files: Array[PartitionedFile], lo: Long, hi: Long) {
   *
   * [[plan]] starts from Spark's own `FilePartition`s, in Spark's order.
   * Files that Spark cut into more than one split, or every file when the
-  * scan has fewer splits than `defaultParallelism`, are cut: each split
-  * owns the row groups whose midpoint lies in its byte range (parquet-mr's
-  * rule), and each owned group becomes up to `defaultParallelism` ranges
-  * whose boundaries are multiples of the columnar reader's batch size,
-  * and of at most [[MaxRangeBytes]] of the group's footer `totalByteSize`
-  * each. Every other split stays whole, and its footer is not read.
+  * scan has fewer splits than `defaultParallelism`, are candidates: each
+  * split owns the row groups whose midpoint lies in its byte range
+  * (parquet-mr's rule), and each owned group is cut into up to
+  * `defaultParallelism` / groups ranges whose boundaries are multiples of
+  * the columnar reader's batch size. A file none of whose owned groups is
+  * cut stays in its split as planned, and every other split stays whole
+  * without its footer being read. The cut is for parallelism only, so a
+  * range's block is about its group's text over the number of its
+  * ranges; no byte share bounds it.
   *
   * [[RowRangeScanExec]] reads the ranges through the planned scan's own
   * `FileScanRDD`: a cut range reads only its row group, skips whole
@@ -43,11 +47,6 @@ final case class RowRange(files: Array[PartitionedFile], lo: Long, hi: Long) {
   * at `hi`. The batches before `lo` are still decoded; only their
   * rendering is saved. */
 object RowRangeScan {
-
-  /** The most footer `totalByteSize` one range carries, unless a single
-    * reader batch holds more: the block a range renders to stays far
-    * below `spark.driver.maxResultSize`. */
-  val MaxRangeBytes: Long = 64L << 20
 
   /** Indices of the row groups that a split over bytes
     * `[start, start + length)` reads: those whose midpoint lies inside it,
@@ -58,46 +57,36 @@ object RowRangeScan {
       mid >= start && mid < start + length
     }
 
-  /** The fewest reader batches a range is cut to for parallelism alone:
-    * a range pays for its own job, which re-reads its row group's column
-    * chunks, so a group too small to give each core this much stays
-    * whole. */
+  /** The fewest reader batches a range is cut to: a range pays for its
+    * own job, which re-reads its row group's column chunks, so a group
+    * too small to give each core this much stays whole. */
   val MinRangeBatches = 4
 
-  /** A row group of `rows` rows cut into batch-aligned `[lo, hi)` ranges:
-    * up to `pieces` of at least [[MinRangeBatches]] batches each, and as
-    * many more as keep every range under `maxBytes` of `totalByteSize`
-    * (pro rata by rows). A range holds at least one batch. */
-  def cut(rows: Long, totalByteSize: Long, batchSize: Int, pieces: Int,
-      maxBytes: Long = MaxRangeBytes): Seq[(Long, Long)] = if (rows <= 0) Nil else {
-    val batches = ceilDiv(rows, batchSize)
-    // the most whole batches one range may hold and stay under maxBytes
-    val perRange =
-      if (totalByteSize <= 0) batches
-      else (BigInt(maxBytes) * rows / (BigInt(batchSize) * totalByteSize))
-        .min(BigInt(batches)).toLong.max(1L)
-    val forCores = math.min(pieces.toLong, batches / MinRangeBatches)
-    val k = math.min(batches, math.max(1L, math.max(forCores, ceilDiv(batches, perRange))))
+  /** A row group of `rows` rows cut into up to `pieces` batch-aligned
+    * `[lo, hi)` ranges of at least [[MinRangeBatches]] batches each; one
+    * range when the group is too small to cut. */
+  def cut(rows: Long, batchSize: Int, pieces: Int): Seq[(Long, Long)] = if (rows <= 0) Nil else {
+    val batches = (rows + batchSize - 1) / batchSize
+    val k = math.max(1L, math.min(pieces.toLong, batches / MinRangeBatches))
     (0L until k).map(i =>
       (i * batches / k * batchSize, math.min((i + 1) * batches / k * batchSize, rows)))
   }
 
-  private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
-
   /** The ranges over `partitions`, in order; None when no row group is
     * cut into more than one range, so the scan runs as Spark planned it.
-    * `footer` is asked only for the files to cut; a file whose footer
-    * cannot be read stays whole. */
+    * `footer` is asked once per file to cut, and only for those; a file
+    * whose footer cannot be read stays whole. */
   def plan(partitions: Seq[FilePartition], parallelism: Int, batchSize: Int,
-      footer: PartitionedFile => Option[Footer],
-      maxBytes: Long = MaxRangeBytes): Option[Seq[RowRange]] = {
+      footer: PartitionedFile => Option[Footer]): Option[Seq[RowRange]] = {
     val splitsOf = partitions.flatMap(_.files).groupMapReduce(_.filePath)(_ => 1)(_ + _)
     val cutAll = partitions.length < parallelism
+    val footers = scala.collection.mutable.Map.empty[SparkPath, Option[Footer]]
     // per planned split, each file with the row groups it owns (None: read whole)
     val layout = partitions.map(_.files.toSeq.map { f =>
       val groups =
         if (cutAll || splitsOf(f.filePath) > 1)
-          footer(f).map(ft => ownedGroups(ft.blocks, f.start, f.length).map(ft.blocks))
+          footers.getOrElseUpdate(f.filePath, footer(f))
+            .map(ft => ownedGroups(ft.blocks, f.start, f.length).map(ft.blocks))
         else None
       f -> groups
     })
@@ -113,18 +102,19 @@ object RowRangeScan {
         out += RowRange(whole.toArray, 0, Long.MaxValue)
         whole = Vector.empty
       }
-      files.foreach {
-        case (f, None) => whole :+= f
-        case (f, Some(owned)) =>
-          flush()
-          owned.foreach { g =>
-            val one = Array(f.copy(start = g.getStartingPos, length = g.getCompressedSize))
-            val cuts = cut(g.getRowCount, g.getTotalByteSize, batchSize, pieces, maxBytes)
-            if (cuts.size > 1) {
-              cutAny = true
-              cuts.foreach { case (lo, hi) => out += RowRange(one, lo, hi) }
-            } else if (cuts.nonEmpty) out += RowRange(one, 0, Long.MaxValue)
+      files.foreach { case (f, owned) =>
+        val cuts = owned.getOrElse(Nil).map(g => g -> cut(g.getRowCount, batchSize, pieces))
+        if (cuts.forall(_._2.size <= 1)) whole :+= f
+        else cuts.foreach { case (g, c) =>
+          // the file narrowed to this group's bytes reads only this group
+          val one = f.copy(start = g.getStartingPos, length = g.getCompressedSize)
+          if (c.size <= 1) whole :+= one
+          else {
+            cutAny = true
+            flush()
+            c.foreach { case (lo, hi) => out += RowRange(Array(one), lo, hi) }
           }
+        }
       }
       flush()
       out.result()
@@ -134,8 +124,10 @@ object RowRangeScan {
 
   /** `qe`'s physical plan with its one Parquet scan read as row ranges,
     * prepared for execution; None when the plan reads anything else or
-    * [[plan]] cuts nothing, and `qe` should run as planned. */
-  def prepare(qe: QueryExecution, footer: PartitionedFile => Option[Footer]): Option[SparkPlan] = {
+    * [[plan]] cuts nothing, and `qe` should run as planned. `known` gives
+    * footers already read; any other is read with the scan's own Hadoop
+    * conf. */
+  def prepare(qe: QueryExecution, known: PartitionedFile => Option[Footer]): Option[SparkPlan] = {
     val planned = qe.sparkPlan
     // the executed plan's copy of the scan: its splits are the ones a
     // plan left as it is would read, and are listed only once
@@ -145,9 +137,12 @@ object RowRangeScan {
           if scan.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
         scan.inputRDD match {
           case files: FileScanRDD =>
-            val conf = scan.relation.sparkSession.sessionState.conf
+            val session = scan.relation.sparkSession.sessionState
+            lazy val hadoopConf = session.newHadoopConfWithOptions(scan.relation.options)
+            def footer(f: PartitionedFile): Option[Footer] = known(f).orElse(
+              Try(ParquetMetadata.footer(f.toPath.toString, hadoopConf)).toOption)
             plan(files.filePartitions, files.sparkContext.defaultParallelism,
-              conf.parquetVectorizedReaderBatchSize, footer).map { ranges =>
+              session.conf.parquetVectorizedReaderBatchSize, footer).map { ranges =>
               GraftShims.prepareExecutedPlan(qe.sparkSession,
                 planned.transform { case s if s eq leaf => RowRangeScanExec(scan, ranges) })
             }
@@ -159,8 +154,8 @@ object RowRangeScan {
 
   /** The rows `[lo, hi)` of a stream of batches: batches wholly before
     * `lo` are dropped unread, the batch holding `hi` is cut short, and no
-    * batch after it is pulled. A batch that `lo` falls inside is
-    * re-based with [[OffsetColumnVector]]s. */
+    * batch after it is pulled. `lo` must fall on a batch boundary, as
+    * [[cut]]'s ranges do. */
   def sliceBatches(batches: Iterator[ColumnarBatch], lo: Long, hi: Long): Iterator[ColumnarBatch] =
     new Iterator[ColumnarBatch] {
       private var at = 0L // rows before the next batch
@@ -171,14 +166,9 @@ object RowRangeScan {
           val start = at
           at += b.numRows
           if (at > lo) {
-            val from = math.max(lo - start, 0L).toInt
-            val until = (math.min(hi, at) - start).toInt
-            ready =
-              if (from == 0) { b.setNumRows(until); b }
-              else new ColumnarBatch(
-                Array.tabulate[ColumnVector](b.numCols)(i =>
-                  new OffsetColumnVector(b.column(i), from, until - from)),
-                until - from)
+            require(start >= lo, s"range start $lo falls inside the batch of rows [$start, $at)")
+            b.setNumRows((math.min(hi, at) - start).toInt)
+            ready = b
           }
         }
         ready != null
@@ -205,32 +195,6 @@ object RowRangeScan {
         rows.next()
       }
     }
-}
-
-/** Rows `[offset, offset + rows)` of `v`, as rows `[0, rows)`. Structs
-  * re-base through [[getChild]]; arrays and maps index `v`'s own child
-  * data, so they need no re-basing. Closing it leaves `v` open. */
-final class OffsetColumnVector(v: ColumnVector, offset: Int, rows: Int)
-    extends ColumnVector(v.dataType) {
-  override def close(): Unit = ()
-  override def hasNull: Boolean = v.hasNull
-  override def numNulls: Int = (0 until rows).count(isNullAt)
-  override def isNullAt(i: Int): Boolean = v.isNullAt(i + offset)
-  override def getBoolean(i: Int): Boolean = v.getBoolean(i + offset)
-  override def getByte(i: Int): Byte = v.getByte(i + offset)
-  override def getShort(i: Int): Short = v.getShort(i + offset)
-  override def getInt(i: Int): Int = v.getInt(i + offset)
-  override def getLong(i: Int): Long = v.getLong(i + offset)
-  override def getFloat(i: Int): Float = v.getFloat(i + offset)
-  override def getDouble(i: Int): Double = v.getDouble(i + offset)
-  override def getArray(i: Int): ColumnarArray = v.getArray(i + offset)
-  override def getMap(i: Int): ColumnarMap = v.getMap(i + offset)
-  override def getDecimal(i: Int, precision: Int, scale: Int): Decimal =
-    v.getDecimal(i + offset, precision, scale)
-  override def getUTF8String(i: Int): UTF8String = v.getUTF8String(i + offset)
-  override def getBinary(i: Int): Array[Byte] = v.getBinary(i + offset)
-  override def getChild(ordinal: Int): ColumnVector =
-    new OffsetColumnVector(v.getChild(ordinal), offset, rows)
 }
 
 /** A planned `FileSourceScanExec` read as [[RowRange]]s, one partition

@@ -448,18 +448,24 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
   }
 
-  test("row ranges: each split owns the row groups parquet-mr's range filter gives it") {
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.datasources.FileScanRDD
-    import scala.jdk.CollectionConverters._
+  /** One file of 40,000 rows in 5 or more small row groups. */
+  private lazy val manyGroupFile: String = {
     val dir = Files.createTempDirectory("owned").resolve("out").toString
     spark.range(0, 40000).selectExpr("id", "concat('row-', id) AS s").coalesce(1)
       .write.option("parquet.block.size", "32768").parquet(dir)
     val file = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).head.getPath
+    assert(graft.sources.ParquetMetadata.rowGroups(file).length >= 5)
+    file
+  }
+
+  test("row ranges: each split owns the row groups parquet-mr's range filter gives it") {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    import scala.jdk.CollectionConverters._
+    val file = manyGroupFile
     val footer = graft.sources.ParquetMetadata.footer(file)
-    assert(footer.blocks.length >= 5, footer.blocks.length)
     val conf = spark.sparkContext.hadoopConfiguration
     for (maxBytes <- Seq("4096", "20000", "65536", "1000000")) withConf(
         "spark.sql.files.maxPartitionBytes" -> maxBytes,
@@ -482,58 +488,77 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("row ranges: cuts are batch-aligned, cover the group, and keep every range under its byte share") {
-    import graft.sources.RowRangeScan.{cut, MaxRangeBytes}
-    def check(rows: Long, bytes: Long, batch: Int, pieces: Int, maxBytes: Long = MaxRangeBytes) = {
-      val c = cut(rows, bytes, batch, pieces, maxBytes)
+  test("row ranges: cuts are batch-aligned, cover the group, and only give every core work") {
+    import graft.sources.RowRangeScan.cut
+    def check(rows: Long, batch: Int, pieces: Int) = {
+      val c = cut(rows, batch, pieces)
       assert(c.head._1 == 0 && c.last._2 == rows)
       assert(c.zip(c.tail).forall { case (a, b) => a._2 == b._1 && a._1 < a._2 })
       assert(c.init.forall(r => r._2 % batch == 0))
-      // the share of the footer's totalByteSize a range carries, pro rata
-      // by rows, exceeds maxBytes only where the range is a single batch
-      assert(c.forall { case (lo, hi) =>
-        BigInt(hi - lo) * bytes <= BigInt(maxBytes) * rows || hi - lo <= batch })
       c
     }
-    assert(check(600000, 90L << 20, 4096, 4).length == 4)
-    assert(check(10, 1000, 4096, 4) == Seq((0L, 10L))) // one batch: nothing to cut
+    assert(check(600000, 4096, 4).length == 4)
+    assert(check(10, 4096, 4) == Seq((0L, 10L))) // one batch: nothing to cut
     // 13 batches: ranges of at least MinRangeBatches, however many cores
-    assert(check(50000, 1000, 4096, 4).length == 3)
-    assert(check(50000, 1000, 4096, 40).length == 3)
-    assert(check(6000, 1000, 4096, 4).length == 1)
-    // large groups: the byte share, not the core count, sets the cuts
-    val big = check(50000000, 10L << 30, 4096, 4)
-    assert(big.length >= 160, big.length)
-    assert(check(3000000000L, 200L << 30, 4096, 1).length >= 3200)
-    // a batch over the share: one batch per range
-    assert(check(50000, 10L << 30, 4096, 1, maxBytes = 1).length == 13)
-    assert(cut(0, 0, 4096, 4).isEmpty)
+    assert(check(50000, 4096, 4).length == 3)
+    assert(check(50000, 4096, 40).length == 3)
+    assert(check(6000, 4096, 4).length == 1)
+    // a large group is cut for the cores only
+    assert(check(50000000, 4096, 4).length == 4)
+    assert(check(3000000000L, 4096, 1).length == 1)
+    assert(cut(0, 4096, 4).isEmpty)
   }
 
-  test("row ranges: the planner keeps every range of a real file under its byte share") {
-    val file = oneGroupFile
-    val footer = graft.sources.ParquetMetadata.footer(file)
-    val g = footer.blocks.head
-    val pf = org.apache.spark.sql.execution.datasources.PartitionedFile(
+  test("row ranges: the planner reads each footer once and cuts only the groups that give cores work") {
+    import graft.sources.{ParquetMetadata, RowRange, RowRangeScan}
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    def pf(file: String, start: Long, length: Long) = PartitionedFile(
       org.apache.spark.sql.catalyst.InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPathString(file), 0, new java.io.File(file).length)
-    val share = g.getTotalByteSize / 6
-    val ranges = graft.sources.RowRangeScan.plan(
-      Seq(org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf))),
-      parallelism = 2, batchSize = 4096, _ => Some(footer), maxBytes = share).get
-    assert(ranges.length >= 6, ranges.length)
-    assert(ranges.head.lo == 0 && ranges.last.hi == g.getRowCount)
-    assert(ranges.forall(r => BigInt(r.hi - r.lo) * g.getTotalByteSize <= BigInt(share) * g.getRowCount))
-    // each range reads only its row group's bytes
-    assert(ranges.forall(r => r.files.length == 1 && r.files.head.start == g.getStartingPos &&
-      r.files.head.length == g.getCompressedSize))
-    // a scan with enough splits for every core and no file cut is left as planned
-    assert(graft.sources.RowRangeScan.plan(
-      Seq(org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf))),
-      parallelism = 1, batchSize = 4096, _ => Some(footer)).isEmpty)
+      org.apache.spark.paths.SparkPath.fromPathString(file), start, length)
+    val reads = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def footer(f: PartitionedFile) = {
+      reads(f.toPath.toString) += 1
+      Some(ParquetMetadata.footer(f.toPath.toString))
+    }
+    def plan(splits: Seq[Seq[PartitionedFile]], parallelism: Int) = {
+      reads.clear()
+      RowRangeScan.plan(splits.zipWithIndex.map { case (fs, i) => FilePartition(i, fs.toArray) },
+        parallelism, batchSize = 4096, footer)
+    }
+    def show(rs: Seq[RowRange]) = rs.map(r => (r.files.toSeq.map(f => (f.start, f.length)), r.lo, r.hi))
+    val one = oneGroupFile
+    val many = manyGroupFile
+    val g = ParquetMetadata.footer(one).blocks.head
+    val len = new java.io.File(one).length
+    // the one-group file in three byte splits, then the many-group file whole
+    val thirds = Seq(0L, len / 3, 2 * len / 3, len).sliding(2).map { case Seq(a, b) => pf(one, a, b - a) }.toSeq
+    val manyWhole = pf(many, 0, new java.io.File(many).length)
+    // four cores per group: only the 13-batch group has enough batches to
+    // cut; the split owning it becomes its 3 ranges, each reading only the
+    // group, and every other split stays as planned
+    val groups = 1 + ParquetMetadata.footer(many).blocks.length
+    val ranges = plan(thirds.map(Seq(_)) :+ Seq(manyWhole), parallelism = 4 * groups).get
+    assert(reads.toMap == Map(one -> 1, many -> 1), reads)
+    val owner = thirds.indexWhere(f => RowRangeScan.ownedGroups(Seq(g), f.start, f.length).nonEmpty)
+    val narrowed = Seq((g.getStartingPos, g.getCompressedSize))
+    val expected = thirds.indices.flatMap { i =>
+      if (i == owner) Seq((narrowed, 0L, 16384L), (narrowed, 16384L, 32768L), (narrowed, 32768L, 50000L))
+      else Seq((Seq((thirds(i).start, thirds(i).length)), 0L, Long.MaxValue))
+    } :+ ((Seq((0L, manyWhole.length)), 0L, Long.MaxValue))
+    assert(show(ranges) == expected)
+    // a file in four splits on four cores: its small groups stay whole, so
+    // the scan runs as planned, after one footer read
+    val quarters = Seq(0L, 1, 2, 3, 4).map(_ * manyWhole.length / 4).sliding(2)
+      .map { case Seq(a, b) => Seq(pf(many, a, b - a)) }.toSeq
+    assert(plan(quarters, parallelism = 4).isEmpty)
+    assert(reads.toMap == Map(many -> 1), reads)
+    // a scan with enough splits for every core and no file cut is left as
+    // planned, and reads no footer
+    assert(plan(Seq(Seq(pf(one, 0, len))), parallelism = 1).isEmpty)
+    assert(reads.isEmpty, reads)
   }
 
-  test("row ranges: slicing keeps exactly rows [lo, hi) inside and at batch edges, including the last partial batch") {
+  test("row ranges: slicing keeps exactly rows [lo, hi) from a batch edge, including the last partial batch") {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -554,19 +579,26 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     def expected(lo: Int, hi: Int) = (lo until hi).map(v =>
       if (v % 5 == 0) (None, None) else (Some(v), Some(-v.toLong)))
-    for (lo <- 0 to 14; hi <- lo to 15) {
-      val pulled = new java.util.concurrent.atomic.AtomicInteger()
-      val got = graft.sources.RowRangeScan.sliceBatches(batches(pulled), lo, hi).flatMap { b =>
+    val edges = sizes.scanLeft(0)(_ + _) // 0, 4, 8, 12, 14
+    def slice(lo: Int, hi: Int, pulled: java.util.concurrent.atomic.AtomicInteger) =
+      graft.sources.RowRangeScan.sliceBatches(batches(pulled), lo, hi).flatMap { b =>
         (0 until b.numRows).map { i =>
           val r = b.getRow(i)
           (if (r.isNullAt(0)) None else Some(r.getInt(0)),
             if (r.isNullAt(1)) None else Some(r.getStruct(1, 1).getLong(0)))
         }
       }.toSeq
-      assert(got == expected(lo, math.min(hi, 14)), s"lo=$lo hi=$hi")
-      // no batch past the one holding row hi - 1 is pulled
-      val need = if (hi == lo) 0 else sizes.scanLeft(0)(_ + _).indexWhere(_ >= math.min(hi, 14))
-      assert(hi == lo || pulled.get() == need, s"lo=$lo hi=$hi pulled=${pulled.get()}")
+    for (lo <- 0 to 14; hi <- lo to 15) {
+      // the columnar slice starts on a batch edge, as the planner's ranges do
+      if (edges.contains(lo)) {
+        val pulled = new java.util.concurrent.atomic.AtomicInteger()
+        assert(slice(lo, hi, pulled) == expected(lo, math.min(hi, 14)), s"lo=$lo hi=$hi")
+        // no batch past the one holding row hi - 1 is pulled
+        val need = if (hi == lo) 0 else edges.indexWhere(_ >= math.min(hi, 14))
+        assert(hi == lo || pulled.get() == need, s"lo=$lo hi=$hi pulled=${pulled.get()}")
+      } else if (hi > lo && lo < 14) intercept[IllegalArgumentException] {
+        slice(lo, hi, new java.util.concurrent.atomic.AtomicInteger())
+      }
       val rows = graft.sources.RowRangeScan.sliceRows(
         (0 until 14).iterator.map(v => org.apache.spark.sql.catalyst.InternalRow(v)), lo, hi)
       assert(rows.map(_.getInt(0)).toSeq == (lo until math.min(hi, 14)), s"rows lo=$lo hi=$hi")
