@@ -1,13 +1,15 @@
 package graft
 
-import graft.functions.{KustoRender, KustoRenderOptions, KustoRowRenderer, TimestampMode}
+import graft.functions.{KustoRender, KustoRenderOptions, KustoRowRenderer, TimestampMode, Utf8Buf}
 import graft.sources.{ParquetMetadata, RowRangeScan}
 import org.apache.spark.{SimpleFutureAction, SparkEnv}
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, InputAdapter, ProjectExec, SQLExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
@@ -30,9 +32,11 @@ import scala.util.Try
   *     (`main.rs:159-165`).
   *   - conversion streams like the reference's row loop
   *     (`converter.rs:133`), but one row range per Spark job, with up to
-  *     `defaultParallelism` jobs in flight; each returns its range's lines
-  *     as one compressed UTF-8 block, written to OUT strictly in scan
-  *     order. The ranges come from Spark's planned splits
+  *     `defaultParallelism` jobs in flight; each renders its range's rows
+  *     straight from the scan's batches (or rows) as UTF-8 bytes into one
+  *     compressed block, written to OUT strictly in scan order; the
+  *     render copies no row and builds no struct, `UTF8String` or `String`
+  *     per row. The ranges come from Spark's planned splits
   *     ([[graft.sources.RowRangeScan]]): a row group of a file that Spark
   *     cut into several splits — or of any file, when the scan has fewer
   *     splits than cores — is cut into batch-aligned row ranges, so a
@@ -43,7 +47,8 @@ import scala.util.Try
   *     large as the split's rendered text. Neither is bounded by the
   *     data: a row group whose text over the core count exceeds
   *     `spark.driver.maxResultSize` still fails the conversion.
-  *     Driver memory is at most `defaultParallelism` compressed blocks.
+  *     Driver memory is at most `defaultParallelism` compressed blocks,
+  *     and a task holds its block and one 64 KiB render buffer.
   *     Row order is scan order, which for a single parquet file matches
   *     the reference's file order.
   *   - a failed write to OUT (full disk, closed pipe) is an error, not a
@@ -235,65 +240,106 @@ object Pq2Json {
           clone.conf.set(MinPartitionNum, 2L * spark.sparkContext.defaultParallelism)
           clone
         }
-      val df = reader.read.parquet(a.input)
-      val rendered =
-        if (a.csv) KustoRender.toKustoCsv(df, a.columns, opts)
-        else {
-          // JSON path ignores requested-but-missing columns
-          // (`converter.rs:81-84` only CSV emits null slots).
-          val projected = a.columns match {
-            case Some(cols) =>
-              val present = df.columns.toSet
-              df.select(cols.filter(present.contains).map(KustoRender.exactCol): _*)
-            case None => df
-          }
-          KustoRender.toKustoJson(projected, opts)
-        }
-      // CSV lines already end in \r, so "\n" completes the reference's
-      // \r\n record terminator; JSON lines get plain \n (writeln!).
+      val df = readInput(reader, a.input, footers)
       if (a.distributed) {
         // -d/--distributed: OUT is a DIRECTORY of part files written in
         // parallel by every executor — the 100 TB path. The reference's
         // single-ordered-file contract can't parallel-write (one writer,
         // one order), so the streaming-through-the-driver default stays
         // faithful and -d is the scale escape hatch; within each part
-        // file, line order is scan order.
+        // file, line order is scan order. CSV lines already end in \r,
+        // and the text sink's "\n" completes the reference's \r\n.
+        val rendered =
+          if (a.csv) KustoRender.toKustoCsv(df, a.columns, opts)
+          else KustoRender.toKustoJson(df.select(present(df, a.columns).map(KustoRender.exactCol): _*), opts)
         rendered.write.mode("overwrite").text(a.output.get) // parseArgs requires -o
-      } else stream(rendered, out, footers.map { case (p, f) =>
-        java.nio.file.Paths.get(p).toAbsolutePath.normalize.toUri.getPath -> f
-      }.toMap)
+      } else {
+        val requested = a.columns.getOrElse(df.columns.toSeq)
+        // JSON ignores requested-but-missing columns (`converter.rs:81-84`);
+        // CSV renders them as empty slots
+        val missing = if (a.csv) Some(requested.map(c => !df.columns.contains(c)).toArray) else None
+        stream(df, present(df, a.columns), missing, opts, out, footers.map { case (p, f) =>
+          java.nio.file.Paths.get(p).toAbsolutePath.normalize.toUri.getPath -> f
+        }.toMap)
+      }
     }
+  }
+
+  /** The requested columns that `df` has, in requested order. */
+  private def present(df: DataFrame, columns: Option[Seq[String]]): Seq[String] =
+    columns.fold(df.columns.toSeq)(_.filter(df.columns.contains))
+
+  /** `input` read with the schema that Spark's inference would read from
+    * the footer of its first file (name-sorted), when that footer is among
+    * `footers`: `input` is one file, or a directory holding only
+    * non-empty `*.parquet` files besides hidden ones and no summary file.
+    * Then no inference job runs. Anything else — partition directories,
+    * summary files, schema merging, another file system — is left to
+    * Spark's inference. */
+  private[graft] def readInput(spark: SparkSession, input: String,
+      footers: Seq[(String, ParquetMetadata.Footer)]): DataFrame = {
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    val f = new java.io.File(input)
+    val first =
+      if (f.isFile) Some(f).filterNot(f => hidden(f.getName))
+      else if (f.isDirectory) {
+        val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
+        val data = kids.filterNot(k => hidden(k.getName))
+        val plain = kids.forall(k => !k.getName.startsWith("_metadata") &&
+            !k.getName.startsWith("_common_metadata") && !(k.getName.startsWith("_") && k.getName.contains("="))) &&
+          data.forall(k => k.isFile && k.getName.endsWith(".parquet") && k.length > 0)
+        if (plain) data.sortBy(_.getPath).headOption else None
+      } else None
+    val schema =
+      if (spark.conf.getOption("spark.sql.parquet.mergeSchema").exists(_.toBoolean)) None
+      else first.flatMap(file => footers.collectFirst {
+        case (p, footer) if p == file.getPath => GraftShims.parquetFooterSchema(spark, p, footer.meta)
+      })
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(input)
   }
 
   private val MinPartitionNum = "spark.sql.files.minPartitionNum"
 
-  /** Writes `rendered`'s one text column to `out`, a line per row, in
-    * scan order. The scan is first cut into row ranges
-    * ([[RowRangeScan.prepare]]; `footers` holds the footers already read,
-    * by local path; any other is read at most once). Each partition — a range, or a split left whole — is one
+  /** Writes `df`'s `columns` to `out`, a line per row, in scan order:
+    * JSON objects, or CSV records whose slots `s` are empty where
+    * `csvMissing(s)`. The rows render straight from `df`'s one Parquet
+    * scan, whose partitions are cut into row ranges by
+    * [[RowRangeScan.prepare]] (`footers` holds the footers already read, by
+    * local path; any other is read at most once); `columns` map to the
+    * scan's column ordinals, so no projection runs. Each partition is one
     * Spark job returning one [[encodeBlock]]; at most `defaultParallelism`
     * jobs are in flight, and partition `i + window` is submitted once
     * block `i` is written, so the driver holds at most `window` compressed
-    * blocks and never decodes a row. Any failure (a job's, or the
-    * write's) cancels the jobs in flight and waits for them to end before
-    * it propagates. */
-  private def stream(rendered: DataFrame, out: java.io.PrintStream,
+    * blocks and never decodes a row. Any failure (a job's, or the write's)
+    * cancels the jobs in flight and waits for them to end before it
+    * propagates. */
+  private def stream(df: DataFrame, columns: Seq[String], csvMissing: Option[Array[Boolean]],
+      opts: KustoRenderOptions, out: java.io.PrintStream,
       footers: Map[String, ParquetMetadata.Footer]): Unit = {
-    val qe = rendered.queryExecution
-    val sc = rendered.sparkSession.sparkContext
+    // the selection only prunes the scan's columns; rows render from the scan
+    val distinct = columns.distinct
+    val qe = df.select(distinct.map(KustoRender.exactCol): _*).queryExecution
+    val scan = scanOf(qe.executedPlan)
+    val attrs = distinct.zip(qe.analyzed.output).toMap
+    val ordinals = columns.map(c => scan.output.indexWhere(_.exprId == attrs(c).exprId)).toArray
+    require(!ordinals.contains(-1), s"pq2json: columns ${columns.mkString(", ")} not all in ${scan.output}")
+    val format = LineFormat(StructType(columns.map(c => StructField(c, attrs(c).dataType))),
+      ordinals, opts, csvMissing)
+    val sc = df.sparkSession.sparkContext
     def footerOf(f: PartitionedFile): Option[ParquetMetadata.Footer] = {
       val uri = f.toPath.toUri
       if (uri.getScheme == null || uri.getScheme == "file") footers.get(uri.getPath) else None
     }
     SQLExecution.withNewExecutionId(qe, Some("pq2json")) {
-      val rows = RowRangeScan.prepare(qe, footerOf).map(_.execute()).getOrElse(qe.toRdd)
+      val rows = RowRangeScan.prepare(scan, footerOf)
       val n = rows.getNumPartitions
       val codec = new LZ4CompressionCodec(sc.getConf)
+      val encode = (part: Iterator[InternalRow]) => encodeBlock(part, format)
       val inFlight = new java.util.ArrayDeque[SimpleFutureAction[Array[Byte]]]()
       var next = 0
       def submitNext(): Unit = if (next < n) {
         var result: Array[Byte] = null
-        inFlight.add(sc.submitJob(rows, encodeBlock, Seq(next),
+        inFlight.add(sc.submitJob(rows, encode, Seq(next),
           (_: Int, b: Array[Byte]) => result = b, result))
         next += 1
       }
@@ -316,12 +362,57 @@ object Pq2Json {
     }
   }
 
-  /** One partition's lines as raw UTF-8, each ending in `\n`, compressed
-    * with Spark's default block codec (LZ4). Runs on the executors. */
-  private def encodeBlock(lines: Iterator[InternalRow]): Array[Byte] = {
+  /** The one Parquet scan of a plan that only reads and selects columns. */
+  private def scanOf(plan: SparkPlan): FileSourceScanExec = {
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    val other = plan.find {
+      case _: FileSourceScanExec | _: ColumnarToRowExec | _: WholeStageCodegenExec | _: InputAdapter => false
+      case p: ProjectExec => !p.projectList.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute])
+      case _ => true
+    }
+    require(scans.size == 1 && other.isEmpty, s"pq2json: expected one Parquet scan, got\n$plan")
+    scans.head
+  }
+
+  /** How a row of the scan renders: the fields of `schema` read from scan
+    * slots `ordinals`, as a JSON object, or as a CSV record with the
+    * `csvMissing` slots left empty. */
+  private final case class LineFormat(schema: StructType, ordinals: Array[Int],
+      opts: KustoRenderOptions, csvMissing: Option[Array[Boolean]]) {
+    def writer(): (InternalRow, Utf8Buf) => Unit = {
+      val r = new KustoRowRenderer(schema, opts, csv = csvMissing.isDefined, ordinals = ordinals)
+      csvMissing match {
+        case Some(missing) => (row, sb) => r.writeCsvLine(row, missing, sb)
+        case None => (row, sb) => r.writeJson(row, sb)
+      }
+    }
+  }
+
+  /** Bytes rendered before they are handed to the compressor. */
+  private val RenderChunk = 1 << 16
+
+  /** One partition's lines as UTF-8, each ending in `\n` (CSV records end
+    * in `\r\n`, the reference's terminator), compressed with Spark's
+    * default block codec (LZ4). The partition holds `ColumnarBatch`es from
+    * a vectorized scan, else rows; either way each row renders in place.
+    * Runs on the executors. */
+  private def encodeBlock(part: Iterator[InternalRow], format: LineFormat): Array[Byte] = {
+    val write = format.writer()
     val bytes = new java.io.ByteArrayOutputStream()
     val z = new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(bytes)
-    lines.foreach { r => r.getUTF8String(0).writeTo(z); z.write('\n') }
+    val sb = new Utf8Buf(RenderChunk + 4096)
+    def line(row: InternalRow): Unit = {
+      write(row, sb)
+      sb.append('\n')
+      if (sb.length >= RenderChunk) { sb.writeTo(z); sb.reset() }
+    }
+    part.asInstanceOf[Iterator[AnyRef]].foreach {
+      case b: ColumnarBatch =>
+        var i = 0
+        while (i < b.numRows) { line(b.getRow(i)); i += 1 }
+      case row: InternalRow => line(row)
+    }
+    sb.writeTo(z)
     z.close()
     bytes.toByteArray
   }

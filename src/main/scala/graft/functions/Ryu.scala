@@ -1,6 +1,8 @@
 package graft.functions
 
-import java.lang.{Math => JMath, StringBuilder => Buf}
+import org.apache.spark.unsafe.types.UTF8String
+
+import java.lang.{Math => JMath}
 import java.math.BigInteger
 
 /** Shortest round-trip decimal rendering of doubles, matching the text the
@@ -67,24 +69,24 @@ object Ryu {
 
   /** serde_json-style float text; caller must ensure `d` is finite
     * (NaN/Inf render as JSON null upstream, `converter.rs:291-295`). */
-  def shortest(d: Double): String = {
-    val sb = new Buf(24)
-    append(sb, d, csv = false)
-    sb.toString
-  }
+  def shortest(d: Double): String = text(d, csv = false).toString
 
   /** CSV float text; see [[append]]. */
-  def shortestCsv(d: Double): String = {
-    val sb = new Buf(24)
-    append(sb, d, csv = true)
-    sb.toString
+  def shortestCsv(d: Double): String = text(d, csv = true).toString
+
+  /** The text of finite `d` per [[append]], as one `UTF8String`. */
+  def text(d: Double, csv: Boolean): UTF8String = {
+    val sb = new Utf8Buf(32)
+    append(sb, d, csv)
+    UTF8String.fromBytes(sb.toByteArray)
   }
 
-  /** Appends the text of finite `d` to `sb`. `csv` then strips trailing
-    * '0's, then '.'s (`truncate_trailing_zeros`, `converter.rs:210-212`),
-    * reproducing the reference's quirk that scientific-notation output is
-    * corrupted ("1e300" -> "1e3") because the strip runs on any ryu text. */
-  def append(sb: Buf, d: Double, csv: Boolean): Unit = {
+  /** Appends the ASCII text of finite `d` to `sb`. `csv` then strips
+    * trailing '0's, then '.'s (`truncate_trailing_zeros`,
+    * `converter.rs:210-212`), reproducing the reference's quirk that
+    * scientific-notation output is corrupted ("1e300" -> "1e3") because the
+    * strip runs on any ryu text. */
+  def append(sb: Utf8Buf, d: Double, csv: Boolean): Unit = {
     val start = sb.length
     val bits = java.lang.Double.doubleToRawLongBits(d)
     val t = bits & (CMin - 1)
@@ -95,20 +97,20 @@ object Ryu {
       val c = CMin | t
       val f = if (0 < mq && mq < 53) c >> mq else 0L
       // an integer below 2^53 is its own shortest text
-      if (f != 0 && f << mq == c) sb.append(f).append(".0")
+      if (f != 0 && f << mq == c) sb.appendLong(f).append('.').append('0')
       else toDecimal(sb, -mq, c)
     } else if (t != 0) toDecimal(sb, QMin, t)
-    else sb.append("0.0")
+    else sb.append('0').append('.').append('0')
     if (csv) {
       var end = sb.length
-      while (end > start && sb.charAt(end - 1) == '0') end -= 1
-      while (end > start && sb.charAt(end - 1) == '.') end -= 1
-      sb.setLength(end)
+      while (end > start && sb.byteAt(end - 1) == '0') end -= 1
+      while (end > start && sb.byteAt(end - 1) == '.') end -= 1
+      sb.truncate(end)
     }
   }
 
   /** Schubfach for `c·2^q`, c > 0 (figure 7 of the paper). */
-  private def toDecimal(sb: Buf, q: Int, c: Long): Unit = {
+  private def toDecimal(sb: Utf8Buf, q: Int, c: Long): Unit = {
     val out = c.toInt & 1 // an odd significand excludes the interval ends
     val cb = c << 2
     val cbr = cb + 2
@@ -154,7 +156,7 @@ object Ryu {
   }
 
   /** Appends `f·10^e`, f > 0, in ryu's notation. */
-  private def write(sb: Buf, f0: Long, e0: Int): Unit = {
+  private def write(sb: Utf8Buf, f0: Long, e0: Int): Unit = {
     var f = f0
     var e = e0
     while (f % 100000000L == 0) { f /= 100000000L; e += 8 }
@@ -162,17 +164,23 @@ object Ryu {
     if (f % 100 == 0) { f /= 100; e += 2 }
     if (f % 10 == 0) { f /= 10; e += 1 }
     val start = sb.length
-    sb.append(f)
+    sb.appendLong(f)
     val len = sb.length - start
     val exp10 = e + len - 1
     if (exp10 < -5 || exp10 > 15) {
-      if (len > 1) sb.insert(start + 1, '.')
-      sb.append('e').append(exp10)
+      if (len > 1) { sb.insertGap(start + 1, 1); sb.set(start + 1, '.') }
+      sb.append('e').appendLong(exp10)
     } else if (e >= 0) {
       var z = e
       while (z > 0) { sb.append('0'); z -= 1 }
-      sb.append(".0")
-    } else if (exp10 >= 0) sb.insert(start + exp10 + 1, '.')
-    else sb.insert(start, "0.0000", 0, 1 - exp10) // "0." and -exp10-1 zeros
+      sb.append('.').append('0')
+    } else if (exp10 >= 0) { sb.insertGap(start + exp10 + 1, 1); sb.set(start + exp10 + 1, '.') }
+    else {
+      // "0." and -exp10-1 zeros before the digits
+      sb.insertGap(start, 1 - exp10)
+      var p = start
+      while (p < start + 1 - exp10) { sb.set(p, '0'); p += 1 }
+      sb.set(start + 1, '.')
+    }
   }
 }

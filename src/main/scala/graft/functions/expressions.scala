@@ -107,14 +107,13 @@ case class RyuDoubleString(child: Expression, csv: Boolean) extends UnaryExpress
   override def nullable: Boolean = true
   private def render(d: Double): UTF8String =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) null
-    else UTF8String.fromString(if (csv) Ryu.shortestCsv(d) else Ryu.shortest(d))
+    else Ryu.text(d, csv)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) null else render(v.asInstanceOf[Double])
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val childGen = child.genCode(ctx)
-    val fn = if (csv) "shortestCsv" else "shortest"
     ev.copy(code = code"""
       ${childGen.code}
       boolean ${ev.isNull} = true;
@@ -122,7 +121,7 @@ case class RyuDoubleString(child: Expression, csv: Boolean) extends UnaryExpress
       if (!${childGen.isNull} && !java.lang.Double.isNaN(${childGen.value})
           && !java.lang.Double.isInfinite(${childGen.value})) {
         ${ev.isNull} = false;
-        ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(graft.functions.Ryu.$fn(${childGen.value}));
+        ${ev.value} = graft.functions.Ryu.text(${childGen.value}, $csv);
       }""")
   }
   override protected def withNewChildInternal(newChild: Expression): RyuDoubleString =
@@ -131,7 +130,8 @@ case class RyuDoubleString(child: Expression, csv: Boolean) extends UnaryExpress
 
 /** Shared shell of the whole-row encodes: the child must be a struct
   * (typically `struct(df.columns*)`), and each row renders through a
-  * [[KustoRowRenderer]] straight into one text buffer. Codegen embeds the
+  * [[KustoRowRenderer]] into a byte buffer that the calling thread reuses,
+  * then is copied once into the result's `UTF8String`. Codegen embeds the
   * expression as a reference object and calls [[render]] directly, so the
   * surrounding scan -> render projection stays inside the whole-stage-codegen
   * span instead of dropping the whole projection to the interpreted path.
@@ -141,13 +141,16 @@ abstract class KustoRowExpr extends UnaryExpression {
   override def nullable: Boolean = false
 
   /** Appends the text for `row`, which is null when the struct is null. */
-  protected def write(row: InternalRow, sb: java.lang.StringBuilder): Unit
+  protected def write(row: InternalRow, sb: Utf8Buf): Unit
 
   /** Public so generated code can call it on the embedded reference. */
   def render(row: InternalRow): UTF8String = {
-    val sb = new java.lang.StringBuilder(64)
+    val sb = KustoRowExpr.buffer.get()
+    sb.reset()
     write(row, sb)
-    UTF8String.fromString(sb.toString)
+    val text = UTF8String.fromBytes(sb.toByteArray)
+    if (sb.capacity > KustoRowExpr.MaxKeptBytes) KustoRowExpr.buffer.remove()
+    text
   }
 
   override def eval(input: InternalRow): Any =
@@ -164,6 +167,13 @@ abstract class KustoRowExpr extends UnaryExpression {
   }
 }
 
+object KustoRowExpr {
+  /** Each thread's render buffer; rendering never nests, so one suffices. */
+  private val buffer: ThreadLocal[Utf8Buf] = ThreadLocal.withInitial(() => new Utf8Buf(1024))
+  /** A buffer grown past this by a large row is dropped after it. */
+  private val MaxKeptBytes = 1 << 20
+}
+
 /** Whole-row JSONL encode: one JSON object per row with the reference's
   * exact Kusto semantics (see [[KustoRowRenderer]]), the Spark counterpart
   * of `top_level_rows_to_json` (`converter.rs:128-143`).
@@ -172,7 +182,7 @@ case class KustoJsonExpr(child: Expression, opts: KustoRenderOptions) extends Ku
   @transient private lazy val renderer =
     new KustoRowRenderer(child.dataType.asInstanceOf[StructType], opts)
 
-  override protected def write(row: InternalRow, sb: java.lang.StringBuilder): Unit =
+  override protected def write(row: InternalRow, sb: Utf8Buf): Unit =
     renderer.writeJson(row, sb)
 
   override protected def withNewChildInternal(newChild: Expression): KustoJsonExpr =
@@ -194,21 +204,10 @@ case class KustoCsvLineExpr(child: Expression, opts: KustoRenderOptions,
     missingSlots: Seq[Boolean]) extends KustoRowExpr {
   @transient private lazy val renderer =
     new KustoRowRenderer(child.dataType.asInstanceOf[StructType], opts, csv = true)
-  @transient private lazy val slots: Array[Boolean] = missingSlots.toArray
+  @transient private lazy val missing: Array[Boolean] = missingSlots.toArray
 
-  override protected def write(row: InternalRow, sb: java.lang.StringBuilder): Unit = {
-    var present = 0
-    var i = 0
-    while (i < slots.length) {
-      if (i > 0) sb.append(',')
-      if (!slots(i)) {
-        renderer.writeCsvField(row, present, sb)
-        present += 1
-      }
-      i += 1
-    }
-    sb.append('\r')
-  }
+  override protected def write(row: InternalRow, sb: Utf8Buf): Unit =
+    renderer.writeCsvLine(row, missing, sb)
 
   override protected def withNewChildInternal(newChild: Expression): KustoCsvLineExpr =
     copy(child = newChild)

@@ -5,10 +5,8 @@ import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
-import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -37,11 +35,12 @@ final case class RowRange(files: Array[PartitionedFile], lo: Long, hi: Long) {
   * `defaultParallelism` / groups ranges whose boundaries are multiples of
   * the columnar reader's batch size. A file none of whose owned groups is
   * cut stays in its split as planned, and every other split stays whole
-  * without its footer being read. The cut is for parallelism only, so a
-  * range's block is about its group's text over the number of its
-  * ranges; no byte share bounds it.
+  * without its footer being read; a split of a candidate file that owns
+  * no row group would read nothing, so it is dropped. The cut is for
+  * parallelism only, so a range's block is about its group's text over
+  * the number of its ranges; no byte share bounds it.
   *
-  * [[RowRangeScanExec]] reads the ranges through the planned scan's own
+  * [[prepare]] reads the ranges through the planned scan's own
   * `FileScanRDD`: a cut range reads only its row group, skips whole
   * columnar batches before `lo` without turning them into rows, and stops
   * at `hi`. The batches before `lo` are still decoded; only their
@@ -104,7 +103,8 @@ object RowRangeScan {
       }
       files.foreach { case (f, owned) =>
         val cuts = owned.getOrElse(Nil).map(g => g -> cut(g.getRowCount, batchSize, pieces))
-        if (cuts.forall(_._2.size <= 1)) whole :+= f
+        if (owned.exists(_.isEmpty)) () // the slice owns no row group: it reads nothing
+        else if (cuts.forall(_._2.size <= 1)) whole :+= f
         else cuts.foreach { case (g, c) =>
           // the file narrowed to this group's bytes reads only this group
           val one = f.copy(start = g.getStartingPos, length = g.getCompressedSize)
@@ -122,35 +122,25 @@ object RowRangeScan {
     if (cutAny) Some(ranges) else None
   }
 
-  /** `qe`'s physical plan with its one Parquet scan read as row ranges,
-    * prepared for execution; None when the plan reads anything else or
-    * [[plan]] cuts nothing, and `qe` should run as planned. `known` gives
-    * footers already read; any other is read with the scan's own Hadoop
-    * conf. */
-  def prepare(qe: QueryExecution, known: PartitionedFile => Option[Footer]): Option[SparkPlan] = {
-    val planned = qe.sparkPlan
-    // the executed plan's copy of the scan: its splits are the ones a
-    // plan left as it is would read, and are listed only once
-    val executed = qe.executedPlan.collect { case s: FileSourceScanExec => s }
-    (planned.collectLeaves(), executed) match {
-      case (Seq(leaf: FileSourceScanExec), Seq(scan))
-          if scan.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
-        scan.inputRDD match {
-          case files: FileScanRDD =>
-            val session = scan.relation.sparkSession.sessionState
-            lazy val hadoopConf = session.newHadoopConfWithOptions(scan.relation.options)
-            def footer(f: PartitionedFile): Option[Footer] = known(f).orElse(
-              Try(ParquetMetadata.footer(f.toPath.toString, hadoopConf)).toOption)
-            plan(files.filePartitions, files.sparkContext.defaultParallelism,
-              session.conf.parquetVectorizedReaderBatchSize, footer).map { ranges =>
-              GraftShims.prepareExecutedPlan(qe.sparkSession,
-                planned.transform { case s if s eq leaf => RowRangeScanExec(scan, ranges) })
-            }
-          case _ => None
-        }
-      case _ => None
+  /** The partitions of `scan`'s output as its reader yields them —
+    * `ColumnarBatch`es when `scan.supportsColumnar`, else rows — one per
+    * row range when [[plan]] cuts a row group, else the scan's own
+    * `FileScanRDD`. `known` gives footers already read; any other is read
+    * with the scan's own Hadoop conf. The scan's pruned columns, pushed
+    * filters and reader stay Spark's. */
+  def prepare(scan: FileSourceScanExec, known: PartitionedFile => Option[Footer]): RDD[InternalRow] =
+    scan.inputRDD match {
+      case files: FileScanRDD if scan.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        val session = scan.relation.sparkSession.sessionState
+        lazy val hadoopConf = session.newHadoopConfWithOptions(scan.relation.options)
+        def footer(f: PartitionedFile): Option[Footer] = known(f).orElse(
+          Try(ParquetMetadata.footer(f.toPath.toString, hadoopConf)).toOption)
+        plan(files.filePartitions, files.sparkContext.defaultParallelism,
+          session.conf.parquetVectorizedReaderBatchSize, footer)
+          .map(new RowRangeRDD(files, _, scan.supportsColumnar))
+          .getOrElse(files)
+      case other => other
     }
-  }
 
   /** The rows `[lo, hi)` of a stream of batches: batches wholly before
     * `lo` are dropped unread, the batch holding `hi` is cut short, and no
@@ -195,32 +185,6 @@ object RowRangeScan {
         rows.next()
       }
     }
-}
-
-/** A planned `FileSourceScanExec` read as [[RowRange]]s, one partition
-  * each, through the scan's own `FileScanRDD`, so the scan's pruned
-  * columns, pushed filters and reader stay Spark's. */
-final case class RowRangeScanExec(scan: FileSourceScanExec, ranges: Seq[RowRange])
-    extends LeafExecNode {
-  override def output: Seq[Attribute] = scan.output
-  override def supportsColumnar: Boolean = scan.supportsColumnar
-  override def simpleString(maxFields: Int): String =
-    s"RowRangeScan ${ranges.size} ranges of ${scan.simpleString(maxFields)}"
-
-  @transient private lazy val rdd =
-    new RowRangeRDD(scan.inputRDD.asInstanceOf[FileScanRDD], ranges, supportsColumnar)
-
-  override protected def doExecuteColumnar(): RDD[ColumnarBatch] =
-    rdd.asInstanceOf[RDD[ColumnarBatch]]
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val schema = output
-    rdd.mapPartitionsWithIndex { (i, rows) =>
-      val toUnsafe = UnsafeProjection.create(schema, schema)
-      toUnsafe.initialize(i)
-      rows.map(toUnsafe)
-    }
-  }
 }
 
 private final class RowRangePartition(val index: Int, val range: RowRange) extends Partition {

@@ -27,10 +27,22 @@ object GraftShims {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
-  /** Runs the physical preparation rules (transitions, whole-stage
-    * codegen) over `plan`, as `QueryExecution` does for its own plan. */
-  def prepareExecutedPlan(spark: SparkSession,
-      plan: org.apache.spark.sql.execution.SparkPlan): org.apache.spark.sql.execution.SparkPlan =
-    org.apache.spark.sql.execution.QueryExecution.prepareExecutedPlan(
-      spark.asInstanceOf[classic.SparkSession], plan)
+  /** The schema Spark's Parquet inference reads from one file's footer,
+    * under `spark`'s Parquet confs: the Spark schema the writer stored in
+    * the footer, else the Parquet schema converted as inference converts it
+    * (`ParquetFileFormat.mergeSchemasInParallel`, which runs a job to read
+    * the footer). */
+  def parquetFooterSchema(spark: SparkSession, path: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(path), footer), converter)
+  }
 }

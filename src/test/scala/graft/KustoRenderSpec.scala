@@ -173,22 +173,54 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(KustoRender.toKustoCsv(df).collect().map(_.getString(0)).toSeq == cases.map(_._2 + "\r"))
   }
 
+  test("Utf8Buf writes longs, zero-padded digits and big integers as toString does") {
+    val sb = new Utf8Buf(4)
+    def text(f: Utf8Buf => Unit): String = { sb.reset(); f(sb); sb.toString }
+    val rnd = new java.util.SplittableRandom(10)
+    val edges = Seq(0L, 1L, 9L, 10L, 99L, 100L, Int.MaxValue.toLong, Int.MaxValue + 1L, Long.MaxValue,
+      Long.MinValue, -1L) ++ (0 to 18).flatMap { k => val p = math.pow(10, k).toLong; Seq(p - 1, p, -p) }
+    for (v <- edges ++ Seq.fill(200000)(rnd.nextLong() >> rnd.nextInt(64))) {
+      assert(text(_.appendLong(v)) == v.toString, v)
+      val abs = if (v == Long.MinValue) Long.MaxValue else math.abs(v)
+      assert(text(_.appendDigits(abs, 19)) == f"$abs%019d", abs)
+      val big = java.math.BigInteger.valueOf(v).multiply(java.math.BigInteger.valueOf(rnd.nextLong()))
+      assert(text(_.appendBigInteger(big)) == big.toString, big)
+    }
+  }
+
+  test("plain decimal digits equal BigDecimal.toPlainString, negative scales included") {
+    val sb = new Utf8Buf
+    val rnd = new java.util.Random(11)
+    for (_ <- 0 until 100000) {
+      val unscaled = new java.math.BigInteger(rnd.nextInt(130), rnd)
+      val u = if (rnd.nextBoolean()) unscaled.negate else unscaled
+      val scale = rnd.nextInt(50) - 10
+      val want = new java.math.BigDecimal(u, scale).toPlainString
+      sb.reset(); KustoRowRenderer.plainBig(sb, u, scale)
+      assert(sb.toString == want, s"$u e-$scale")
+      if (u.bitLength < 64) {
+        sb.reset(); KustoRowRenderer.plainLong(sb, u.longValue, scale)
+        assert(sb.toString == want, s"long $u e-$scale")
+      }
+    }
+  }
+
   test("ISO date and timestamp writers are byte-identical to DateTimeFormatter") {
     val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'", java.util.Locale.ROOT)
       .withZone(java.time.ZoneOffset.UTC)
-    val sb = new java.lang.StringBuilder
+    val sb = new graft.functions.Utf8Buf
     val bad = scala.collection.mutable.ArrayBuffer[String]()
     val y10k = LocalDate.of(10000, 1, 1).toEpochDay
     var day = 0L
     while (day <= y10k + 366) {
-      sb.setLength(0)
+      sb.reset()
       KustoRowRenderer.isoDate(sb, day.toInt)
       val want = LocalDate.ofEpochDay(day).format(DateTimeFormatter.ISO_LOCAL_DATE)
       if (sb.toString != want) bad += s"day $day: $sb != $want"
       day += 1
     }
     def checkMs(ms: Long): Unit = {
-      sb.setLength(0)
+      sb.reset()
       KustoRowRenderer.isoTimestamp(sb, ms)
       val want = tsFmt.format(java.time.Instant.ofEpochMilli(ms))
       if (sb.toString != want) bad += s"ms $ms: $sb != $want"
@@ -198,7 +230,7 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rnd = new java.util.SplittableRandom(1970)
     for (_ <- 0 until 1000000) { checkMs(rnd.nextLong(Long.MaxValue)); checkMs(rnd.nextLong(y10kMs)) }
     assert(bad.isEmpty, bad.take(5))
-    sb.setLength(0)
+    sb.reset()
     KustoRowRenderer.isoTimestamp(sb, y10kMs - 1)
     assert(sb.toString == "9999-12-31T23:59:59.999000Z")
   }

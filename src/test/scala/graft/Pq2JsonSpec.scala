@@ -439,7 +439,7 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
         val got = watchingJobs { w =>
           val out = capture(args)
           SchedulerProbe.drain(spark.sparkContext)
-          // the schema job, then one job per range: more than one range
+          // one job per range: more than one range
           assert(w.started.get() > 2, s"${args.mkString(" ")}: ${w.started.get()} jobs")
           out
         }
@@ -535,17 +535,18 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     val manyWhole = pf(many, 0, new java.io.File(many).length)
     // four cores per group: only the 13-batch group has enough batches to
     // cut; the split owning it becomes its 3 ranges, each reading only the
-    // group, and every other split stays as planned
+    // group, the two splits that own no row group are dropped, and the
+    // other file's split stays as planned
     val groups = 1 + ParquetMetadata.footer(many).blocks.length
     val ranges = plan(thirds.map(Seq(_)) :+ Seq(manyWhole), parallelism = 4 * groups).get
     assert(reads.toMap == Map(one -> 1, many -> 1), reads)
-    val owner = thirds.indexWhere(f => RowRangeScan.ownedGroups(Seq(g), f.start, f.length).nonEmpty)
+    assert(thirds.count(f => RowRangeScan.ownedGroups(Seq(g), f.start, f.length).nonEmpty) == 1)
     val narrowed = Seq((g.getStartingPos, g.getCompressedSize))
-    val expected = thirds.indices.flatMap { i =>
-      if (i == owner) Seq((narrowed, 0L, 16384L), (narrowed, 16384L, 32768L), (narrowed, 32768L, 50000L))
-      else Seq((Seq((thirds(i).start, thirds(i).length)), 0L, Long.MaxValue))
-    } :+ ((Seq((0L, manyWhole.length)), 0L, Long.MaxValue))
-    assert(show(ranges) == expected)
+    val groupRanges = Seq((narrowed, 0L, 16384L), (narrowed, 16384L, 32768L), (narrowed, 32768L, 50000L))
+    assert(show(ranges) == groupRanges :+ ((Seq((0L, manyWhole.length)), 0L, Long.MaxValue)))
+    // the one-group file alone in three splits plans exactly its ranges
+    assert(show(plan(thirds.map(Seq(_)), parallelism = 4).get) == groupRanges)
+    assert(reads.toMap == Map(one -> 1), reads)
     // a file in four splits on four cores: its small groups stay whole, so
     // the scan runs as planned, after one footer read
     val quarters = Seq(0L, 1, 2, 3, 4).map(_ * manyWhole.length / 4).sliding(2)
@@ -604,5 +605,111 @@ class Pq2JsonSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.map(_.getInt(0)).toSeq == (lo until math.min(hi, 14)), s"rows lo=$lo hi=$hi")
     }
   }
-}
 
+  /** 3,000 rows written with parquet-mr's example writer (a plain footer,
+    * no Spark schema): strings with non-ASCII BMP, supplementary-plane and
+    * control characters and the CSV specials `"`, `,` and `\r`; a map
+    * whose keys repeat; an unsigned 64-bit column, values above
+    * `Long.MaxValue` included; timestamps before and after the epoch;
+    * about a quarter of each optional value null. */
+  private lazy val textFile: String = {
+    val path = Files.createTempDirectory("text").resolve("t.parquet").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message m {
+        |  required int64 id;
+        |  optional binary s (STRING);
+        |  optional group m (MAP) {
+        |    repeated group key_value { required binary key (STRING); optional int32 value; }
+        |  }
+        |  optional int64 u (INTEGER(64,false));
+        |  optional int64 t (TIMESTAMP(MICROS,true));
+        |}""".stripMargin)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path)).withType(schema).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    val pieces = Seq("a", "é", "✓", "\uE000", new String(Character.toChars(0x1F600)), "\u0001", "\t",
+      "\n", "\u001f", "\"", ",", "\r", "\\", " ", "x\r\ny")
+    val rnd = new java.util.Random(12)
+    try (0 until 3000).foreach { i =>
+      val g = groups.newGroup().append("id", i.toLong)
+      if (rnd.nextInt(4) > 0) g.append("s", Seq.fill(rnd.nextInt(5))(pieces(rnd.nextInt(pieces.length))).mkString)
+      if (rnd.nextInt(4) > 0) {
+        val m = g.addGroup("m")
+        (0 until rnd.nextInt(4)).foreach { _ =>
+          val kv = m.addGroup("key_value").append("key", Seq("k", "é", "\"q", "k")(rnd.nextInt(4)))
+          if (rnd.nextBoolean()) kv.append("value", rnd.nextInt(10))
+        }
+      }
+      if (rnd.nextInt(4) > 0) g.append("u", if (rnd.nextBoolean()) rnd.nextLong() else i.toLong)
+      if (rnd.nextInt(4) > 0) g.append("t", rnd.nextLong() % 4000000000000000L)
+      writer.write(g)
+    } finally writer.close()
+    path
+  }
+
+  test("stream: bytes equal collected toKustoJson/toKustoCsv on batch and row scans (text, repeated keys, u64, -t, -c)") {
+    val file = textFile
+    val cases = Seq(Seq.empty[String], Seq("--omit-nulls"), Seq("-p"), Seq("-t", "ticks"),
+      Seq("-t", "unixms"), Seq("-c", """["u","s","nope","u"]"""), Seq("--csv"), Seq("--csv", "-p"),
+      Seq("--csv", "-c", """["s","nope","m","id"]"""), Seq("--csv", "-c", """["nope"]"""))
+    val u64 = graft.sources.ParquetMetadata.unsignedInt64Paths(graft.sources.ParquetMetadata.footer(file))
+    assert(u64 == Set("u"))
+    for (vectorized <- Seq("true", "false"))
+      withConf("spark.sql.parquet.enableVectorizedReader" -> vectorized) {
+        val df = spark.read.parquet(file)
+        val scan = df.queryExecution.executedPlan
+          .collectFirst { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.get
+        assert(scan.supportsColumnar == vectorized.toBoolean, "the batch and the row iterator both run")
+        for (flags <- cases) {
+          val a = Pq2Json.parseArgs((flags :+ file).toArray)
+          val opts = a.opts.copy(unsignedPaths = u64)
+          val rendered =
+            if (a.csv) KustoRender.toKustoCsv(df, a.columns, opts)
+            else KustoRender.toKustoJson(
+              df.select(a.columns.getOrElse(df.columns.toSeq).filter(df.columns.contains).map(KustoRender.exactCol): _*),
+              opts)
+          val lines = rendered.collect().map(_.getString(0) + "\n")
+          assert(lines.length == 3000)
+          val expected = lines.mkString
+          assert(capture(a.input +: flags.toArray) == expected, s"vectorized=$vectorized ${flags.mkString(" ")}")
+        }
+      }
+  }
+
+  test("input schema: read from the footer already held, equal to Spark's inference; no inference job") {
+    import graft.sources.ParquetMetadata
+    def footers(path: String) = {
+      val f = new java.io.File(path)
+      val first = if (f.isFile) f else f.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+      Seq(first.getPath -> ParquetMetadata.footer(first.getPath))
+    }
+    // a plain footer with unannotated BINARY, whose type binaryAsString decides
+    val plain = Files.createTempDirectory("plain").resolve("b.parquet").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary bin; optional int96 t96; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(plain)).withType(schema).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("id", 1L).append("bin", "b"))
+    finally writer.close()
+    // a flat directory whose files disagree: inference reads the first one
+    val s = spark
+    import s.implicits._
+    val mixed = fileDir("mixed", Seq(Seq((1L, "x")).toDF("a", "b"), Seq((2L, 3.0)).toDF("a", "c"))).toString
+    for (path <- Seq(plain, textFile, oneGroupFile, unevenDir.toString, mixed);
+         binaryAsString <- Seq("false", "true"))
+      withConf("spark.sql.parquet.binaryAsString" -> binaryAsString) {
+        val ours = Pq2Json.readInput(spark, path, footers(path))
+        assert(ours.schema == spark.read.parquet(path).schema, s"$path binaryAsString=$binaryAsString")
+      }
+    assert(Pq2Json.readInput(spark, mixed, footers(mixed)).columns.toSeq == Seq("a", "b"))
+    // a small file is one split and is not cut: its stream is one job
+    val got = watchingJobs { w =>
+      val out = capture(Array(s"$dir/nation.parquet"))
+      SchedulerProbe.drain(spark.sparkContext)
+      assert(w.started.get() == 1, s"${w.started.get()} jobs")
+      out
+    }
+    assert(got == collectedJson(s"$dir/nation.parquet"))
+  }
+}
