@@ -13,6 +13,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** CLI shim reproducing the reference's entry surface 1:1
@@ -335,12 +336,12 @@ object Pq2Json {
       val n = rows.getNumPartitions
       val codec = new LZ4CompressionCodec(sc.getConf)
       val encode = (part: Iterator[InternalRow]) => encodeBlock(part, format)
-      val inFlight = new java.util.ArrayDeque[SimpleFutureAction[Array[Byte]]]()
+      val inFlight = new java.util.ArrayDeque[SimpleFutureAction[Array[Array[Byte]]]]()
       var next = 0
       def submitNext(): Unit = if (next < n) {
-        var result: Array[Byte] = null
+        var result: Array[Array[Byte]] = null
         inFlight.add(sc.submitJob(rows, encode, Seq(next),
-          (_: Int, b: Array[Byte]) => result = b, result))
+          (_: Int, b: Array[Array[Byte]]) => result = b, result))
         next += 1
       }
       try {
@@ -348,7 +349,9 @@ object Pq2Json {
         while (!inFlight.isEmpty) {
           val block = Await.result(inFlight.peek(), Duration.Inf)
           inFlight.poll()
-          codec.compressedInputStream(new java.io.ByteArrayInputStream(block)).transferTo(out)
+          val chunks = block.iterator.map(new java.io.ByteArrayInputStream(_): java.io.InputStream)
+          codec.compressedInputStream(new java.io.SequenceInputStream(chunks.asJavaEnumeration))
+            .transferTo(out)
           // PrintStream swallows IOExceptions; checkError flushes and reports them
           if (out.checkError()) throw new java.io.IOException("write to output failed")
           submitNext()
@@ -391,14 +394,39 @@ object Pq2Json {
   /** Bytes rendered before they are handed to the compressor. */
   private val RenderChunk = 1 << 16
 
+  /** Size of the chunks a compressed block is kept in. */
+  private val BlockChunk = 1 << 18
+
+  /** An output stream that keeps its bytes in [[BlockChunk]]-sized chunks,
+    * so a growing block is never copied; only the last chunk is trimmed. */
+  private final class ChunkedBytes extends java.io.OutputStream {
+    private val done = Array.newBuilder[Array[Byte]]
+    private var cur = new Array[Byte](BlockChunk)
+    private var pos = 0
+    private def room(): Unit =
+      if (pos == cur.length) { done += cur; cur = new Array[Byte](BlockChunk); pos = 0 }
+    override def write(b: Int): Unit = { room(); cur(pos) = b.toByte; pos += 1 }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      var o = off
+      while (o < off + len) {
+        room()
+        val k = math.min(off + len - o, cur.length - pos)
+        System.arraycopy(b, o, cur, pos, k)
+        pos += k
+        o += k
+      }
+    }
+    def chunks: Array[Array[Byte]] = (done += java.util.Arrays.copyOf(cur, pos)).result()
+  }
+
   /** One partition's lines as UTF-8, each ending in `\n` (CSV records end
     * in `\r\n`, the reference's terminator), compressed with Spark's
-    * default block codec (LZ4). The partition holds `ColumnarBatch`es from
-    * a vectorized scan, else rows; either way each row renders in place.
-    * Runs on the executors. */
-  private def encodeBlock(part: Iterator[InternalRow], format: LineFormat): Array[Byte] = {
+    * default block codec (LZ4) into chunks that are read back in order.
+    * The partition holds `ColumnarBatch`es from a vectorized scan, else
+    * rows; either way each row renders in place. Runs on the executors. */
+  private def encodeBlock(part: Iterator[InternalRow], format: LineFormat): Array[Array[Byte]] = {
     val write = format.writer()
-    val bytes = new java.io.ByteArrayOutputStream()
+    val bytes = new ChunkedBytes
     val z = new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(bytes)
     val sb = new Utf8Buf(RenderChunk + 4096)
     def line(row: InternalRow): Unit = {
@@ -414,7 +442,7 @@ object Pq2Json {
     }
     sb.writeTo(z)
     z.close()
-    bytes.toByteArray
+    bytes.chunks
   }
 
   def main(argv: Array[String]): Unit = {

@@ -61,8 +61,14 @@ object KustoRender {
     case TimestampMode.UnixMs => timestampUnixMs(c)
   }
 
-  /** Date -> "yyyy-MM-dd" (`converter.rs:334-343`). */
-  def dateIso(c: Column): Column = date_format(c, "yyyy-MM-dd")
+  /** Date -> "yyyy-MM-dd" (`converter.rs:334-343`). The reference reads
+    * the days as u32, so pre-epoch dates render null, as in
+    * [[KustoRowRenderer]]'s date writer. */
+  def dateIso(c: Column): Column = {
+    val d = c.cast(DateType)
+    when(unix_date(d) < 0, lit(null).cast(StringType))
+      .otherwise(date_format(d, "yyyy-MM-dd"))
+  }
 
   /** NaN/±Inf -> null (`converter.rs:291-295`); Spark keeps NaN natively so
     * this is an explicit rule. Floats widen to double like the reference's

@@ -945,8 +945,8 @@ object CorpusQueries extends QueryModule {
     // (the q129/q247 ingestion discipline), so intra-batch near-dup
     // pairs whose endpoints did not co-cluster through the index are
     // DEFERRED MERGES — the debt a scheduled rebuild repays. This query
-    // surfaces every such pair: delta-vs-delta near-dups (df-capped
-    // self-probe of the batch's own shingle frame, exact-jaccard
+    // surfaces every such pair: delta-vs-delta near-dups (the df-capped
+    // prefix join over the batch's own shingle frame, exact-jaccard
     // verify) flagged by whether the shipped admission already
     // co-clustered them. The planted +40000 reversed-trim slice makes
     // the debt structurally non-empty (it near-dups its +20000 sibling,
@@ -954,25 +954,11 @@ object CorpusQueries extends QueryModule {
     // the batch's own index, the a<b self-join, and two joins against
     // the batch-sized admission record.
     "q250_admission_debt" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // sorted_intersect_count
+      graft.functions.GraftFunctions.register(s) // sorted_intersect_atleast
       val adm = incrementalClusters(s, dir)
-      val dsets = admissionDeltaSets(s, dir)
-      val didx = dsets.select(col("new_id"), explode(col("dhs")).as("h"))
-      val cold = didx.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= LlmQueries.ShingleDfCap).select(col("h"))
-      val hot = didx.join(cold, Seq("h"), "left_semi")
-      val cand = hot.select(col("new_id").as("doc_a"), col("h"))
-        .join(hot.select(col("new_id").as("doc_b"), col("h")), Seq("h"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      cand
-        .join(dsets.select(col("new_id").as("doc_a"), col("dsz").as("sza"),
-          col("dhs").as("ha")), Seq("doc_a"))
-        .join(dsets.select(col("new_id").as("doc_b"), col("dsz").as("szb"),
-          col("dhs").as("hb")), Seq("doc_b"))
-        .withColumn("inter", expr("sorted_intersect_count(ha, hb)"))
-        .withColumn("jac", col("inter") / (col("sza") + col("szb") - col("inter")))
-        .filter(col("jac") >= 0.5)
+      val dsets = admissionDeltaSets(s, dir).select(col("new_id").as("doc_id"),
+        col("dsz").as("sz"), col("dhs").as("hk"))
+      LlmQueries.prefixFilterPairs(dsets, 5, Some(LlmQueries.ShingleDfCap))
         .join(adm.select(col("doc_id").as("doc_a"), col("cluster").as("ca")),
           Seq("doc_a"))
         .join(adm.select(col("doc_id").as("doc_b"), col("cluster").as("cb")),

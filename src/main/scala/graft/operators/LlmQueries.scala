@@ -151,75 +151,24 @@ object LlmQueries extends QueryModule {
     * stop-shingle shared by df documents contributes df² candidate pairs,
     * so one natural-language boilerplate phrase with df=10⁵ alone makes
     * 10¹⁰ pairs — the skew bomb that kills an uncapped inverted-index
-    * self-join at 100 TB. Dropping shingles with df > cap bounds every
-    * bucket at cap² pairs while the EXACT verification step (set
-    * intersection of the full per-doc shingle arrays, hot shingles
-    * included) keeps reported Jaccard scores exact. A true near-dup pair
-    * (jac >= 0.5) shares ~a third of its shingles, so it is missed only
-    * if ALL of its shared shingles are corpus-wide boilerplate — at that
-    * point the pair is boilerplate, not a near-duplicate. The q34/q35/
-    * q59 DuckDB oracles REPLICATE the cap (`MIN(df) <= 256` on each
-    * pair's shared shingles — exactly "shares >= 1 cold shingle"), so a
-    * cap-active corpus can no longer silently diverge from the gate.
-    * Measured max df on the harness corpora: 14 at sf0.01, 49 at sf0.1 —
-    * the cap is inactive there; ScaleSpec proves the bound with a
-    * planted every-doc stop-shingle and pins engine/oracle agreement
-    * under an ACTIVE cap. */
+    * self-join at 100 TB. The cap is a predicate on the prefix index
+    * ([[prefixIndex]]): rows with df > cap are dropped, so every index
+    * bucket holds at most cap rows, while the verify (merge scan over
+    * the full per-doc key arrays, hot keys included) keeps reported
+    * Jaccard scores exact. A pair is then found iff it passes the
+    * threshold AND shares >= 1 key with df <= cap — its first common key
+    * in the (df, h) prefix order has the smallest df of its shared keys
+    * and lies in both prefixes. A true near-dup pair (jac >= 0.5) shares
+    * ~a third of its shingles, so it is missed only if ALL of them are
+    * corpus-wide boilerplate — at that point the pair is boilerplate,
+    * not a near-duplicate. The q34/q35/q59 DuckDB oracles REPLICATE the
+    * cap (`MIN(df) <= 256` on each pair's shared shingles), which is
+    * exactly this predicate, so a cap-active corpus cannot silently
+    * diverge from the gate. Measured max df on the harness corpora: 14
+    * at sf0.01, 49 at sf0.1 — the cap is inactive there; ScaleSpec and
+    * LlmSpec pin the capped pair set against brute force under an
+    * ACTIVE cap. */
   private[graft] val ShingleDfCap = 256
-
-  /** (doc_a, doc_b, sz_a, sz_b, nhot_a, nhot_b, inter_capped) for pairs
-    * sharing >= 1 shingle with df <= cap, from a (doc_id, sz, hs)
-    * per-doc shingle-set frame. The hot-shingle set is df-filtered FIRST
-    * and anti-joined off the index, so the self-join's buckets are
-    * bounded at cap². The hot set is NOT broadcast-hinted: "boilerplate
-    * phrases only" is small on a curated corpus, but a mass-duplicated
-    * web corpus can hold occurrences/cap ≈ billions of >cap shingles —
-    * past any broadcast limit. The semi/anti joins shuffle on h, where
-    * the hot keys themselves are the skew — exactly what AQE's skew-join
-    * splitting handles (left side of a semi/anti is splittable) — and
-    * AQE converts to broadcast at runtime whenever the measured hot set
-    * actually is small (every harness corpus). Intersection counts are
-    * aggregated IN the join's groupBy (map-side partial agg; the
-    * pair stream never collects or broadcasts — an early version
-    * broadcast the distinct pair set for verification and at sf0.1 that
-    * is millions of rows: 3.6s -> 25s and heap pressure for every
-    * query sharing the JVM). Per-doc metadata (sz, hot-shingle count)
-    * rides IN the exploded index rows, not via a per-doc broadcast —
-    * at 100 TB the per-doc frame is corpus-sized. */
-  private[graft] def cappedPairCounts(docsets: DataFrame, cap: Int,
-      hotPre: Option[DataFrame] = None): DataFrame = {
-    val idx = docsets.select(col("doc_id"), explode(col("hs")).as("h"))
-    // reuse the caller's already-derived hot set when provided — the
-    // capped path otherwise re-ran the full corpus df aggregation it
-    // had just built for the probe (r14 review)
-    val hot = hotPre.getOrElse(idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select(col("h")))
-    // how many of each doc's shingles the cap removed — the slack term
-    // of the exact upper bound in [[jaccardPairsCapped]]
-    val hotCnt = idx.join(hot, Seq("h"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("nhot"))
-    val meta = docsets.select(col("doc_id"), col("sz"), col("hs"))
-      .join(hotCnt, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("sz"),
-        coalesce(col("nhot"), lit(0L)).as("nhot"), col("hs"))
-    val idx2 = meta.select(col("doc_id"), col("sz"), col("nhot"),
-      explode(col("hs")).as("h"))
-    // shuffle_hash: both sides are large and uniformly keyed (the df cap
-    // is exactly what makes the key distribution uniform), so hashing
-    // beats sort-merge — no sort of the exploded index (measured
-    // 9.4s->5.1s at sf0.1 on the uncapped ancestor of this join) —
-    // gated on the per-task build budget like the uncapped sibling
-    val capped = gatedShuffleHash(
-      idx2.join(hot, Seq("h"), "left_anti"), shingleRowCount(docsets))
-    val a = capped.select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
-      col("nhot").as("nhot_a"), col("h"))
-    val b = capped.select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
-      col("nhot").as("nhot_b"), col("h"))
-    a.join(b, Seq("h")).filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"), col("sz_a"), col("sz_b"),
-        col("nhot_a"), col("nhot_b"))
-      .agg(count(lit(1)).as("inter_capped"))
-  }
 
   /** Band-bucket df cap for [[ahashNearDupPairs]] — the [[ShingleDfCap]]
     * of image banding. Average-hashes are NOT uniform bits: natural
@@ -229,11 +178,10 @@ object LlmQueries extends QueryModule {
     * sf0.1 before the cap, 1.5 s after). Bands whose bucket exceeds the
     * cap generate no candidates; a pair is lost only if EVERY band it
     * agrees on is that hot — for exact dups that means >cap docs share
-    * all four bands (a degenerate all-identical corpus). Unlike the
+    * all four bands (a degenerate all-identical corpus). As with the
     * shingle cap, the DuckDB oracle replicates this cap, so both engines
     * share the capped semantics at every scale factor — and cap < the
-    * sf0.01 doc count means the driver gate exercises the capped path,
-    * not just the direct one. */
+    * sf0.01 doc count means the driver gate exercises it. */
   private[graft] val BandDfCap = 256
 
   /** (doc_a, doc_b, hamming <= 3) near-duplicate pairs from a
@@ -276,70 +224,8 @@ object LlmQueries extends QueryModule {
       .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
 
-  /** Total exploded-shingle rows of a docsets frame = the self-join's
-    * build-side cardinality. One tiny agg over the (checkpointed)
-    * per-doc frame — never an exploded-index scan. */
-  private def shingleRowCount(docsets: DataFrame): Long =
-    Option(docsets.agg(sum(col("sz")).cast("long")).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-
-  /** Exact Jaccard pairs >= `minJac` under a candidate-generation df cap.
-    *
-    * One tiny probe job asks whether any shingle exceeds the cap. The
-    * COMMON case (none — a curated corpus, or one whose boilerplate was
-    * already stripped) takes the direct path: one self-join of the
-    * exploded index + one partially-aggregated groupBy whose count IS
-    * the exact intersection, the cheapest exact shape (and bench-
-    * measured: the capped machinery on this path cost 3x for nothing).
-    *
-    * With hot shingles present: (1) [[cappedPairCounts]] counts each
-    * pair's overlap in UNCAPPED shingles; true overlap exceeds it by at
-    * most min(nhot_a, nhot_b) (a hot shingle contributes only if BOTH
-    * docs contain it), giving the upper-bound prune
-    * `(inter_capped + min(nhot)) * (1+m) >= m * (sz_a + sz_b)`;
-    * (2) the few surviving near-threshold pairs get their true Jaccard
-    * from the merge scan over the full per-doc sorted arrays (hot
-    * shingles included), so reported scores are exact regardless of the
-    * cap. */
-  private[graft] def jaccardPairsCapped(docsets: DataFrame, cap: Int,
-      minJac: Double): DataFrame = {
-    val idx = docsets.select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
-    val hot = idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select(col("h"))
-    // probe: a LIMIT-1 aggregate job over the (cached-input) index —
-    // the df-cap equivalent of q59's per-round convergence probe
-    val anyHot = hot.limit(1).count() > 0
-    // Loud when the cap engages: the capped path changes which pairs are
-    // candidates, and the q34/q35/q59 oracles replicate exactly that
-    // (`MIN(df) <= cap` over each pair's shared shingles), so parity
-    // holds on BOTH paths — this line in the verify/bench log just
-    // flags that the capped machinery (not the fast path) produced the
-    // result. The harness corpora never trip it (max df 49 at sf0.1).
-    if (anyHot) System.err.println(
-      s"[graft] shingle df-cap $cap ACTIVE: capped candidate path engaged " +
-        "(oracle replicates the cap, parity preserved)")
-    if (!anyHot) {
-      val i2 = gatedShuffleHash(idx, shingleRowCount(docsets))
-      val a = i2.select(col("doc_id").as("doc_a"), col("sz").as("sz_a"), col("h"))
-      val b = i2.select(col("doc_id").as("doc_b"), col("sz").as("sz_b"), col("h"))
-      a.join(b, Seq("h")).filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"), col("sz_a"), col("sz_b"))
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("jac", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-        .filter(col("jac") >= minJac)
-        .select(col("doc_a"), col("doc_b"), col("jac"))
-    } else {
-      val survivors = cappedPairCounts(docsets, cap,
-          Some(hot.localCheckpoint())) // df agg priced once on this path
-        .filter((col("inter_capped") + least(col("nhot_a"), col("nhot_b")))
-          * lit(1.0 + minJac) >= lit(minJac) * (col("sz_a") + col("sz_b")))
-        .select(col("doc_a"), col("doc_b"))
-      exactJaccardOf(docsets, survivors, minJac)
-    }
-  }
-
   /** Exact Jaccard >= `minJac` for a BLOCKED candidate-pair frame (LSH
-    * band collisions, upper-bound survivors): two hash joins of the
+    * band collisions): two hash joins of the
     * candidate set against the one-row-per-doc shingle cache,
     * intersection via the codegen'd zero-allocation merge scan
     * (sorted_intersect_count — q161's measurement: 38 µs/pair for
@@ -348,8 +234,7 @@ object LlmQueries extends QueryModule {
     * builder sorts once per doc at build ([[shingleSetsBuild]]), so
     * |intersection| IS the shingle-overlap count and scores are
     * exact regardless of how candidates were generated. The joins are
-    * NOT broadcast-hinted: blocked is not small — a df-capped candidate
-    * stream is linear in corpus size (× cap) and a dupe-heavy 100 TB
+    * NOT broadcast-hinted: blocked is not small — a dupe-heavy 100 TB
     * corpus's band survivors are billions of pairs, past any broadcast
     * limit. Both joins are plain doc_id equi-joins, so they shuffle,
     * and AQE converts to broadcast at runtime whenever the measured
@@ -368,9 +253,10 @@ object LlmQueries extends QueryModule {
       .select(col("doc_a"), col("doc_b"), col("jac"))
   }
 
-  /** PPJoin-style prefix-filtered token-set similarity join (q161) — the
-    * PROVABLY-COMPLETE candidate generator the df-capped shingle join
-    * (q34, [[cappedPairCounts]]) approximates with a recall heuristic.
+  /** PPJoin-style prefix-filtered token-set similarity join — the one
+    * exact set-similarity join: q161 (bigrams, t=0.8, no cap), the
+    * `ngram_pairs` stage behind q34 and its consumers ([[ngramJaccardPairs]]:
+    * trigrams, t=0.5, [[ShingleDfCap]]) and q250's intra-batch pairs.
     *
     * Every token key gets a global rarity rank (ascending document
     * frequency, ties by key); a document with sz distinct tokens indexes
@@ -381,13 +267,20 @@ object LlmQueries extends QueryModule {
     * the required overlap), so under one shared global order the pair
     * shares at least one token both docs put in their prefixes (the
     * prefix-filter theorem; see the PPJoin family of set-similarity
-    * joins). No recall knob, no cap — exact recall by construction.
+    * joins). No recall knob — exact recall by construction.
+    *
+    * Optional df cap: index rows with df > cap are dropped AFTER the
+    * rank filter (sz and rn still count every key, so the prefixes and
+    * the positional filter are unchanged). A pair's first common key in
+    * the (df, h) order is in both prefixes and has the smallest df of
+    * its shared keys, so with a cap the output is exactly the pairs with
+    * jac >= t that share >= 1 key with df <= cap — the oracles'
+    * `MIN(df) <= cap` — and every index bucket holds at most cap rows.
     *
     * Scale: candidate volume is Σ df² over PREFIX occurrences only, and
     * prefixes hold each doc's rarest tokens — the hot boilerplate tokens
     * that detonate a naive token self-join sort to the suffix and never
-    * enter the index (the property the df-cap buys heuristically, here
-    * exact). The length filter (10*min >= t10*max, a jac>=t necessity)
+    * enter the index. The length filter (10*min >= t10*max, a jac>=t necessity)
     * prunes before the verify join. Three shuffles, all uniform: token
     * df agg (keyed by 64-bit token hash), per-doc rank (keyed by doc_id;
     * window partitions bounded by doc length, never corpus-sized), and
@@ -402,19 +295,23 @@ object LlmQueries extends QueryModule {
     * [[exactJaccardOf]]), and the threshold gate is the integer
     * cross-multiplication 10*inter >= t10*union — no float compare
     * decides a boundary pair. */
-  private[graft] def prefixIndex(sets: DataFrame, t10: Int): DataFrame = {
+  private[graft] def prefixIndex(sets: DataFrame, t10: Int,
+      cap: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = sets.select(col("doc_id"), col("sz"), explode(col("hk")).as("h"))
     val dfreq = toks.groupBy("h").agg(count(lit(1)).as("df"))
     // integer ceil(t*sz) = (sz*t10 + 9) DIV 10 — float-free on both engines
-    toks.join(dfreq, "h")
+    val pref = toks.join(dfreq, "h")
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df"), col("h"))))
       .filter(col("rn") <= col("sz") - expr(s"(sz * $t10 + 9) DIV 10") + lit(1))
+    // the cap drops rows AFTER the rank: rn and sz still count every key
+    cap.fold(pref)(c => pref.filter(col("df") <= c))
       .select(col("doc_id"), col("sz"), col("h"), col("rn"))
   }
 
-  private[graft] def prefixFilterPairs(sets: DataFrame, t10: Int): DataFrame = {
+  private[graft] def prefixFilterPairs(sets: DataFrame, t10: Int,
+      cap: Option[Int] = None): DataFrame = {
     // localCheckpoint (r16): the self-join's two sides each rebuilt the
     // whole index chain (explode -> df agg -> rank window) from the
     // checkpointed sets — ReusedExchange does NOT fire across the
@@ -422,7 +319,7 @@ object LlmQueries extends QueryModule {
     // twice, ops 1-20 and 21-40). The index is narrow (4 columns,
     // prefix-entry rows ≈ 0.2x token occurrences), so materializing it
     // once costs less than the second build at any scale.
-    val pref = prefixIndex(sets, t10).localCheckpoint()
+    val pref = prefixIndex(sets, t10, cap).localCheckpoint()
     // Positional filter (the "PP" in PPJoin), applied PER MATCH ROW
     // inside the join: a shared token at ranks (rn_a, rn_b) bounds the
     // pair's overlap by min(sz_a - rn_a, sz_b - rn_b) + 1 ONLY when it
@@ -514,8 +411,8 @@ object LlmQueries extends QueryModule {
     * At 100 TB: the corpus index is bucketed/partitioned on h once per
     * index rebuild; each micro-batch shuffles only the delta. */
   private[graft] def prefixProbePairs(probeSets: DataFrame,
-      corpusSets: DataFrame, t10: Int): DataFrame = {
-    val pref = prefixIndex(corpusSets, t10)
+      corpusSets: DataFrame, t10: Int, cap: Option[Int] = None): DataFrame = {
+    val pref = prefixIndex(corpusSets, t10, cap)
       .select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
         col("h"), col("rn"))
     val alpha = s"($t10 * (sz_a + sz_b) + ${10 + t10} - 1) DIV ${10 + t10}"
@@ -970,7 +867,9 @@ object LlmQueries extends QueryModule {
     * is (doc_a, doc_b, jac), near-dup-pair-sized. */
   private[graft] def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame =
     StageMemo(s, dir, "ngram_pairs") {
-      jaccardPairsCapped(shingleSets(s, dir), ShingleDfCap, 0.5)
+      prefixFilterPairs(shingleSets(s, dir).withColumnRenamed("hs", "hk"), 5,
+          Some(ShingleDfCap))
+        .select(col("doc_a"), col("doc_b"), col("jac"))
         .localCheckpoint()
     }
 
@@ -1223,11 +1122,11 @@ object LlmQueries extends QueryModule {
         .orderBy(col("keeper"))
     }),
 
-    // --- n-gram Jaccard dedup: df-capped shingle-join candidate generation
-    // (blocked AND bounded; shuffle ~ Σ min(df, cap)², never corpus²),
+    // --- n-gram Jaccard dedup: the prefix-filtered shingle join at t=0.5
+    // under the df cap (every index bucket <= cap rows, never corpus²),
     // then exact set Jaccard over the full shingle arrays for candidates
-    // only. The cap is inactive on the harness corpora (max df 49 at
-    // sf0.1), so the result hash-matches the uncapped DuckDB oracle.
+    // only. The oracle replicates the cap (`MIN(df) <= 256`), which is
+    // inactive on the harness corpora (max df 49 at sf0.1).
     "q34_ngram_jaccard" -> ((s, dir) =>
       ngramJaccardPairs(s, dir).orderBy(col("doc_a"), col("doc_b"))),
 
@@ -1235,8 +1134,8 @@ object LlmQueries extends QueryModule {
     // provably-complete candidate path. Global rarity order, per-doc
     // prefix index, length filter, exact verify — exact recall with the
     // hot-token bound by construction (rare tokens index, boilerplate
-    // sorts to the suffix), where q34's df-cap trades recall for the
-    // same bound heuristically. See [[prefixFilterPairs]].
+    // sorts to the suffix); q34 runs the same join under a df cap. See
+    // [[prefixFilterPairs]].
     "q161_prefix_filter_join" -> ((s, dir) => {
       prefixFilterPairs(tokenSets(s, dir), 8)
         .orderBy(col("doc_a"), col("doc_b"))

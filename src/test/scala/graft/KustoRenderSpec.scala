@@ -330,6 +330,24 @@ class KustoRenderSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.toSeq == expect)
   }
 
+  test("dateIso column API matches the row renderer: pre-epoch dates render null") {
+    // converter.rs:334-343 reads the days as u32, so days < 0 are null
+    // there and in KustoRowRenderer's date writer, never "1969-12-31"
+    val df = spark.createDataFrame(
+      java.util.List.of(
+        Row(java.time.LocalDate.parse("1969-12-31")),
+        Row(java.time.LocalDate.parse("1970-01-01")),
+        Row(java.time.LocalDate.parse("2024-01-02")),
+        Row(null)),
+      StructType(Seq(StructField("d", DateType))))
+    val got = df.select(KustoRender.dateIso(col("d"))).collect()
+      .map(r => Option(r.getString(0)))
+    assert(got.toSeq == Seq(None, Some("1970-01-01"), Some("2024-01-02"), None))
+    val rows = KustoRender.toKustoJson(df, KustoRenderOptions()).collect().map(_.getString(0))
+    assert(rows.toSeq == got.toSeq.map(o =>
+      "{\"d\":" + o.fold("null")(v => "\"" + v + "\"") + "}"))
+  }
+
   test("json render: --convert-types reinterprets u64 (Decimal(20,0)) as i64 number") {
     val df = spark.createDataFrame(
       java.util.List.of(

@@ -629,6 +629,39 @@ class LlmSpec extends AnyFunSuite with BeforeAndAfterAll {
     base ++ planted
   }
 
+  /** [[prefixCorpus]] plus capped-join plants: four pairs at exactly
+    * jac = 0.5 (4 shared keys of df 2, union 8), and twelve docs whose
+    * only shared keys are four HOT keys of df 12 (pairwise jac 4/6),
+    * two of which also share one cold key. */
+  private def cappedCorpus(): Seq[(Long, Seq[String])] = {
+    val half = (0 until 4).flatMap { k =>
+      val shared = Seq.tabulate(4)(j => s"s${k}_$j")
+      Seq((300L + 2 * k, shared ++ Seq(s"u${k}_0", s"u${k}_1")),
+        (301L + 2 * k, shared ++ Seq(s"v${k}_0", s"v${k}_1")))
+    }
+    val hot = (0 until 12).map { i =>
+      (400L + i, Seq.tabulate(4)(j => s"HOT$j") ++
+        (if (i < 2) Seq("COLD", s"w$i") else Seq(s"w$i")))
+    }
+    prefixCorpus() ++ half ++ hot
+  }
+
+  /** Brute-force truth of the prefix joins: every pair a < b with
+    * 10 * inter >= t10 * union that, under a cap, shares a key of
+    * df <= cap — as (doc_a, doc_b, n_shared, jac). */
+  private def bruteForcePairs(docs: Seq[(Long, Seq[String])], t10: Int,
+      cap: Option[Int]): Set[(Long, Long, Long, Double)] = {
+    val hsets = docs.map { case (id, tk) => (id, tk.map(Fnv64.hash(_)).toSet) }
+    val df = hsets.flatMap(_._2).groupBy(identity).map { case (h, v) => h -> v.size }
+    (for {
+      (a, sa) <- hsets; (b, sb) <- hsets if a < b
+      shared = sa & sb
+      union = sa.size + sb.size - shared.size
+      if shared.size * 10 >= union * t10
+      if cap.forall(c => shared.exists(df(_) <= c))
+    } yield (a, b, shared.size.toLong, shared.size.toDouble / union)).toSet
+  }
+
   private def prefixSets(docs: Seq[(Long, Seq[String])]) = {
     val s = spark
     import s.implicits._
@@ -748,17 +781,31 @@ class LlmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("prefix-filter join: exactly the brute-force pair set (completeness)") {
-    val docs = prefixCorpus()
-    val got = graft.operators.LlmQueries.prefixFilterPairs(prefixSets(docs), 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val hsets = docs.map { case (id, tk) => (id, tk.map(Fnv64.hash(_)).toSet) }
-    val want = (for {
-      (a, sa) <- hsets; (b, sb) <- hsets if a < b
-      inter = (sa & sb).size
-      if inter * 10 >= (sa.size + sb.size - inter) * 6
-    } yield (a, b, inter.toLong)).toSet
-    assert(want.nonEmpty)      // the corpus genuinely has qualifying pairs
-    assert(got == want)        // prefix filter missed none, invented none
+    // Uncapped, and under a df cap: an inactive cap (above every df)
+    // changes nothing; an active one keeps exactly the pairs sharing a
+    // key of df <= cap (the oracles' MIN(df) <= cap). At t=0.5 the four
+    // planted 2*inter = union pairs sit on the threshold itself.
+    val docs = cappedCorpus()
+    val sets = prefixSets(docs)
+    for (t10 <- Seq(5, 6); cap <- Seq(None, Some(1000), Some(8))) {
+      val got = graft.operators.LlmQueries.prefixFilterPairs(sets, t10, cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      val want = bruteForcePairs(docs, t10, cap)
+      assert(want.nonEmpty)                  // qualifying pairs exist
+      assert(got.length == got.toSet.size)   // one row per pair
+      assert(got.toSet == want, s"t10=$t10 cap=$cap") // none missed, none invented
+    }
+    val uncapped = bruteForcePairs(docs, 5, None)
+    val capped = bruteForcePairs(docs, 5, Some(8))
+    assert(bruteForcePairs(docs, 5, Some(1000)) == uncapped)
+    // the cap is active: it drops the HOT-only pairs (and natural pairs
+    // whose shared keys all have df > 8) but keeps HOT + COLD and the
+    // threshold pairs, whose shared keys have df 2
+    assert(uncapped.exists(p => p._1 == 402L && p._2 == 403L))
+    assert(!capped.exists(p => p._1 >= 400L && !(p._1 == 400L && p._2 == 401L)))
+    assert(capped.contains((400L, 401L, 5L, 5.0 / 7)))
+    assert((0 until 4).forall(k => capped.contains((300L + 2 * k, 301L + 2 * k, 4L, 0.5))))
+    assert(capped.size <= uncapped.size - 65) // 65 of the 66 HOT pairs
   }
 
   test("prefix-filter join: brute-force equality at the gate threshold t=0.8 (group bound drops no survivor)") {
@@ -769,13 +816,8 @@ class LlmSpec extends AnyFunSuite with BeforeAndAfterAll {
     // it cut no candidate (see prefixFilterPairs).
     val docs = prefixCorpus()
     val got = graft.operators.LlmQueries.prefixFilterPairs(prefixSets(docs), 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val hsets = docs.map { case (id, tk) => (id, tk.map(Fnv64.hash(_)).toSet) }
-    val want = (for {
-      (a, sa) <- hsets; (b, sb) <- hsets if a < b
-      inter = (sa & sb).size
-      if inter * 10 >= (sa.size + sb.size - inter) * 8
-    } yield (a, b, inter.toLong)).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val want = bruteForcePairs(docs, 8, None)
     assert(want.nonEmpty)
     assert(got == want)
   }
@@ -831,21 +873,20 @@ class LlmSpec extends AnyFunSuite with BeforeAndAfterAll {
     // for a valid pair the overlap exceeds ceil(t*szd), so at least one
     // shared key sits in the corpus doc's index prefix (the scaladoc's
     // argument, exercised here on a corpus with planted near-dups AND a
-    // universal hot key).
-    val docs = prefixCorpus()
+    // universal hot key). Under a df cap on the corpus index, a pair
+    // survives iff it also shares a key of df <= cap: inactive (1000)
+    // and active (8) caps, at t=0.5 with pairs on the threshold.
+    val docs = cappedCorpus()
     val sets = prefixSets(docs)
-    val got = graft.operators.LlmQueries.prefixProbePairs(sets, sets, 6)
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "n_shared")
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val hsets = docs.map { case (id, tk) => (id, tk.map(Fnv64.hash(_)).toSet) }
-    val want = (for {
-      (a, sa) <- hsets; (b, sb) <- hsets if a < b
-      inter = (sa & sb).size
-      if inter * 10 >= (sa.size + sb.size - inter) * 6
-    } yield (a, b, inter.toLong)).toSet
-    assert(want.nonEmpty && got == want)
+    for (t10 <- Seq(5, 6); cap <- Seq(None, Some(1000), Some(8))) {
+      val got = graft.operators.LlmQueries.prefixProbePairs(sets, sets, t10, cap)
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b", "n_shared", "jac")
+        .distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+      val want = bruteForcePairs(docs, t10, cap)
+      assert(want.nonEmpty && got == want, s"t10=$t10 cap=$cap")
+    }
     // The hot-key bomb, probe-side: a delta doc of ONLY boilerplate
     // shares a key with every corpus doc, but the corpus index excluded
     // the hot key from every prefix — zero candidates ever reach the

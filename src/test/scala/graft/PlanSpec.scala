@@ -95,40 +95,31 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("Join"), p)
   }
 
-  test("q34 df-capped dedup: fast path on clean corpora, broadcast anti-join when capped") {
+  test("q34 df-capped dedup: memoized gate, one prefix join with the df predicate") {
     // Since round 11 the q34 GATE plan sits on the memoized pair stage
     // (StageMemo): a materialized RDD scan + presentation sort, nothing
     // recomputed — pin exactly that.
     val gate = plan("q34_ngram_jaccard")
     assert(gate.contains("Scan ExistingRDD"), gate)
     assert(!gate.contains("Join"), gate)
-    // The stage BUILD itself (pre-memo plan shape): harness corpora have
-    // no hot shingle, so it takes the direct path — hashed self-join (no
-    // sort of the exploded index), no anti-join machinery paid for
-    // nothing. Drive the builder on an inline clean corpus so the memo
-    // cannot mask the shape.
+    // The stage BUILD itself (pre-memo plan shape): the prefix join at
+    // t=0.5 under the df cap. The cap is one predicate on the prefix
+    // index's df column, never a hot-key set anti-joined off the index.
+    // Drive the builder on an inline corpus so the memo cannot mask the
+    // shape.
     import org.apache.spark.sql.functions.{array, col, lit}
-    val clean = spark.range(0, 50)
-      .select(col("id").as("doc_id"), lit(3).as("sz"),
-        array(col("id") * 10 + 1000, col("id") * 10 + 1001,
-          col("id") * 10 + 1002).as("hs"))
-    val p = graft.operators.LlmQueries.jaccardPairsCapped(clean, 256, 0.5)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("ShuffledHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("LeftAnti"), p)
-    // the capped path (hot shingles present) must reach the corpus-
-    // sized index as a BROADCAST anti join — a shuffle anti join here
-    // would add an edges-sized exchange
-    import org.apache.spark.sql.functions.{col, lit, array}
     val docsets = spark.range(0, 50)
       .select(col("id").as("doc_id"), lit(3).as("sz"),
-        array(lit(7L), col("id") * 10 + 1000, col("id") * 10 + 1001).as("hs"))
-    val capped = graft.operators.LlmQueries.cappedPairCounts(docsets, cap = 10)
-    val cp = capped.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(cp.contains("BroadcastHashJoin") && cp.contains("LeftAnti"), cp)
-    assert(!cp.contains("SortMergeJoin"), cp)
+        array(lit(7L), col("id") * 10 + 1000, col("id") * 10 + 1001).as("hk"))
+    val idx = graft.operators.LlmQueries.prefixIndex(docsets, 5, Some(256))
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert("""\(df#\d+L <= 256\)""".r.findFirstIn(idx).isDefined, idx)
+    assert(!idx.contains("Anti"), idx)
+    val p = graft.operators.LlmQueries.prefixFilterPairs(docsets, 5, Some(256))
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("Anti"), p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
   test("q39 multi-table LSH: query side broadcast, bounded-heap top-k, no window") {

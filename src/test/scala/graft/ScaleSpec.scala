@@ -326,11 +326,12 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 100 base docs, each with 5 unique shingle hashes plus ONE
     // stop-shingle (hash 7) present in EVERY doc — the natural-text
     // boilerplate case. 5 planted near-dup copies share all hashes with
-    // their source. Uncapped, the stop-shingle alone yields C(105,2)
-    // candidate pairs (df²-shaped, the 100 TB skew bomb); with the cap
-    // active it is dropped from candidate generation and only truly
-    // overlapping pairs survive — while exact verification still scores
-    // the survivors over the FULL arrays, stop-shingle included.
+    // their source. A low threshold (t=0.1) puts every key of a doc in
+    // its prefix, so the uncapped index holds the stop-shingle once per
+    // doc: one bucket of n rows, C(n,2) candidates (df²-shaped, the
+    // 100 TB skew bomb). The cap drops every index row with df > cap,
+    // while the verify still scores survivors over the FULL arrays,
+    // stop-shingle included.
     val base = (0 until 100).map { i =>
       (i.toLong, 6, Array(7L) ++ (0 until 5).map(j => 1000L + i * 10 + j))
     }
@@ -338,14 +339,21 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       (200L + j, 6, Array(7L) ++ (0 until 5).map(k => 1000L + j * 10 + k))
     }
     val docsets = spark.createDataFrame(base ++ copies)
-      .toDF("doc_id", "sz", "hs")
+      .toDF("doc_id", "sz", "hk")
     val n = base.size + copies.size
-    val uncapped = LlmQueries.cappedPairCounts(docsets, cap = n).count()
-    assert(uncapped == n.toLong * (n - 1) / 2,
-      s"uncapped generation must pair everything through the stop-shingle: $uncapped")
-    val capped = LlmQueries.cappedPairCounts(docsets, cap = 50)
-    assert(capped.count() == 5, "cap must reduce candidates to the 5 true pairs")
-    val verified = LlmQueries.jaccardPairsCapped(docsets, cap = 50, minJac = 0.5)
+    val df = docsets.select(explode(col("hk")).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("df"))
+    val uncapped = LlmQueries.prefixIndex(docsets, 1)
+    assert(uncapped.filter(col("h") === 7L).count() == n,
+      "the uncapped low-threshold index must hold the stop-shingle in every doc")
+    // no index row has df > cap, so no bucket holds more than cap rows
+    for (t10 <- Seq(1, 5)) {
+      val maxDf = LlmQueries.prefixIndex(docsets, t10, Some(50)).join(df, Seq("h"))
+        .agg(max(col("df"))).head.getLong(0)
+      assert(maxDf <= 50, s"t10=$t10: a capped index row has df $maxDf")
+    }
+    val verified = LlmQueries.prefixFilterPairs(docsets, 5, Some(50))
+      .select(col("doc_a"), col("doc_b"), col("jac"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     // full-array verification: 6 shared of 6 total (the stop-shingle
     // counts toward the score even though it never generates candidates)
@@ -354,10 +362,9 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the DuckDB oracles encode the cap as `MIN(df) <= cap` over each
     // pair's shared shingles — pin that formulation equal to the
     // engine's capped result on this cap-ACTIVE corpus, so the oracle
-    // SQL and jaccardPairsCapped can never drift apart silently
-    val idx = docsets.select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
-    val withDf = idx.join(
-      idx.groupBy(col("h")).agg(count(lit(1)).as("df")), Seq("h"))
+    // SQL and the capped prefix join can never drift apart silently
+    val idx = docsets.select(col("doc_id"), col("sz"), explode(col("hk")).as("h"))
+    val withDf = idx.join(df, Seq("h"))
     val oracleShape = withDf.alias("a")
       .join(withDf.alias("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
